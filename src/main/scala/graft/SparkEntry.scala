@@ -774,9 +774,9 @@ object SparkEntry {
         "ts", "user_id", maxOffsetDays = 30)),
 
     // --- exact fixed-point EWMA smoothing per (event_type, user)
-    // series, alpha = 0.2 — the sequential recurrence folded inside
-    // one aggregate() per series (bounded-series contract); the
-    // oracle replays the identical integer chain recursively ---
+    // series, alpha = 0.2 — the sequential recurrence walked once
+    // per series by the streamed fold kernel; the oracle replays the
+    // identical integer chain recursively ---
     "q_ewma" -> ((s, dir) =>
       graft.functions.SeriesFunctions.ewmaSmooth(
           s.read.parquet(s"$dir/events.parquet"),
@@ -797,7 +797,7 @@ object SparkEntry {
 
     // --- one-sided CUSUM drift per (event_type, user) series:
     // max(0, c + v - target - slack) accumulated in exact integer
-    // millis (bounded-series fold, like q_ewma); the oracle replays
+    // millis (streamed fold, like q_ewma); the oracle replays
     // the identical chain recursively ---
     "q_cusum_drift" -> ((s, dir) =>
       graft.functions.SeriesFunctions.cusumDrift(
@@ -810,7 +810,7 @@ object SparkEntry {
 
     // --- Holt linear-trend smoothing per (event_type, user) series,
     // alpha = 0.2, beta = 0.3 — level + trend + one-step forecast,
-    // same bounded-series fold as q_ewma; the oracle replays the
+    // same streamed fold as q_ewma; the oracle replays the
     // identical integer double-recurrence recursively ---
     "q_holt_forecast" -> ((s, dir) =>
       graft.functions.SeriesFunctions.holtSmooth(

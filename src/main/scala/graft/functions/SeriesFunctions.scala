@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Per-series derivative operators — the PromQL-shaped half of a
   * time-series engine the rollup tiers don't cover: counter
@@ -224,17 +225,59 @@ object SeriesFunctions {
         .as(s"active_${windowDays}d"))
   }
 
+  /** The streamed kernel behind the four sequential folds
+    * ([[ewmaSmooth]], [[holtSmooth]], [[holtWintersSmooth]],
+    * [[cusumDrift]]). Rows whose `tsCol` or `valCol` is null are
+    * dropped; the rest are hash-partitioned on the series key at the
+    * session width (an explicit exchange AQE does not coalesce, see
+    * [[graft.operators.Dedup.shuffleWidth]]), sorted within each
+    * partition by (key, ts, orderCols, v_milli) ascending, nulls first,
+    * and walked once. A fresh fold starts at every key change, so a
+    * series costs O(n) time and only its fold's state in memory; no
+    * series is ever materialised whole.
+    *
+    * Output: the key, `tsCol` and `orderCols` columns, `v_milli`
+    * (= floor(1000·value)), then one long column per `outCols` name,
+    * filled in order from the array the fold returns for each row.
+    */
+  private def streamFold(df: DataFrame, keyCols: Seq[String], tsCol: String,
+      valCol: String, orderCols: Seq[String], outCols: Seq[String])(
+      newFold: () => Long => Array[Long]): DataFrame = {
+    val in = df
+      .filter(col(tsCol).isNotNull && col(valCol).isNotNull)
+      .select((keyCols ++ (tsCol +: orderCols)).map(col) :+
+        floor(col(valCol) * lit(1000.0)).cast("long").as("v_milli"): _*)
+      .repartition(graft.operators.Dedup.shuffleWidth(df), keyCols.map(col): _*)
+    val schema = StructType(in.schema.fields ++
+      outCols.map(StructField(_, LongType, nullable = false)))
+    val nKeys = keyCols.size
+    val vIdx = in.schema.size - 1
+    in.sortWithinPartitions(in.columns.toSeq.map(col): _*)
+      .mapPartitions { rows =>
+        var prev: Row = null
+        var fold: Long => Array[Long] = null
+        rows.map { r =>
+          if (prev == null || (0 until nKeys).exists(i => r.get(i) != prev.get(i)))
+            fold = newFold()
+          prev = r
+          Row.fromSeq(r.toSeq ++ fold(r.getLong(vIdx)))
+        }
+      }(Encoders.row(schema))
+  }
+
+  /** floor(num / den) through doubles, the division every fold step
+    * uses; exact while |num| < 2⁵², so any IEEE engine floors alike.
+    */
+  private def fdiv(num: Long, den: Int): Long =
+    math.floor(num.toDouble / den.toDouble).toLong
+
   /** Exact exponentially-weighted moving average per series — the
     * standard monitoring smoother (`avg_over_time`'s recency-weighted
     * sibling). EWMA is inherently sequential (each value depends on
     * the previous smoothed value), which no window frame expresses;
-    * here each series is collected into ONE ordered array and folded
-    * with `aggregate()` — a per-series scan, embarrassingly parallel
-    * ACROSS series. That makes this a BOUNDED-SERIES operator (same
-    * contract as the collect/pack family: per-conversation
-    * transcripts, per-(metric,entity) feeds); for unbounded series
-    * downsample first ([[counterRateBucketed]]'s bucket-last trick)
-    * so the array is buckets, not samples.
+    * each series is walked once in order by the streamed kernel
+    * (O(n) time, O(1) state per series, parallel across series).
+    * Rows with a null `tsCol` or `valCol` are dropped before the fold.
     *
     * Determinism/oracle design: α = aNum/aDen rational, the
     * recurrence is
@@ -253,40 +296,23 @@ object SeriesFunctions {
       orderCols: Seq[String]): DataFrame = {
     require(aNum >= 1 && aNum <= aDen, s"alpha must be in (0, 1]: $aNum/$aDen")
     require(aDen <= 1000, s"aDen above 1000 risks the 2^52 exactness bound: $aDen")
-    val pt = struct((tsCol +: orderCols).map(col) :+
-      floor(col(valCol) * lit(1000.0)).cast("long").as("v_milli"): _*)
-    val step = (acc: org.apache.spark.sql.Column,
-        x: org.apache.spark.sql.Column) => concat(acc, array(
-      when(size(acc) === 0, x.getField("v_milli"))
-        .otherwise(floor(
-          (lit(aNum.toLong) * x.getField("v_milli") +
-            lit((aDen - aNum).toLong) * element_at(acc, -1)).cast("double") /
-            lit(aDen.toDouble)))))
-    // EXPLICIT session-width repartition on the series key (see
-    // [[graft.operators.Dedup.shuffleWidth]]): collect_list has no
-    // map-side reduction, and the agg's own exchange is byte-coalesced
-    // by AQE — which serializes the per-series sort_array + fold +
-    // explode (the operator's entire cost) onto 1-2 tasks.
-    df.select(keyCols.map(col) :+ pt.as("_pt"): _*)
-      .repartition(graft.operators.Dedup.shuffleWidth(df), keyCols.map(col): _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sort_array(collect_list(col("_pt"))).as("_pts"))
-      .withColumn("_ew", aggregate(col("_pts"), typedlit(Seq.empty[Long]), step))
-      .select(keyCols.map(col) :+
-        explode(arrays_zip(col("_pts"), col("_ew"))).as("_z"): _*)
-      .select(keyCols.map(col) ++
-        (tsCol +: orderCols).map(c => col(s"_z._pts.$c").as(c)) :+
-        col("_z._pts.v_milli").as("v_milli") :+
-        col("_z._ew").as("ewma_milli"): _*)
+    streamFold(df, keyCols, tsCol, valCol, orderCols, Seq("ewma_milli")) { () =>
+      var s = 0L
+      var first = true
+      v => {
+        s = if (first) v else fdiv(aNum * v + (aDen - aNum) * s, aDen)
+        first = false
+        Array(s)
+      }
+    }
   }
 
   /** Exact Holt linear-trend smoothing (double exponential) per
     * series — [[ewmaSmooth]]'s sibling that also tracks a TREND term,
     * giving a one-step-ahead forecast (`forecast_milli` = level +
     * trend): the standard capacity-planning smoother for counters
-    * and rates. Same bounded-series fold contract as [[ewmaSmooth]]
-    * (one ordered array + `aggregate()` per series, embarrassingly
-    * parallel across series; downsample unbounded series first).
+    * and rates. Same streamed fold as [[ewmaSmooth]], with the same
+    * null rule.
     *
     * Recurrence over `v_milli` fixed point, α = aNum/aDen and
     * β = bNum/bDen rational:
@@ -299,9 +325,7 @@ object SeriesFunctions {
     *
     * Every intermediate < 2⁵² so the double divisions floor
     * identically in any IEEE engine — a DuckDB recursive CTE replays
-    * the identical chain. The accumulator interleaves (level, trend)
-    * pairs in one flat long array (element −2 = previous level,
-    * −1 = previous trend), avoiding struct-array coercion rules.
+    * the identical chain.
     */
   def holtSmooth(df: DataFrame, keyCols: Seq[String], tsCol: String,
       valCol: String, aNum: Int, aDen: Int, bNum: Int, bDen: Int,
@@ -310,53 +334,30 @@ object SeriesFunctions {
     require(bNum >= 1 && bNum <= bDen, s"beta must be in (0, 1]: $bNum/$bDen")
     require(aDen <= 1000 && bDen <= 1000,
       s"denominators above 1000 risk the 2^52 exactness bound: $aDen/$bDen")
-    val pt = struct((tsCol +: orderCols).map(col) :+
-      floor(col(valCol) * lit(1000.0)).cast("long").as("v_milli"): _*)
-    def lNext(acc: Column, x: Column): Column = floor(
-      (lit(aNum.toLong) * x.getField("v_milli") +
-        lit((aDen - aNum).toLong) *
-          (element_at(acc, -2) + element_at(acc, -1))).cast("double") /
-        lit(aDen.toDouble)).cast("long")
-    val step = (acc: Column, x: Column) =>
-      when(size(acc) === 0,
-        array(x.getField("v_milli"), lit(0L)))
-        .otherwise(concat(acc, array(
-          lNext(acc, x),
-          floor((lit(bNum.toLong) * (lNext(acc, x) - element_at(acc, -2)) +
-            lit((bDen - bNum).toLong) * element_at(acc, -1)).cast("double") /
-            lit(bDen.toDouble)).cast("long"))))
-    val idx = sequence(lit(1), size(col("_pts")))
-    // EXPLICIT session-width repartition on the series key (see
-    // [[graft.operators.Dedup.shuffleWidth]]): collect_list has no
-    // map-side reduction, and the agg's own exchange is byte-coalesced
-    // by AQE — which serializes the per-series sort_array + fold +
-    // explode (the operator's entire cost) onto 1-2 tasks.
-    df.select(keyCols.map(col) :+ pt.as("_pt"): _*)
-      .repartition(graft.operators.Dedup.shuffleWidth(df), keyCols.map(col): _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sort_array(collect_list(col("_pt"))).as("_pts"))
-      .withColumn("_lb", aggregate(col("_pts"), typedlit(Seq.empty[Long]), step))
-      .withColumn("_ls", transform(idx,
-        i => element_at(col("_lb"), i * 2 - 1)))
-      .withColumn("_bs", transform(idx,
-        i => element_at(col("_lb"), i * 2)))
-      .select(keyCols.map(col) :+
-        explode(arrays_zip(col("_pts"), col("_ls"), col("_bs"))).as("_z"): _*)
-      .select(keyCols.map(col) ++
-        (tsCol +: orderCols).map(c => col(s"_z._pts.$c").as(c)) :+
-        col("_z._pts.v_milli").as("v_milli") :+
-        col("_z._ls").as("level_milli") :+
-        col("_z._bs").as("trend_milli") :+
-        (col("_z._ls") + col("_z._bs")).as("forecast_milli"): _*)
+    streamFold(df, keyCols, tsCol, valCol, orderCols,
+        Seq("level_milli", "trend_milli")) { () =>
+      var l = 0L
+      var b = 0L
+      var first = true
+      v => {
+        if (first) { l = v; first = false }
+        else {
+          val ln = fdiv(aNum * v + (aDen - aNum) * (l + b), aDen)
+          b = fdiv(bNum * (ln - l) + (bDen - bNum) * b, bDen)
+          l = ln
+        }
+        Array(l, b)
+      }
+    }.withColumn("forecast_milli", col("level_milli") + col("trend_milli"))
   }
 
   /** Exact Holt-Winters additive-seasonal smoothing (triple
     * exponential) per series — [[holtSmooth]] plus a seasonal
     * component of period `m`: the standard smoother for daily/weekly-
     * cycled series (hour-of-day load, day-of-week traffic), where
-    * Holt alone lags every cycle. Same bounded-series fold contract
-    * (one ordered array + `aggregate()` per series, embarrassingly
-    * parallel across series; downsample unbounded series first).
+    * Holt alone lags every cycle. Same streamed fold and null rule as
+    * [[ewmaSmooth]]; the state is (level, trend) plus a ring of the
+    * last `m` seasonals.
     *
     * Recurrence over `v_milli` fixed point (α = aNum/aDen,
     * β = bNum/bDen, γ = gNum/gDen rational; seasonal s indexes m
@@ -373,9 +374,7 @@ object SeriesFunctions {
     *
     * Every intermediate < 2⁵² so the double divisions floor
     * identically in any IEEE engine — the DuckDB oracle replays the
-    * chain recursively, carrying the last m seasonals as a list. The
-    * accumulator interleaves (level, trend, seasonal) triples in one
-    * flat long array; s_{t−m} is plain index arithmetic into it.
+    * chain recursively, carrying the last m seasonals as a list.
     */
   def holtWintersSmooth(df: DataFrame, keyCols: Seq[String], tsCol: String,
       valCol: String, aNum: Int, aDen: Int, bNum: Int, bDen: Int,
@@ -386,57 +385,28 @@ object SeriesFunctions {
     require(m >= 2, s"seasonal period must be >= 2: $m")
     require(aDen <= 1000 && bDen <= 1000 && gDen <= 1000,
       s"denominators above 1000 risk the 2^52 exactness bound: $aDen/$bDen/$gDen")
-    val pt = struct((tsCol +: orderCols).map(col) :+
-      floor(col(valCol) * lit(1000.0)).cast("long").as("v_milli"): _*)
-    // seasonal m steps back: s of step t−m sits at flat index 3(t−m)
-    // = size(acc) − (3m − 3) while processing step t = size/3 + 1
-    def sPrev(acc: Column): Column =
-      when(size(acc) < 3 * m, lit(0L))
-        .otherwise(element_at(acc, size(acc) - lit(3 * m - 3)))
-    def lNext(acc: Column, x: Column): Column = floor(
-      (lit(aNum.toLong) * (x.getField("v_milli") - sPrev(acc)) +
-        lit((aDen - aNum).toLong) *
-          (element_at(acc, -3) + element_at(acc, -2))).cast("double") /
-        lit(aDen.toDouble)).cast("long")
-    val step = (acc: Column, x: Column) =>
-      when(size(acc) === 0,
-        array(x.getField("v_milli"), lit(0L), lit(0L)))
-        .otherwise(concat(acc, array(
-          lNext(acc, x),
-          floor((lit(bNum.toLong) * (lNext(acc, x) - element_at(acc, -3)) +
-            lit((bDen - bNum).toLong) * element_at(acc, -2)).cast("double") /
-            lit(bDen.toDouble)).cast("long"),
-          floor((lit(gNum.toLong) * (x.getField("v_milli") - lNext(acc, x)) +
-            lit((gDen - gNum).toLong) * sPrev(acc)).cast("double") /
-            lit(gDen.toDouble)).cast("long"))))
-    val idx = sequence(lit(1), size(col("_pts")))
-    // EXPLICIT session-width repartition on the series key (see
-    // [[graft.operators.Dedup.shuffleWidth]]): collect_list has no
-    // map-side reduction, and the agg's own exchange is byte-coalesced
-    // by AQE — which serializes the per-series sort_array + fold +
-    // explode (the operator's entire cost) onto 1-2 tasks.
-    df.select(keyCols.map(col) :+ pt.as("_pt"): _*)
-      .repartition(graft.operators.Dedup.shuffleWidth(df), keyCols.map(col): _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sort_array(collect_list(col("_pt"))).as("_pts"))
-      .withColumn("_lbs", aggregate(col("_pts"), typedlit(Seq.empty[Long]), step))
-      .withColumn("_ls", transform(idx, i => element_at(col("_lbs"), i * 3 - 2)))
-      .withColumn("_bs", transform(idx, i => element_at(col("_lbs"), i * 3 - 1)))
-      .withColumn("_ss", transform(idx, i => element_at(col("_lbs"), i * 3)))
-      // forecast at t reads s_{t+1−m} = flat index 3(t+1−m)
-      .withColumn("_fs", transform(idx, i =>
-        when(i + 1 <= m, lit(0L))
-          .otherwise(element_at(col("_lbs"), i * 3 - lit(3 * m - 3)))))
-      .select(keyCols.map(col) :+
-        explode(arrays_zip(col("_pts"), col("_ls"), col("_bs"), col("_ss"),
-          col("_fs"))).as("_z"): _*)
-      .select(keyCols.map(col) ++
-        (tsCol +: orderCols).map(c => col(s"_z._pts.$c").as(c)) :+
-        col("_z._pts.v_milli").as("v_milli") :+
-        col("_z._ls").as("level_milli") :+
-        col("_z._bs").as("trend_milli") :+
-        col("_z._ss").as("seasonal_milli") :+
-        (col("_z._ls") + col("_z._bs") + col("_z._fs")).as("forecast_milli"): _*)
+    streamFold(df, keyCols, tsCol, valCol, orderCols,
+        Seq("level_milli", "trend_milli", "seasonal_milli", "forecast_milli")) { () =>
+      // ring(t % m) holds s_{t−m} while step t runs; slots not yet
+      // written are the 0 the recurrence asks for while t ≤ m
+      val ring = new Array[Long](m)
+      var l = 0L
+      var b = 0L
+      var t = 0
+      v => {
+        t += 1
+        if (t == 1) l = v
+        else {
+          val sp = ring(t % m)
+          val ln = fdiv(aNum * (v - sp) + (aDen - aNum) * (l + b), aDen)
+          b = fdiv(bNum * (ln - l) + (bDen - bNum) * b, bDen)
+          l = ln
+          ring(t % m) = fdiv(gNum * (v - l) + (gDen - gNum) * sp, gDen)
+        }
+        // ring((t + 1) % m) is now s_{t+1−m}, or 0 while t + 1 ≤ m
+        Array(l, b, ring(t % m), l + b + ring((t + 1) % m))
+      }
+    }
   }
 
   /** Time-weighted average per (series, bucket) for IRREGULAR
@@ -552,8 +522,7 @@ object SeriesFunctions {
     * z-score flagger, which sees spikes but not slow drifts). A
     * series drifts when the statistic crosses `threshold`.
     *
-    * Same bounded-series fold discipline as [[ewmaSmooth]] (sequential
-    * recurrence → one `aggregate()` per collected series); all
+    * Same streamed fold and null rule as [[ewmaSmooth]]; all
     * arithmetic is exact `v_milli` fixed-point integers (target/
     * slack/threshold given in millis), so a DuckDB recursive CTE
     * replays the identical chain and the query hash-matches. Emits
@@ -564,33 +533,13 @@ object SeriesFunctions {
       thresholdMilli: Long, orderCols: Seq[String]): DataFrame = {
     require(slackMilli >= 0, s"slack must be >= 0: $slackMilli")
     require(thresholdMilli > 0, s"threshold must be > 0: $thresholdMilli")
-    val pt = struct((tsCol +: orderCols).map(col) :+
-      floor(col(valCol) * lit(1000.0)).cast("long").as("v_milli"): _*)
-    val dev = (x: org.apache.spark.sql.Column) =>
-      x.getField("v_milli") - lit(targetMilli + slackMilli)
-    // ANSI mode: element_at(acc, -1) must stay inside the guarded
-    // branch (c₀ = 0 makes the first step just max(0, dev))
-    val step = (acc: org.apache.spark.sql.Column,
-        x: org.apache.spark.sql.Column) => concat(acc, array(
-      when(size(acc) === 0, greatest(lit(0L), dev(x)))
-        .otherwise(greatest(lit(0L), element_at(acc, -1) + dev(x)))))
-    // EXPLICIT session-width repartition on the series key (see
-    // [[graft.operators.Dedup.shuffleWidth]]): collect_list has no
-    // map-side reduction, and the agg's own exchange is byte-coalesced
-    // by AQE — which serializes the per-series sort_array + fold +
-    // explode (the operator's entire cost) onto 1-2 tasks.
-    df.select(keyCols.map(col) :+ pt.as("_pt"): _*)
-      .repartition(graft.operators.Dedup.shuffleWidth(df), keyCols.map(col): _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sort_array(collect_list(col("_pt"))).as("_pts"))
-      .withColumn("_cs", aggregate(col("_pts"), typedlit(Seq.empty[Long]), step))
-      .select(keyCols.map(col) :+
-        explode(arrays_zip(col("_pts"), col("_cs"))).as("_z"): _*)
-      .select(keyCols.map(col) ++
-        (tsCol +: orderCols).map(c => col(s"_z._pts.$c").as(c)) :+
-        col("_z._pts.v_milli").as("v_milli") :+
-        col("_z._cs").as("cusum_milli") :+
-        (col("_z._cs") >= thresholdMilli).as("drifting"): _*)
+    streamFold(df, keyCols, tsCol, valCol, orderCols, Seq("cusum_milli")) { () =>
+      var c = 0L
+      v => {
+        c = math.max(0L, c + v - targetMilli - slackMilli)
+        Array(c)
+      }
+    }.withColumn("drifting", col("cusum_milli") >= thresholdMilli)
   }
 
   /** Pearson correlation between series `x` at bucket t and series

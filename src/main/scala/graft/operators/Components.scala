@@ -135,10 +135,12 @@ object Components {
         // equi-join is 1:1 and row-preserving.
         // the jump join is NOT checkpointed: both of its sides read
         // the materialized `relaxed`, so it is a cheap cached-input
-        // join — the count below and the next round's relax each
-        // evaluate it once, which costs less than the eager barrier
-        // job a checkpoint would add per round (2 jobs/round, not 3);
-        // labels' plan stays O(1): Project(Join(LogicalRDD, LogicalRDD))
+        // join. The count below never touches it; it is evaluated
+        // lazily inside the next round's relax plan, twice (the self
+        // rows and the neighbor join both read `labels`), which costs
+        // less than the eager barrier job a checkpoint would add per
+        // round (2 jobs/round, not 3); labels' plan stays O(1):
+        // Project(Join(LogicalRDD, LogicalRDD))
         val lookup = relaxed.select(col("_id").as("_tmp"), col("_tmp").as("_cc"))
         val jumped = relaxed
           .join(lookup, Seq("_tmp"))
@@ -166,6 +168,8 @@ object Components {
           s"components round=$i changed=$changed secs=${(System.nanoTime() - t0) / 1e9}")
         i += 1
       }
+      // non-convergence: nothing will read the last relax frame
+      if (changed != 0L) org.apache.spark.sql.GraftShims.releaseCheckpoint(labelsCp)
       require(changed == 0L,
         s"connectedComponents did not converge in $maxIter rounds " +
           "(pointer jumping bounds rounds by log2(diameter); raise maxIter)")

@@ -2,10 +2,10 @@ package graft.rollup
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.Tier
+import graft.model.{Schemas, Tier}
 import graft.table.ChronoTable
 
 /** The batch-incremental ingest → rollup → retention pipeline over
@@ -115,15 +115,20 @@ final class TranscriptStore(
     raw.read().select(turnCols.map(col): _*)
 
   /** Serve one conversation's turns: file-prune on the per-file
-    * conv_id bounds first ([[graft.table.ChronoTable.readKeyRange]]),
+    * conv_id bounds first ([[graft.table.ChronoTable.scanFilesByKey]]),
     * then row-filter. After [[clusterAll]] this touches ~one file per
     * partition; before it (scattered ingest) it degrades gracefully
-    * to the full-scan filter — stats prune files, never rows.
+    * to the full-scan filter — stats prune files, never rows. An id
+    * no live file covers yields an empty frame of the turn columns.
     */
-  def readConversation(convId: String): DataFrame =
-    raw.readKeyRange(convId, convId)
+  def readConversation(convId: String): DataFrame = {
+    val files = raw.scanFilesByKey(convId, convId)
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), Schemas.turns)
+    else raw.readFiles(files)
       .filter(col("conv_id") === convId)
       .select(turnCols.map(col): _*)
+  }
 
   // ------------------------------------------------------------------
   // incremental rollup cascade

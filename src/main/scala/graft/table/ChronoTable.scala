@@ -411,7 +411,7 @@ final class ChronoTable private (
       }
     }.toMap
 
-  private def readFiles(files: Seq[FileEntry]): DataFrame =
+  private[graft] def readFiles(files: Seq[FileEntry]): DataFrame =
     if (files.isEmpty) spark.emptyDataFrame
     else spark.read
       .option("basePath", dataRoot)

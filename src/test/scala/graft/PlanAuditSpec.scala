@@ -233,11 +233,20 @@ class PlanAuditSpec extends SparkSuite {
     assert(!p.contains("Join"), s"z-score grew a join:\n$p")
   }
 
+  /** The streamed series-fold shape: one exchange on the series key
+    * feeding a sorted in-partition walk — no join, no window, and no
+    * per-series array (`collect_list` or an array `aggregate`).
+    */
+  private def assertStreamedFold(q: String): Unit = {
+    val p = plan(q)
+    assert("Exchange".r.findAllIn(p).size == 1, s"$q should shuffle exactly once:\n$p")
+    Seq("Join", "Window", "collect_list", "aggregate(").foreach { op =>
+      assert(!p.contains(op), s"$q plan contains $op:\n$p")
+    }
+  }
+
   test("q_ewma is one grouped fold (single shuffle), never a self-join or window ping-pong") {
-    val p = plan("q_ewma")
-    assert(!p.contains("Join"), s"ewma grew a join:\n$p")
-    assert(p.contains("partial_") || p.contains("ObjectHashAggregate") ||
-      p.contains("SortAggregate"), s"ewma lost its grouped fold:\n$p")
+    assertStreamedFold("q_ewma")
   }
 
   test("q_funnel is equi-joins on the user id only, with map-side-combined step mins") {
@@ -278,17 +287,11 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("q_holt_forecast is one grouped fold like ewma, never a self-join") {
-    val p = plan("q_holt_forecast")
-    assert(!p.contains("Join"), s"holt grew a join:\n$p")
-    assert(p.contains("partial_") || p.contains("ObjectHashAggregate") ||
-      p.contains("SortAggregate"), s"holt lost its grouped fold:\n$p")
+    assertStreamedFold("q_holt_forecast")
   }
 
   test("q_cusum_drift is one grouped fold like ewma, never a self-join") {
-    val p = plan("q_cusum_drift")
-    assert(!p.contains("Join"), s"cusum grew a join:\n$p")
-    assert(p.contains("partial_") || p.contains("ObjectHashAggregate") ||
-      p.contains("SortAggregate"), s"cusum lost its grouped fold:\n$p")
+    assertStreamedFold("q_cusum_drift")
   }
 
   test("q_seasonal_baseline joins the dimension-sized slot table as equi (never nested-loop)") {
@@ -329,10 +332,7 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("q_holtwinters is one grouped fold like ewma, never a self-join") {
-    val p = plan("q_holtwinters")
-    assert(!p.contains("Join"), s"holt-winters grew a join:\n$p")
-    assert(p.contains("partial_") || p.contains("ObjectHashAggregate") ||
-      p.contains("SortAggregate"), s"holt-winters lost its grouped fold:\n$p")
+    assertStreamedFold("q_holtwinters")
   }
 
   test("q_lag_corr joins bucket-sized series frames as equi with map-side-combined stats") {

@@ -64,33 +64,6 @@ class HoltSpec extends SparkSuite {
     }
   }
 
-  /** Driver-local imperative replay of the Holt-Winters recurrence —
-    * the independent reference the distributed fold must reproduce.
-    */
-  private def hwRef(vs: Seq[Long], aN: Int, aD: Int, bN: Int, bD: Int,
-      gN: Int, gD: Int, m: Int): Seq[(Long, Long, Long, Long)] = {
-    def fdiv(num: Long, den: Int): Long =
-      math.floor(num.toDouble / den.toDouble).toLong
-    val l = Array.ofDim[Long](vs.size)
-    val b = Array.ofDim[Long](vs.size)
-    val s = Array.ofDim[Long](vs.size)
-    vs.zipWithIndex.foreach { case (v, i) =>
-      val t = i + 1
-      if (t == 1) { l(i) = v; b(i) = 0L; s(i) = 0L }
-      else {
-        val sp = if (t <= m) 0L else s(t - m - 1)
-        l(i) = fdiv(aN * (v - sp) + (aD - aN) * (l(i - 1) + b(i - 1)), aD)
-        b(i) = fdiv(bN * (l(i) - l(i - 1)) + (bD - bN) * b(i - 1), bD)
-        s(i) = fdiv(gN * (v - l(i)) + (gD - gN) * sp, gD)
-      }
-    }
-    vs.indices.map { i =>
-      val t = i + 1
-      val sn = if (t + 1 <= m) 0L else s(t + 1 - m - 1)
-      (l(i), b(i), s(i), l(i) + b(i) + sn)
-    }
-  }
-
   test("holt-winters chain matches the driver-local reference on a seasonal series") {
     // strong period-3 sawtooth plus drift: exercises the seasonal
     // lookback both before (t <= m → 0) and after the first period
@@ -105,7 +78,7 @@ class HoltSpec extends SparkSuite {
       .orderBy("id")
       .select("level_milli", "trend_milli", "seasonal_milli", "forecast_milli")
       .as[(Long, Long, Long, Long)].collect().toSeq
-    val expected = hwRef(vals.map(v => (v * 1000).toLong),
+    val expected = FoldReplays.holtWinters(vals.map(v => (v * 1000).toLong),
       2, 10, 3, 10, 4, 10, m = 3)
     assert(got === expected)
   }

@@ -50,6 +50,16 @@ class ComponentsSpec extends SparkSuite {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("non-convergence releases every checkpoint it made") {
+    val ids = (0L to 64L).toDF("doc_id")
+    val pairs = (0L until 64L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[IllegalArgumentException] {
+      Components.connectedComponents(ids, "doc_id", pairs, maxIter = 2)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size === before)
+  }
+
   test("random graph matches a driver-side union-find oracle") {
     val rnd = new scala.util.Random(42)
     val n = 300

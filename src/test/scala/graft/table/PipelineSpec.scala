@@ -233,6 +233,18 @@ class PipelineSpec extends SparkSuite {
         s"(pre-cluster hit $filesBefore)")
   }
 
+  test("readConversation of an id no live file covers is empty, with the turn columns") {
+    val store = new TranscriptStore(spark, tmpWarehouse("miss"), convBuckets = 2)
+    val cols = Seq("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val before = store.readConversation("conv-000001")
+    assert(before.columns.toSeq == cols && before.isEmpty)
+    store.ingest(TranscriptGen.generate(spark, 5, 4, seed = 3L).toDF())
+    // sorts after every generated id, so no file's key bounds cover it
+    val missing = store.readConversation("zzz")
+    assert(missing.columns.toSeq == cols)
+    assert(missing.isEmpty)
+  }
+
   test("laggedCorrelation served from the 1h tier equals the raw computation") {
     import org.apache.spark.sql.functions._
     val store = new TranscriptStore(spark, tmpWarehouse("lagcorr"), convBuckets = 2)
