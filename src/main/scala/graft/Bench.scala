@@ -8,7 +8,8 @@ import graft.datagen.TranscriptGen
 import graft.model.Tier
 import graft.rollup.Rollup
 
-/** Driver-run per-round benchmark: one JSON line with per-query wall
+/** Per-round benchmark: one JSON line (printed, and written to
+  * `BENCH/LAST_BENCH.json`) with per-query wall
   * times on SPARK_GRAFT_SF_DIR plus the headline BASELINE metric —
   * rolled-up turns/sec through the production-shaped 1m→1h→1d
   * cascade on a deterministic generated input (seed 42, salted
@@ -152,14 +153,22 @@ object Bench {
     val commonErrored = results.count {
       case (k, v) => r2Queries.contains(k) && v < 0 } +
       r2Queries.diff(results.keySet).size
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""errors":$errs,"error_count":${errors.size},""" +
       s""""common_total":$commonTotal,"common_n":${r2Queries.size},""" +
       s""""common_errored":$commonErrored,""" +
       s""""rollup_throughput_turns_per_sec":$throughput,""" +
       s""""per_query_runs":2,"timing":"min_of_runs",""" +
       s""""load_start":{$loadStart},"load_end":{${loadStamp()}},""" +
-      s""""sf":"$sfDir"}""")
+      s""""sf":"$sfDir"}"""
+    println(line)
+    // persisted after every timed region: the same line, same keys
+    try {
+      val out = java.nio.file.Paths.get("BENCH", "LAST_BENCH.json")
+      Files.createDirectories(out.getParent)
+      Files.writeString(out, line + "\n")
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] could not write BENCH/LAST_BENCH.json: $e") }
     spark.stop()
   }
 

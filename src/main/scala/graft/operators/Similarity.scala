@@ -303,6 +303,10 @@ object Similarity {
     * Identical vectors share every centroid similarity, so exact
     * duplicates always land in the same list — planted-copy recovery
     * is provable, like the LSH path.
+    *
+    * Precondition: `idCol` is unique per row. The self-join emits each
+    * pair once without a `distinct` only because every id has exactly
+    * one home list; a repeated id yields repeated (or self) pairs.
     */
   def ivfPairs(embeddings: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, iters: Int = 3): DataFrame = {
@@ -331,6 +335,11 @@ object Similarity {
     * candidate is re-scored exactly, multi-probe duplicates collapse
     * on (qid, nid). Same output shape as [[cosineTopK]]/[[lshTopK]];
     * recall < 1 by construction, tuned by nlist/nprobe.
+    *
+    * Precondition: `idCol` is unique per row. Candidates carry no
+    * `distinct` because a unique id has one home list, and the score
+    * joins attach vectors by id; a repeated id yields duplicate
+    * candidates and mis-joined scores.
     */
   def ivfTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       k: Int, nlist: Int = 16, nprobe: Int = 4, iters: Int = 3,

@@ -4,6 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructType}
 
 import graft.model.{Schemas, Tier}
 import graft.table.ChronoTable
@@ -102,10 +103,29 @@ final class TranscriptStore(
       .withColumn("ts_day", date_format(col("ts"), "yyyy-MM-dd"))
       .withColumn("conv_bucket", pmod(hash(col("conv_id")), lit(convBuckets)))
     val sid = raw.append(partitioned, Map("op_detail" -> "ingest"))
-    logMetrics("ingest", "raw", sid,
-      partitioned.groupBy("ts_day").agg(
+    // counting the committed rows from the footers spares a second run
+    // of the whole dedupe plan; one lineage file, as an aggregate writes
+    val perDay = addedRowsPerDay(raw, sid).map(rows => spark.createDataFrame(
+        rows.map { case (day, n) => (day, n, 0L) }).toDF("ts_day", "rows", "rollup_rows")
+        .coalesce(1))
+      .getOrElse(partitioned.groupBy("ts_day").agg(
         count(lit(1)).as("rows"), lit(0L).as("rollup_rows")))
+    logMetrics("ingest", "raw", sid, perDay)
     sid
+  }
+
+  /** The `ts_day` partition value of a raw or tier file. */
+  private def dayOf(f: ChronoTable.FileEntry): String =
+    raw.parsePartition(f.partition).getOrElse("ts_day", "")
+
+  /** Rows per `ts_day` that commit `sid` of `t` wrote, from the footer
+    * counts of the files it added; None if a footer went unread.
+    */
+  private def addedRowsPerDay(t: ChronoTable, sid: Long): Option[Seq[(String, Long)]] = {
+    val added = t.incrementalFiles(sid - 1, sid)
+    if (added.exists(_.rows.isEmpty)) None
+    else Some(added.groupBy(dayOf).toSeq.sortBy(_._1)
+      .map { case (day, fs) => day -> fs.flatMap(_.rows).sum })
   }
 
   /** Read raw turns at the current snapshot with the stable
@@ -121,14 +141,14 @@ final class TranscriptStore(
     * to the full-scan filter — stats prune files, never rows. An id
     * no live file covers yields an empty frame of the turn columns.
     */
-  def readConversation(convId: String): DataFrame = {
-    val files = raw.scanFilesByKey(convId, convId)
-    if (files.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), Schemas.turns)
-    else raw.readFiles(files)
+  def readConversation(convId: String): DataFrame =
+    if (raw.scanFilesByKey(convId, convId).isEmpty) emptyFrame(Schemas.turns)
+    else raw.readKeyRange(convId, convId)
       .filter(col("conv_id") === convId)
       .select(turnCols.map(col): _*)
-  }
+
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   // ------------------------------------------------------------------
   // incremental rollup cascade
@@ -145,6 +165,12 @@ final class TranscriptStore(
   /** Run the incremental cascade; returns per-tier merged-row counts.
     * No-op (returns empty) when every tier is already caught up.
     * Safe to re-run after a crash at ANY point.
+    *
+    * Bookkeeping comes from the manifests, not from Spark jobs: an
+    * increment is empty when it added no files, its affected days are
+    * those files' `ts_day` partitions (a 1m/1h/1d floor never leaves
+    * its source row's day), and a merge's row count is the footer rows
+    * of the files it committed.
     */
   def rollupIncremental(): Map[String, Long] = {
     var report = Map.empty[String, Long]
@@ -153,28 +179,26 @@ final class TranscriptStore(
     val rawCur = raw.currentSnapshotId
     val c1m = consumedSrc(tier1m)
     if (c1m < rawCur) {
-      val inc = raw.readIncremental(c1m, rawCur)
-      if (!inc.isEmpty) {
-        val partials = Rollup.rollupRaw(inc, Tier.Minute)
-        val days = partials.select(date_format(col("bucket_ts"), "yyyy-MM-dd"))
-          .distinct().collect().map(_.getString(0)).toSet
-        val existing = tier1m.read()
+      val incFiles = raw.incrementalFiles(c1m, rawCur)
+      if (incFiles.nonEmpty) {
+        val partials = Rollup.rollupRaw(raw.readIncremental(c1m, rawCur), Tier.Minute)
+        val days = incFiles.map(dayOf).toSet
         val base =
-          if (existing.isEmpty) partials
-          else existing
+          if (!tier1m.liveFiles().exists(f => days(dayOf(f)))) partials
+          else tier1m.read()
             .filter(col("ts_day").isin(days.toSeq: _*))
             .select(tierCols.map(col): _*)
             .unionByName(partials)
         val merged = withDay(Rollup.foldTier(base, Tier.Minute)).cache()
-        val mergedCnt = merged.count()
-        tier1m.overwritePartitions(
+        val sid = tier1m.overwritePartitions(
           p => days.contains(p.getOrElse("ts_day", "")),
           Some(merged), op = "merge",
           summary = Map("consumed_src" -> rawCur.toString,
             "affected_days" -> days.toSeq.sorted.mkString(",")))
-        logTierMetrics("rollup_1m", "tier_1m", tier1m.currentSnapshotId, merged)
+        logTierMetrics("rollup_1m", "tier_1m", sid, merged)
+        report += ("1m" ->
+          addedRowsPerDay(tier1m, sid).fold(merged.count())(_.map(_._2).sum))
         merged.unpersist()
-        report += ("1m" -> mergedCnt)
       } else {
         // empty increment: just advance the watermark atomically
         tier1m.overwritePartitions(_ => false, None, op = "noop",
@@ -192,10 +216,9 @@ final class TranscriptStore(
       val srcCur = src.currentSnapshotId
       val cDst = consumedSrc(dst)
       if (cDst < srcCur) {
-        val newFiles = src.readIncremental(cDst, srcCur)
-        if (!newFiles.isEmpty) {
-          val days = newFiles.select(col("ts_day").cast("string"))
-            .distinct().collect().map(_.getString(0)).toSet
+        val newFiles = src.incrementalFiles(cDst, srcCur)
+        if (newFiles.nonEmpty) {
+          val days = newFiles.map(dayOf).toSet
           // source partitions are fully merged → recompute, don't merge
           val srcRows = src.read()
             .filter(col("ts_day").isin(days.toSeq: _*))
@@ -208,15 +231,15 @@ final class TranscriptStore(
             srcRows
               .groupBy(col("conv_id"), Rollup.bucket(col("bucket_ts"), to).as("bucket_ts"))
               .agg(aggs.head, aggs.tail: _*)).cache()
-          val cnt = folded.count()
-          dst.overwritePartitions(
+          val sid = dst.overwritePartitions(
             p => days.contains(p.getOrElse("ts_day", "")),
             Some(folded), op = "merge",
             summary = Map("consumed_src" -> srcCur.toString,
               "affected_days" -> days.toSeq.sorted.mkString(",")))
-          logTierMetrics(s"rollup_$label", s"tier_$label", dst.currentSnapshotId, folded)
+          logTierMetrics(s"rollup_$label", s"tier_$label", sid, folded)
+          report += (label ->
+            addedRowsPerDay(dst, sid).fold(folded.count())(_.map(_._2).sum))
           folded.unpersist()
-          report += (label -> cnt)
         } else {
           dst.overwritePartitions(_ => false, None, op = "noop",
             summary = Map("consumed_src" -> srcCur.toString))
@@ -229,20 +252,22 @@ final class TranscriptStore(
     report
   }
 
-  /** Read a tier at its current snapshot (metric columns only). */
-  def readTier(t: Tier): DataFrame = {
-    val df = tier(t).read()
-    if (df.isEmpty) df else df.select(tierCols.map(col): _*)
-  }
+  /** Read a tier at its current snapshot (metric columns only); a tier
+    * with no live files reads as an empty frame of those columns.
+    */
+  def readTier(t: Tier): DataFrame = readTierAs(t, Schemas.tier)
 
   /** 1h/1d tiers also carry the Gorilla chunk of the finer tier's
     * (bucket_ts, text_len_sum) points within each coarse bucket.
     */
   def readTierWithChunks(t: Tier): DataFrame = {
     require(t != Tier.Minute, "1m is the finest tier — no chunk column")
-    val df = tier(t).read()
-    if (df.isEmpty) df else df.select((tierCols :+ "chunk").map(col): _*)
+    readTierAs(t, Schemas.tier.add("chunk", BinaryType))
   }
+
+  private def readTierAs(t: Tier, schema: StructType): DataFrame =
+    if (tier(t).liveFiles().isEmpty) emptyFrame(schema)
+    else tier(t).read().select(schema.fieldNames.toSeq.map(col): _*)
 
   /** SERVE the finer tier's (bucket_ts, text_len_sum) series decoded
     * straight out of tier `t`'s compressed chunks — the north-star

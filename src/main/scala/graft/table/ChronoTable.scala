@@ -4,10 +4,14 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.GraftPartitionShims
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.table.ChronoTable.{FileEntry, Snapshot}
+import graft.table.ChronoTable.{FileEntry, SparkSchemaKey, Snapshot}
 
 /** A snapshot/manifest table layer with Iceberg mechanics at miniature
   * scale (SURVEY.md §7): partitioned Parquet data files + an atomic
@@ -30,7 +34,9 @@ import graft.table.ChronoTable.{FileEntry, Snapshot}
   * Physical layout under `root`:
   * {{{
   *   data/batch_id=<sid>/<p1>=<v>/.../part-*.parquet
-  *   snapshots/v<sid>.json
+  *   snapshots/v<sid>.json        // live files (partition, addedBy,
+  *                                // footer rows, ts/key bounds) and
+  *                                // the read schema of those files
   *   CURRENT                      // latest committed snapshot id
   *   checkpoints/<name>.json      // consumer watermarks
   * }}}
@@ -39,6 +45,17 @@ import graft.table.ChronoTable.{FileEntry, Snapshot}
   * `spark.read.option("basePath", data/)` over any file subset
   * recovers both the user partition columns and the lineage column
   * `batch_id` — per-row provenance for free.
+  *
+  * Each snapshot records the schema that read returns — the data
+  * columns (nullable) followed by `batch_id` and the partition columns
+  * with their inferred types (e.g. `ts_day` as `DateType`) — worked
+  * out at commit time from one footer and the partition directories,
+  * with no Spark job. Every read passes it to `.schema(...)`, so no
+  * read pays a parquet schema-inference job; a snapshot written
+  * without it (older manifests) falls back to inference. Callers that
+  * only need bookkeeping facts (emptiness, partition values, row
+  * counts) take them from the snapshot's [[ChronoTable.FileEntry]]s
+  * rather than from a Spark job.
   *
   * Single-writer per table is assumed (the driver's batch jobs are
   * sequential); on a real cluster the same call sites bind to an
@@ -96,8 +113,10 @@ final class ChronoTable private (
       }.toSeq
       val summary = n.get("summary").properties().asScala
         .map(e => e.getKey -> e.getValue.asText).toMap
+      val schema = Option(n.get("schema"))
+        .map(j => DataType.fromJson(j.asText).asInstanceOf[StructType])
       Some(Snapshot(n.get("id").asLong, n.get("parentId").asLong,
-        n.get("op").asText, files, summary))
+        n.get("op").asText, files, summary, schema))
     }
   }
 
@@ -135,6 +154,9 @@ final class ChronoTable private (
     }
     val sm = node.putObject("summary")
     s.summary.foreach { case (k, v) => sm.put(k, v) }
+    // a compact JSON string, as Spark's parquet footers and Delta's
+    // `schemaString` hold it: pretty-printed it would triple in size
+    s.schema.foreach(st => node.put("schema", st.json))
     atomicWrite(snapDir.resolve(s"v${s.id}.json"),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
     atomicWrite(currentPtr, s.id.toString)
@@ -168,6 +190,11 @@ final class ChronoTable private (
     deleteRecursively(target) // orphan from a crashed commit of this sid
     Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
     val parquetFiles = listParquet(target)
+    val newFiles = parquetFiles.map { p =>
+      val rel = target.relativize(p).toString
+      FileEntry(s"batch_id=$sid/$rel",
+        Option(Paths.get(rel).getParent).map(_.toString).getOrElse(""), sid)
+    }
     // per-file stats: one scan of the NEW batch only (Iceberg computes
     // the same bounds at write time). Keyed by the BATCH-RELATIVE path
     // (partition dirs + filename), NOT the bare filename: Spark's
@@ -195,7 +222,7 @@ final class ChronoTable private (
         max(col(c).cast("string")).as("_mx_key")))
     val stats: Map[String, FileStats] =
       if (statAggs.isEmpty || parquetFiles.isEmpty) Map.empty
-      else spark.read.option("basePath", dataRoot).parquet(target.toString)
+      else readFiles(newFiles, readSchemaOf(newFiles))
         .groupBy(input_file_name().as("f"))
         .agg(statAggs.head, statAggs.tail: _*)
         .collect()
@@ -218,32 +245,47 @@ final class ChronoTable private (
           rel -> FileStats(longAt("_mn_ts"), longAt("_mx_ts"),
             strAt("_mn_key"), strAt("_mx_key"))
         }.toMap
-    parquetFiles.map { p =>
-      val rel = target.relativize(p).toString
-      val partition = Option(Paths.get(rel).getParent).map(_.toString).getOrElse("")
-      val st = stats.get(rel)
-      FileEntry(s"batch_id=$sid/$rel", partition, sid,
-        st.flatMap(_.minTs), st.flatMap(_.maxTs),
-        footerRowCount(p),
-        st.flatMap(_.minKey), st.flatMap(_.maxKey))
+    parquetFiles.zip(newFiles).map { case (p, f) =>
+      val st = stats.get(target.relativize(p).toString)
+      f.copy(minTsUs = st.flatMap(_.minTs), maxTsUs = st.flatMap(_.maxTs),
+        // footer row count: feeds rowCount and the pipeline's merge counts
+        rows = footer(p)(_.getRecordCount),
+        minKey = st.flatMap(_.minKey), maxKey = st.flatMap(_.maxKey))
     }
   }
 
-  /** Row count from the parquet FOOTER — driver-side metadata (one
-    * footer read per new file, like Iceberg's manifest record counts),
-    * NO Spark job. Feeds [[rowCount]], which lets parameter-sizing
-    * consumers (the auto-ANN paths) skip a full `count()` scan of the
-    * corpus. None if the footer is unreadable — the entry simply
-    * carries no count rather than failing the commit.
+  /** Direct read of one parquet FOOTER (like Iceberg's manifest
+    * metadata), NO Spark job. None if the footer is unreadable — the
+    * entry then simply lacks the fact rather than failing the commit.
     */
-  private def footerRowCount(p: Path): Option[Long] =
+  private def footer[A](p: Path)(f: ParquetFileReader => A): Option[A] =
     scala.util.Try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri),
+        new HPath(p.toUri),
         spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
+      val r = ParquetFileReader.open(in)
+      try f(r) finally r.close()
     }.toOption
+
+  /** The schema a `basePath`-anchored read of `files` infers, worked out
+    * without a Spark job: the Spark schema Spark's writer stores in one footer
+    * (inference reads one footer too; a table's files share one data
+    * schema) plus Spark's own partition inference over the files'
+    * directories. None for no files, or a footer without a Spark
+    * schema — reads of such a snapshot fall back to inference.
+    */
+  private def readSchemaOf(files: Seq[FileEntry]): Option[StructType] =
+    files.headOption
+      .flatMap(f => footer(Paths.get(dataRoot, f.path))(r => Option(
+        r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))).flatten)
+      .map { json =>
+        val base = new HPath(dataRoot)
+        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val leafDirs = files.map(f => fs.makeQualified(new HPath(base, f.path)).getParent)
+        GraftPartitionShims.readSchema(spark,
+          DataType.fromJson(json).asInstanceOf[StructType],
+          fs.makeQualified(base), leafDirs.distinct)
+      }
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
@@ -260,9 +302,9 @@ final class ChronoTable private (
   def append(df: DataFrame, summary: Map[String, String] = Map.empty): Long = {
     val sid = currentSnapshotId + 1
     val added = stageBatch(df, sid)
-    val prev = currentSnapshot.map(_.files).getOrElse(Seq.empty)
-    writeSnapshot(Snapshot(sid, sid - 1, "append", prev ++ added,
-      summary + ("added_files" -> added.size.toString)))
+    val live = liveFiles() ++ added
+    writeSnapshot(Snapshot(sid, sid - 1, "append", live,
+      summary + ("added_files" -> added.size.toString), readSchemaOf(live)))
     sid
   }
 
@@ -277,15 +319,15 @@ final class ChronoTable private (
       op: String = "overwrite",
       summary: Map[String, String] = Map.empty): Long = {
     val sid = currentSnapshotId + 1
-    val prev = currentSnapshot.map(_.files).getOrElse(Seq.empty)
-    val (dropped, kept) = prev.partition(f => drop(parsePartition(f.partition)))
+    val (dropped, kept) = liveFiles().partition(f => drop(parsePartition(f.partition)))
     val added: Seq[FileEntry] = replacement match {
       case Some(df) => stageBatch(df, sid)
       case None => Seq.empty
     }
-    writeSnapshot(Snapshot(sid, sid - 1, op, kept ++ added,
+    val live = kept ++ added
+    writeSnapshot(Snapshot(sid, sid - 1, op, live,
       summary ++ Map("dropped_files" -> dropped.size.toString,
-        "added_files" -> added.size.toString)))
+        "added_files" -> added.size.toString), readSchemaOf(live)))
     sid
   }
 
@@ -308,13 +350,14 @@ final class ChronoTable private (
     */
   def compact(select: Map[String, String] => Boolean = _ => true,
       minFiles: Int = 2): Long = {
-    val live = currentSnapshot.map(_.files).getOrElse(Seq.empty)
-    val byPartition = live.groupBy(_.partition)
+    val snap = currentSnapshot
+    val byPartition = snap.map(_.files).getOrElse(Seq.empty).groupBy(_.partition)
     val targets = byPartition.filter { case (p, fs) =>
       fs.size >= minFiles && select(parsePartition(p))
     }
     if (targets.isEmpty) return currentSnapshotId
-    val base = readFiles(targets.values.flatten.toSeq).drop("batch_id")
+    val base = readFiles(targets.values.flatten.toSeq, snap.flatMap(_.schema))
+      .drop("batch_id")
     val rewritten =
       if (partitionCols.isEmpty) base.coalesce(1)
       else base.repartition(partitionCols.map(col): _*)
@@ -345,11 +388,12 @@ final class ChronoTable private (
     val c = clusterCol.getOrElse(
       throw new IllegalStateException("compactSorted needs a clusterCol"))
     require(filesPerPartition >= 1, s"filesPerPartition: $filesPerPartition")
-    val live = currentSnapshot.map(_.files).getOrElse(Seq.empty)
-    val targets = live.groupBy(_.partition)
+    val snap = currentSnapshot
+    val targets = snap.map(_.files).getOrElse(Seq.empty).groupBy(_.partition)
       .filter { case (p, _) => select(parsePartition(p)) }
     if (targets.isEmpty) return currentSnapshotId
-    val base = readFiles(targets.values.flatten.toSeq).drop("batch_id")
+    val base = readFiles(targets.values.flatten.toSeq, snap.flatMap(_.schema))
+      .drop("batch_id")
     // range-partition on (dir-partition cols, key): each output file
     // covers one key range WITHIN one partition dir; the in-file sort
     // additionally gives parquet page-level locality on the key
@@ -371,11 +415,12 @@ final class ChronoTable private (
     */
   def scanFilesByKey(loKey: String, hiKey: String,
       snapshotId: Long = currentSnapshotId): Seq[FileEntry] =
-    snapshot(snapshotId).map(_.files).getOrElse(Seq.empty).filter { f =>
-      (f.minKey, f.maxKey) match {
-        case (Some(mn), Some(mx)) => mn <= hiKey && mx >= loKey
-        case _ => true
-      }
+    liveFiles(snapshotId).filter(keyOverlaps(loKey, hiKey))
+
+  private def keyOverlaps(loKey: String, hiKey: String)(f: FileEntry): Boolean =
+    (f.minKey, f.maxKey) match {
+      case (Some(mn), Some(mx)) => mn <= hiKey && mx >= loKey
+      case _ => true
     }
 
   /** Cluster-key range read using per-file key-stats pruning: reads
@@ -383,7 +428,7 @@ final class ChronoTable private (
     * their own row filter (stats bound files, not rows).
     */
   def readKeyRange(loKey: String, hiKey: String): DataFrame =
-    readFiles(scanFilesByKey(loKey, hiKey))
+    readAt(currentSnapshotId)(keyOverlaps(loKey, hiKey))
 
   /** Repoint CURRENT at an earlier snapshot (time travel / rollback). */
   def rollback(toSnapshotId: Long): Unit = {
@@ -411,28 +456,53 @@ final class ChronoTable private (
       }
     }.toMap
 
-  private[graft] def readFiles(files: Seq[FileEntry]): DataFrame =
+  /** Read `files` with `schema` (a snapshot's recorded read schema;
+    * None infers it).
+    */
+  private def readFiles(files: Seq[FileEntry], schema: Option[StructType]): DataFrame =
     if (files.isEmpty) spark.emptyDataFrame
-    else spark.read
+    else schema.fold(spark.read)(spark.read.schema)
       .option("basePath", dataRoot)
       .parquet(files.map(f => s"$dataRoot/${f.path}"): _*)
+
+  /** The files of snapshot `snapshotId` that `keep` selects, read with
+    * that snapshot's recorded schema.
+    */
+  private def readAt(snapshotId: Long)(keep: FileEntry => Boolean): DataFrame =
+    snapshot(snapshotId).fold(spark.emptyDataFrame)(s =>
+      readFiles(s.files.filter(keep), s.schema))
+
+  /** Live files at `snapshotId` (default: current); none before the
+    * first commit.
+    */
+  def liveFiles(snapshotId: Long = currentSnapshotId): Seq[FileEntry] =
+    snapshot(snapshotId).map(_.files).getOrElse(Seq.empty)
 
   /** Read the table at `snapshotId` (default: current). Includes the
     * lineage column `batch_id`.
     */
   def read(snapshotId: Long = currentSnapshotId): DataFrame =
-    readFiles(snapshot(snapshotId).map(_.files).getOrElse(Seq.empty))
+    readAt(snapshotId)(_ => true)
+
+  /** Files of `untilSnapshotId` added by snapshots in
+    * (`afterSnapshotId`, `untilSnapshotId`] — what
+    * [[readIncremental]] reads, so callers can learn the increment's
+    * emptiness, partitions and row counts from the manifest alone.
+    */
+  def incrementalFiles(afterSnapshotId: Long,
+      untilSnapshotId: Long = currentSnapshotId): Seq[FileEntry] =
+    liveFiles(untilSnapshotId).filter(addedIn(afterSnapshotId, untilSnapshotId))
+
+  private def addedIn(after: Long, until: Long)(f: FileEntry): Boolean =
+    f.addedBy > after && f.addedBy <= until
 
   /** Incremental scan: rows added by snapshots in (`afterSnapshotId`,
     * `untilSnapshotId`]. This is the rollup checkpoint watermark —
     * snapshot-id is the streaming analog per SURVEY.md §2.8.
     */
   def readIncremental(afterSnapshotId: Long,
-      untilSnapshotId: Long = currentSnapshotId): DataFrame = {
-    val files = snapshot(untilSnapshotId).map(_.files).getOrElse(Seq.empty)
-      .filter(f => f.addedBy > afterSnapshotId && f.addedBy <= untilSnapshotId)
-    readFiles(files)
-  }
+      untilSnapshotId: Long = currentSnapshotId): DataFrame =
+    readAt(untilSnapshotId)(addedIn(afterSnapshotId, untilSnapshotId))
 
   /** Live files whose stats range overlaps [loUs, hiUs] (epoch
     * micros, inclusive). Files without stats are conservatively kept
@@ -440,11 +510,12 @@ final class ChronoTable private (
     */
   def scanFiles(loUs: Long, hiUs: Long,
       snapshotId: Long = currentSnapshotId): Seq[FileEntry] =
-    snapshot(snapshotId).map(_.files).getOrElse(Seq.empty).filter { f =>
-      (f.minTsUs, f.maxTsUs) match {
-        case (Some(mn), Some(mx)) => mn <= hiUs && mx >= loUs
-        case _ => true
-      }
+    liveFiles(snapshotId).filter(tsOverlaps(loUs, hiUs))
+
+  private def tsOverlaps(loUs: Long, hiUs: Long)(f: FileEntry): Boolean =
+    (f.minTsUs, f.maxTsUs) match {
+      case (Some(mn), Some(mx)) => mn <= hiUs && mx >= loUs
+      case _ => true
     }
 
   /** Time-range read using per-file min/max stats pruning: reads ONLY
@@ -452,7 +523,7 @@ final class ChronoTable private (
     * filter (stats bound files, not rows).
     */
   def readRange(loUs: Long, hiUs: Long): DataFrame =
-    readFiles(scanFiles(loUs, hiUs))
+    readAt(currentSnapshotId)(tsOverlaps(loUs, hiUs))
 
   /** Delete data files referenced by NO retained snapshot plus the
     * expired snapshot jsons — the byte-reclaim companion of
@@ -468,8 +539,7 @@ final class ChronoTable private (
     if (cur == 0L) return (0L, 0L)
     val keepIds = snapshotIds
       .filter(id => id <= cur && id > cur - retainSnapshots).toSet
-    val referenced = keepIds.flatMap(id =>
-      snapshot(id).map(_.files.map(_.path)).getOrElse(Seq.empty))
+    val referenced = keepIds.flatMap(id => liveFiles(id).map(_.path))
     var nFiles = 0L
     var nBytes = 0L
     val dataPath = Paths.get(dataRoot)
@@ -505,8 +575,7 @@ final class ChronoTable private (
 
   /** Live partitions (as parsed key→value maps) at the current snapshot. */
   def livePartitions: Seq[Map[String, String]] =
-    currentSnapshot.map(_.files).getOrElse(Seq.empty)
-      .map(f => parsePartition(f.partition)).distinct
+    liveFiles().map(f => parsePartition(f.partition)).distinct
 
   // ------------------------------------------------------------------
   // consumer checkpoints
@@ -561,12 +630,21 @@ object ChronoTable {
         */
       minKey: Option[String] = None, maxKey: Option[String] = None)
 
+  /** @param schema what a read of `files` returns (None in manifests
+    *   written before schemas were recorded, or with no files).
+    */
   final case class Snapshot(
       id: Long,
       parentId: Long,
       op: String,
       files: Seq[FileEntry],
-      summary: Map[String, String])
+      summary: Map[String, String],
+      schema: Option[StructType] = None)
+
+  /** Footer key under which Spark's parquet writer stores the written
+    * Spark schema (JSON) — the schema parquet inference reads back.
+    */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Open (or initialize) a table rooted at `root`. */
   def apply(spark: SparkSession, root: String, partitionCols: Seq[String],

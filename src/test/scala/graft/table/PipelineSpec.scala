@@ -5,7 +5,7 @@ import java.time.LocalDate
 
 import graft.SparkSuite
 import graft.datagen.TranscriptGen
-import graft.model.{Tier, TierRow}
+import graft.model.{Schemas, Tier, TierRow}
 import graft.rollup.{Rollup, TranscriptStore}
 
 class PipelineSpec extends SparkSuite {
@@ -15,6 +15,8 @@ class PipelineSpec extends SparkSuite {
     val p = Files.createTempDirectory(s"graft-$tag-")
     p.toString
   }
+
+  private val tierCols = Schemas.tier.fieldNames.toSeq
 
   private def tierRows(df: org.apache.spark.sql.DataFrame): Seq[TierRow] =
     df.as[TierRow].collect().toSeq.sortBy(r => (r.conv_id, r.bucket_ts.getTime))
@@ -243,6 +245,38 @@ class PipelineSpec extends SparkSuite {
     val missing = store.readConversation("zzz")
     assert(missing.columns.toSeq == cols)
     assert(missing.isEmpty)
+  }
+
+  test("an empty tier reads as an empty frame with the tier columns") {
+    val store = new TranscriptStore(spark, tmpWarehouse("emptytier"), convBuckets = 2)
+    Tier.cascade.foreach { t =>
+      val df = store.readTier(t)
+      assert(df.columns.toSeq == tierCols, t.name)
+      assert(df.isEmpty, t.name)
+    }
+    val chunks = store.readTierWithChunks(Tier.Hour)
+    assert(chunks.columns.toSeq == tierCols :+ "chunk")
+    assert(chunks.isEmpty)
+  }
+
+  test("readDecodedPoints of an empty tier is empty, with its point columns") {
+    val store = new TranscriptStore(spark, tmpWarehouse("emptypoints"), convBuckets = 2)
+    val points = store.readDecodedPoints(Tier.Hour)
+    assert(points.columns.toSeq == Seq("conv_id", "bucket_ts", "value"))
+    assert(points.isEmpty)
+  }
+
+  test("publishServing of an empty store publishes empty tiers and zero watermarks") {
+    val wh = tmpWarehouse("emptypublish")
+    val store = new TranscriptStore(spark, wh, convBuckets = 2)
+    store.publishServing()
+    Tier.cascade.foreach { t =>
+      val served = spark.read.parquet(s"$wh/serve/tier_${t.name}")
+      assert(served.columns.toSeq == tierCols, t.name)
+      assert(served.isEmpty, t.name)
+    }
+    assert(Files.readString(graft.plans.TierRouting.watermarksPath(wh)) ==
+      "1m=0\n1h=0\n1d=0\n")
   }
 
   test("laggedCorrelation served from the 1h tier equals the raw computation") {
