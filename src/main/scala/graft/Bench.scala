@@ -33,15 +33,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadStamp()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // Untimed warm-up BEFORE the per-query loop: the first timed query
     // otherwise absorbs ~3-5 s of one-off JIT/codegen/parquet-reader

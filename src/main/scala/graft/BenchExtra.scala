@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement harness (guide §1.4): times declared
   * queries in ISOLATION through the noop sink (computes every column,
   * discards the write) and optionally dumps `.explain("formatted")`
@@ -24,17 +22,9 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("GRAFT_RUNS", "2").toInt
     val planDir = sys.env.get("GRAFT_PLAN_DIR")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // GRAFT_STAGES=1: per-stage wall/CPU dump (guide §1.3 — find the
     // straggler stage, not just the slow query)
     if (sys.env.contains("GRAFT_STAGES"))

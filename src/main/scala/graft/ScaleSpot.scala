@@ -232,23 +232,15 @@ object ScaleSpot {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // single-JVM at a 100x corpus: a long full-GC pause (the
-      // iterative 10⁷-edge components rounds) can outlast the default
-      // 10s heartbeat × 60 tolerance and kill the local "executor" —
-      // the run then dies of TIMEOUT, not memory. Widen both; a real
-      // cluster spreads the same heap across machines and keeps the
-      // defaults.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // single-JVM at a 100x corpus: a long full-GC pause (the
+    // iterative 10⁷-edge components rounds) can outlast the default
+    // 10s heartbeat × 60 tolerance and kill the local "executor" —
+    // the run then dies of TIMEOUT, not memory. Widen both; a real
+    // cluster spreads the same heap across machines and keeps the
+    // defaults.
+    val spark = GraftSession(extra = Map(
+      "spark.executor.heartbeatInterval" -> "60s",
+      "spark.network.timeout" -> "600s"))
 
     // reusable big dir (env) so iterating on one slow query does not
     // pay the replication write each run. The marker pins the corpus

@@ -33,22 +33,14 @@ object ScalingBench {
     * bigger (spill-prone) partitions and the comparison conflates
     * partition sizing with parallelism.
     */
-  private def session(cores: Int, shufflePartitions: Int = 64): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+  private def session(cores: Int): SparkSession =
+    GraftSession(cores.toString, Map(
+      "spark.app.name" -> s"graft-scaling-$cores",
+      "spark.sql.shuffle.partitions" -> "64",
       // keep parallelism in the small 1h/1d fold stages: the default
       // 64m advisory coalesces them to 1-2 partitions, serializing
       // work that higher core counts could absorb
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m"))
 
   /** Production-shaped cascade: every tier lands in parquet exactly as
     * the pipeline's ChronoTable commits do (no cache() — caching 18M

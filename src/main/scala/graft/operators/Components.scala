@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * need the closure, which is exactly a connected-components pass.
   *
   * Implementation: iterative min-label propagation with pointer
-  * jumping, pure DataFrame algebra (same discipline as
-  * [[TreeDepth]]):
+  * jumping, pure DataFrame algebra, run by the shared [[FixPoint]]
+  * driver (checkpointing, release, `maxIter`):
   *
   *  - each round relaxes every edge (label ← min(label, neighbor
   *    labels)) — one equi-join + one map-side-combined min aggregate,
@@ -24,12 +24,6 @@ import org.apache.spark.sql.functions._
   *    that halves label-chain length, so rounds are O(log diameter),
   *    not O(diameter): a 64-link duplicate chain resolves in ~6
   *    rounds (spec-pinned);
-  *  - every round is `localCheckpoint`ed: lineage and codegen stay
-  *    O(1) per round. TRADE-OFF: checkpoint blocks are unreplicated
-  *    and lineage is discarded, so on a real cluster an executor loss
-  *    mid-iteration fails the job instead of recomputing — swap in
-  *    reliable `checkpoint(dir)` for deployments with dynamic
-  *    allocation / preemptible executors;
   *  - labels only decrease and are bounded below by the component
   *    min, so the changed-row count reaching 0 IS convergence — the
   *    loop needs no structural cycle handling (cycles are fine:
@@ -45,7 +39,8 @@ object Components {
 
   /** (id, component) for every id in `ids` — `component` is the
     * minimum id reachable over the undirected `pairs` graph;
-    * singletons (no incident pair) map to themselves.
+    * singletons (no incident pair) map to themselves. Throws if the
+    * labels still change after `maxIter` rounds.
     *
     * @param ids   one row per node (ids not present in any pair are
     *              kept as singleton components)
@@ -53,132 +48,78 @@ object Components {
     */
   def connectedComponents(ids: DataFrame, idCol: String, pairs: DataFrame,
       maxIter: Int = 50): DataFrame = {
-    // contract: `ids` is the node universe — pairs mentioning an id
-    // outside it contribute nothing. Enforced ONCE here (the relax
-    // union would otherwise grow phantom label rows); the per-round
-    // loop then never needs to re-screen. `distinct` because a
-    // duplicated id would seed multiple self rows and break the
-    // 1:1 pointer-jump join invariant (duplicating output rows) —
-    // cheap relative to the per-round edge join.
-    // localCheckpoint for the same reason as `edges` below: the node
-    // universe is joined into the edge plan twice, so whatever deep
-    // candidate chain produced `ids` would otherwise be CLONED into
-    // the per-round logical plans (and into the size-estimation walk,
-    // which is multiplicative across join clones)
-    val universe = ids.select(col(idCol).as("_u")).distinct()
-      .localCheckpoint()
-    // repartition on _b BEFORE materializing: every round equi-joins
-    // labels on _b, and an already-hash-partitioned table lets each
-    // round's join reuse the stored partitioning instead of paying a
-    // fresh exchange of the (largest) edge side per round.
-    //
-    // localCheckpoint, NOT persist: persist caches EXECUTION but the
-    // LOGICAL plan still carries the caller's full candidate chain —
-    // cloned TWICE by the direction union — and every round's AQE
-    // re-optimization re-walks that deep cloned tree in Catalyst's
-    // single-threaded BigInt size-estimation visitor. At a 100x
-    // corpus that walk alone pinned one core for 20+ minutes while
-    // 31 sat idle (observed via jstack: SizeInBytesOnlyStatsPlanVisitor
-    // in Toom-Cook BigInteger multiplies). Checkpointing truncates the
-    // plan to a LogicalRDD leaf (partitioning preserved), so each
-    // round plans against O(1) lineage — the same discipline the
-    // label frames below already follow.
-    // direction-doubling via explode, NOT a self-union: a union clones
-    // the caller's whole candidate-chain plan, and cloned join
-    // subtrees are what the estimation walk multiplies
-    val edges = pairs
-      .select(explode(array(
-        struct(col("id1").as("_a"), col("id2").as("_b")),
-        struct(col("id2").as("_a"), col("id1").as("_b")))).as("_e"))
-      .select(col("_e._a").as("_a"), col("_e._b").as("_b"))
-      .join(universe.withColumnRenamed("_u", "_a"), Seq("_a"), "left_semi")
-      .join(universe.withColumnRenamed("_u", "_b"), Seq("_b"), "left_semi")
-      // repartition BEFORE the distinct: HashPartitioning(_b) is a
-      // subset of the distinct's (_a, _b) clustering keys, so the
-      // dedup aggregate reuses the repartition exchange instead of
-      // adding its own — one exchange of the edge table, not two —
-      // and the aggregate preserves the _b partitioning the rounds
-      // join on (guide §2.4: two operations keyed compatibly share
-      // one exchange)
-      .repartition(col("_b"))
-      .distinct()
-      .localCheckpoint()
-    try {
-      val labelType = ids.schema(ids.schema.fieldIndex(idCol)).dataType
-      // a bare projection of the checkpointed universe — its plan is
-      // Project(LogicalRDD), already O(1) lineage, so a checkpoint of
-      // its own would only add one more eager barrier job
-      var labels = universe.select(col("_u").as("_id"), col("_u").as("_comp"))
-      // the checkpointed frame BEHIND labels — what release targets
-      // (releaseCheckpoint is a no-op on the initial projection)
-      var labelsCp: DataFrame = labels
-      var changed = 1L
-      var i = 0
-      while (changed > 0 && i < maxIter) {
-        val t0 = System.nanoTime()
-        // edge relax as ONE grouped min over (self label ∪ neighbor
-        // labels) — the union needs no second join back onto labels,
-        // and the old label rides along (max ignores the neighbor
-        // rows' nulls; each _id has exactly one self row)
-        val nbr = edges
-          .join(labels.select(col("_id").as("_b"), col("_comp").as("_nc")), Seq("_b"))
-          .select(col("_a").as("_id"), col("_nc").as("_cand"),
-            lit(null).cast(labelType).as("_old"))
-        val relaxed = labels
-          .select(col("_id"), col("_comp").as("_cand"), col("_comp").as("_old"))
-          .unionByName(nbr)
-          .groupBy(col("_id"))
-          .agg(min(col("_cand")).as("_tmp"), max(col("_old")).as("_old"))
-          .localCheckpoint() // feeds BOTH jump sides — never recomputed
-        // pointer jump: label ← label(label). Every label value is
-        // itself a node id with exactly one relaxed row, so the inner
-        // equi-join is 1:1 and row-preserving.
-        // the jump join is NOT checkpointed: both of its sides read
-        // the materialized `relaxed`, so it is a cheap cached-input
-        // join. The count below never touches it; it is evaluated
-        // lazily inside the next round's relax plan, twice (the self
-        // rows and the neighbor join both read `labels`), which costs
-        // less than the eager barrier job a checkpoint would add per
-        // round (2 jobs/round, not 3); labels' plan stays O(1):
-        // Project(Join(LogicalRDD, LogicalRDD))
-        val lookup = relaxed.select(col("_id").as("_tmp"), col("_tmp").as("_cc"))
-        val jumped = relaxed
-          .join(lookup, Seq("_tmp"))
-          .select(col("_id"), col("_cc").as("_comp"))
-        // one counting action per round (materializes relaxed) — on the
-        // RELAX delta, not the jump result, so the count job is a bare
-        // cached scan instead of evaluating the jump join a second
-        // time. Stopping on relax-no-change is EQUIVALENT: at a relax
-        // fixpoint every (direction-doubled) edge has equal labels on
-        // both ends, so labels are constant per component and the
-        // component min (whose own label never moves) pins the
-        // constant — the jump is then the identity; conversely any
-        // relax change tmp(x) < old(x) forces jumped(x) ≤ tmp(x) <
-        // old(x), so both conditions fire on exactly the same round
-        // and the returned labels are identical.
-        changed = relaxed.filter(col("_tmp") =!= col("_old")).count()
-        // relaxed is materialized: the PREVIOUS round's relax frame
-        // (behind labels) is superseded — release its checkpoint
-        // blocks now instead of pinning O(rounds·|V|) storage on the
-        // caller's SparkContext
-        org.apache.spark.sql.GraftShims.releaseCheckpoint(labelsCp)
-        labelsCp = relaxed
-        labels = jumped
-        if (IterDebug.on) IterDebug.log(
-          s"components round=$i changed=$changed secs=${(System.nanoTime() - t0) / 1e9}")
-        i += 1
-      }
-      // non-convergence: nothing will read the last relax frame
-      if (changed != 0L) org.apache.spark.sql.GraftShims.releaseCheckpoint(labelsCp)
-      require(changed == 0L,
-        s"connectedComponents did not converge in $maxIter rounds " +
-          "(pointer jumping bounds rounds by log2(diameter); raise maxIter)")
-      labels.select(col("_id").as(idCol), col("_comp").as("component"))
-    } finally {
-      org.apache.spark.sql.GraftShims.releaseCheckpoint(edges)
-      org.apache.spark.sql.GraftShims.releaseCheckpoint(universe); ()
-    }
+    val labelType = ids.schema(ids.schema.fieldIndex(idCol)).dataType
+    FixPoint.run("Components.connectedComponents", maxIter) { cp =>
+      // contract: `ids` is the node universe — pairs mentioning an id
+      // outside it contribute nothing. Enforced ONCE here (the relax
+      // union would otherwise grow phantom label rows); the per-round
+      // loop then never needs to re-screen. `distinct` because a
+      // duplicated id would seed multiple self rows and break the
+      // 1:1 pointer-jump join invariant (duplicating output rows).
+      // Both setup frames are checkpointed so that every round plans
+      // against O(1) lineage: the caller's candidate chain would
+      // otherwise be cloned into each round's plan (the universe is
+      // joined into the edge plan twice, the edges by both directions)
+      // and re-walked by every round's size estimation.
+      val universe = cp(ids.select(col(idCol).as("_u")).distinct())
+      // direction-doubling via explode, NOT a self-union: a union
+      // clones the caller's whole candidate-chain plan.
+      // repartition on _b BEFORE the distinct: HashPartitioning(_b) is
+      // a subset of the distinct's (_a, _b) clustering keys, so the
+      // dedup aggregate reuses the repartition exchange — one exchange
+      // of the edge table, not two — and the checkpoint keeps the _b
+      // partitioning every round's label join reuses (guide §2.4).
+      val edges = cp(pairs
+        .select(explode(array(
+          struct(col("id1").as("_a"), col("id2").as("_b")),
+          struct(col("id2").as("_a"), col("id1").as("_b")))).as("_e"))
+        .select(col("_e._a").as("_a"), col("_e._b").as("_b"))
+        .join(universe.withColumnRenamed("_u", "_a"), Seq("_a"), "left_semi")
+        .join(universe.withColumnRenamed("_u", "_b"), Seq("_b"), "left_semi")
+        .repartition(col("_b"))
+        .distinct())
+      // a bare projection of the checkpointed universe (O(1) lineage
+      // already); progress 1 = not yet relaxed. The universe is kept
+      // while labels read it, the edges are a loop input.
+      val labels = universe.select(col("_u").as("_id"), col("_u").as("_comp"))
+      FixPoint.Step((edges, labels), 1L, Seq(universe))
+    } { case (cp, (edges, labels)) =>
+      // edge relax as ONE grouped min over (self label ∪ neighbor
+      // labels) — the union needs no second join back onto labels,
+      // and the old label rides along (max ignores the neighbor
+      // rows' nulls; each _id has exactly one self row)
+      val nbr = edges
+        .join(labels.select(col("_id").as("_b"), col("_comp").as("_nc")), Seq("_b"))
+        .select(col("_a").as("_id"), col("_nc").as("_cand"),
+          lit(null).cast(labelType).as("_old"))
+      val relaxed = cp(labels // feeds BOTH jump sides — never recomputed
+        .select(col("_id"), col("_comp").as("_cand"), col("_comp").as("_old"))
+        .unionByName(nbr)
+        .groupBy(col("_id"))
+        .agg(min(col("_cand")).as("_tmp"), max(col("_old")).as("_old")))
+      // pointer jump: label ← label(label). Every label value is
+      // itself a node id with exactly one relaxed row, so the inner
+      // equi-join is 1:1 and row-preserving. Not checkpointed: both
+      // sides read the materialized `relaxed`, and it is evaluated
+      // lazily inside the next round's relax plan (twice: self rows
+      // and the neighbor join), which costs less than the eager
+      // barrier job a checkpoint would add (2 jobs/round, not 3)
+      val lookup = relaxed.select(col("_id").as("_tmp"), col("_tmp").as("_cc"))
+      val jumped = relaxed
+        .join(lookup, Seq("_tmp"))
+        .select(col("_id"), col("_cc").as("_comp"))
+      // progress = the RELAX delta, a bare scan of the materialized
+      // `relaxed`. Stopping on it is EQUIVALENT to stopping on the
+      // jump result: at a relax fixpoint every (direction-doubled)
+      // edge has equal labels on both ends, so labels are constant per
+      // component and the component min pins the constant — the jump
+      // is then the identity; conversely any relax change
+      // tmp(x) < old(x) forces jumped(x) ≤ tmp(x) < old(x).
+      val changed = relaxed.filter(col("_tmp") =!= col("_old")).count()
+      FixPoint.Step((edges, jumped), changed, Seq(relaxed))
+    }._2.select(col("_id").as(idCol), col("_comp").as("component"))
   }
+
 
   /** Incremental connected components (r4 verdict ask #3): relabel a
     * GROWING corpus from the previous run's labels plus only the

@@ -29,9 +29,9 @@ object Dedup {
     * keeps cores busy (measured: the checkpointed setsim chain ran
     * ~1.5× SLOWER at sf0.1 than recomputing). Persist adds no job:
     * the first stage that touches the frame computes and caches it,
-    * later consumers read the cache. Iterative operators
-    * ([[Components]]/[[TreeDepth]]) still use localCheckpoint, where
-    * truncating per-round LINEAGE is the point. No-op when the caller
+    * later consumers read the cache. The iterative operators' shared
+    * [[FixPoint]] driver still uses localCheckpoint, where truncating
+    * per-round LINEAGE is the point. No-op when the caller
     * already cached or checkpointed the frame.
     */
   private[graft] def materializeOnce(df: DataFrame): DataFrame =

@@ -13,67 +13,59 @@ import org.apache.spark.storage.StorageLevel
   * tree-shaped, so transcripts need the same capability.
   *
   * Implementation is an iterative BFS self-join (depth propagation to
-  * fixpoint), NOT a recursive UDF or a driver-side walk:
+  * fixpoint) run by the shared [[FixPoint]] driver, NOT a recursive
+  * UDF or a driver-side walk:
   *
   *  - iteration k joins the (persisted) edge table against the depth-k
   *    frontier on (tree, parent) — a plain equi-join, shuffle keyed by
   *    the partition column, map-side prunable;
   *  - the number of rounds equals the tree HEIGHT (log-ish for
   *    balanced trees), not the node count — at 10^12 edges the loop
-  *    runs ~dozens of joins, each touching only frontier rows;
-  *  - every frontier is `localCheckpoint`ed: the plan is cut per
-  *    round, so lineage (and codegen size) stays O(1) per iteration
-  *    instead of compounding — on a multi-executor cluster swap in
-  *    `checkpoint()` against a reliable store for fault tolerance.
+  *    runs ~dozens of joins, each touching only frontier rows.
   *
   * Results are exact for forests (each node one parent, no cycles);
-  * `maxIter` bounds runaway inputs containing cycles — rows on a
-  * cycle are unreachable from any root and are simply never emitted,
-  * which matches the recursive-CTE semantics of the DuckDB oracle.
+  * rows on a cycle are unreachable from any root and are simply never
+  * emitted, which matches the recursive-CTE semantics of the DuckDB
+  * oracle. Both algorithms throw, never truncate, when `maxIter`
+  * rounds leave work undone.
   */
 object TreeDepth {
 
   /** Per-node depth: (treeCol, nodeCol, depth) — depth 0 at roots
-    * (rows whose `parentCol` is null), parent depth + 1 below.
+    * (rows whose `parentCol` is null), parent depth + 1 below. Throws
+    * if the frontier is still non-empty after `maxIter` rounds (a
+    * forest taller than `maxIter`).
     *
     * @param edges one row per node: (tree, node, parent|null)
     */
   def depths(edges: DataFrame, treeCol: String, nodeCol: String,
       parentCol: String, maxIter: Int = 64): DataFrame = {
-    val tSetup = System.nanoTime()
     val e = edges
       .select(col(treeCol).as("_tree"), col(nodeCol).as("_node"),
         col(parentCol).as("_parent"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var frontier = e.filter(col("_parent").isNull)
-        .select(col("_tree"), col("_node"), lit(0L).as("depth"))
-        .localCheckpoint()
-      val acc = scala.collection.mutable.ArrayBuffer(frontier)
-      // one action per round (count on the materialized checkpoint),
-      // not two isEmpty probes — at height-many rounds the per-round
-      // job count is the fixed cost that dominates shallow forests
-      var n = frontier.count()
-      if (IterDebug.on) IterDebug.log(
-        s"bfs setup n=$n secs=${(System.nanoTime() - tSetup) / 1e9}")
-      var i = 0
-      while (i < maxIter && n > 0) {
-        val t0 = System.nanoTime()
-        frontier = e
-          .join(frontier.select(col("_tree"), col("_node").as("_p"), col("depth")),
-            Seq("_tree"))
-          .filter(col("_parent") === col("_p"))
-          .select(col("_tree"), col("_node"), (col("depth") + 1L).as("depth"))
-          .localCheckpoint()
-        n = frontier.count()
-        if (n > 0) acc += frontier
-        if (IterDebug.on) IterDebug.log(
-          s"bfs round=$i n=$n secs=${(System.nanoTime() - t0) / 1e9}")
-        i += 1
-      }
-      acc.reduce(_ unionByName _)
-        .select(col("_tree").as(treeCol), col("_node").as(nodeCol), col("depth"))
-    } finally e.unpersist()
+    // state: the roots and every non-empty frontier since, latest
+    // last — the answer is their union, so all of them stay kept. One
+    // action per round (count on the materialized checkpoint): at
+    // height-many rounds the per-round job count is the fixed cost
+    // that dominates shallow forests
+    def step(frontiers: Seq[DataFrame], next: DataFrame) = {
+      val n = next.count()
+      val kept = if (n > 0 || frontiers.isEmpty) frontiers :+ next else frontiers
+      FixPoint.Step(kept, n, kept)
+    }
+    try FixPoint.run("TreeDepth.depths", maxIter) { cp =>
+      step(Nil, cp(e.filter(col("_parent").isNull)
+        .select(col("_tree"), col("_node"), lit(0L).as("depth"))))
+    } { (cp, frontiers) =>
+      step(frontiers, cp(e
+        .join(frontiers.last.select(col("_tree"), col("_node").as("_p"), col("depth")),
+          Seq("_tree"))
+        .filter(col("_parent") === col("_p"))
+        .select(col("_tree"), col("_node"), (col("depth") + 1L).as("depth"))))
+    }.reduce(_ unionByName _)
+      .select(col("_tree").as(treeCol), col("_node").as(nodeCol), col("depth"))
+    finally e.unpersist()
   }
 
   /** Per-node depth via POINTER DOUBLING (path halving): round k
@@ -91,44 +83,33 @@ object TreeDepth {
     *    conversation: 20 rounds instead of 10^6).
     *
     * Same output and same cycle semantics as [[depths]] (nodes whose
-    * ancestor walk never reaches a root are not emitted).
+    * ancestor walk never reaches a root are not emitted). Throws if
+    * live walks still shrink after `maxIter` rounds.
     */
   def depthsByDoubling(edges: DataFrame, treeCol: String, nodeCol: String,
       parentCol: String, maxIter: Int = 40): DataFrame = {
-    // state: (tree, node, anc, d) — anc = the current 2^k-ancestor
-    // (null once the walk reached a root), d = edges walked so far
-    var state = edges.select(
-      col(treeCol).as("_tree"), col(nodeCol).as("_node"),
-      col(parentCol).as("_anc"),
-      when(col(parentCol).isNull, 0L).otherwise(1L).as("_d"))
-      .localCheckpoint()
-    // Convergence + cycle cut in one counter: in an ACYCLIC forest
-    // every doubling round strictly shrinks the live (anc != null)
-    // set — a node at depth ≥ 2^(k+1) has an ancestor at some depth
-    // in [2^k, 2^(k+1)) that resolves this round. A round that fails
-    // to shrink it therefore proves the remaining walks are cyclic:
-    // stop and drop them (recursive-CTE semantics) instead of
-    // burning maxIter rounds doubling their counters.
-    var live = state.filter(col("_anc").isNotNull).count()
-    var prev = Long.MaxValue
-    var i = 0
-    while (live > 0 && live < prev && i < maxIter) {
-      prev = live
-      val t0 = System.nanoTime()
-      val next = doublingRound(state).localCheckpoint()
-      live = next.filter(col("_anc").isNotNull).count()
-      // next is materialized: the superseded state's checkpoint
-      // blocks are dead weight — release them per round instead of
-      // pinning O(rounds·n) storage (unlike [[depths]], whose result
-      // IS the union of every frontier, doubling only ever needs the
-      // latest state)
-      org.apache.spark.sql.GraftShims.releaseCheckpoint(state)
-      state = next
-      if (IterDebug.on) IterDebug.log(
-        s"doubling round=$i live=$live secs=${(System.nanoTime() - t0) / 1e9}")
-      i += 1
-    }
-    state.filter(col("_anc").isNull)
+    // state: (frame, live count); frame rows are (tree, node, anc, d)
+    // — anc = the current 2^k-ancestor (null once the walk reached a
+    // root), d = edges walked so far. Only the latest frame is kept.
+    def live(s: DataFrame) = s.filter(col("_anc").isNotNull).count()
+    FixPoint.run("TreeDepth.depthsByDoubling", maxIter) { cp =>
+      val s = cp(edges.select(
+        col(treeCol).as("_tree"), col(nodeCol).as("_node"),
+        col(parentCol).as("_anc"),
+        when(col(parentCol).isNull, 0L).otherwise(1L).as("_d")))
+      val n = live(s)
+      FixPoint.Step((s, n), n, Seq(s))
+    } { case (cp, (state, prev)) =>
+      val next = cp(doublingRound(state))
+      val n = live(next)
+      // Convergence + cycle cut in one counter: in an ACYCLIC forest
+      // every doubling round strictly shrinks the live (anc != null)
+      // set — a node at depth ≥ 2^(k+1) has an ancestor at some depth
+      // in [2^k, 2^(k+1)) that resolves this round. A round that fails
+      // to shrink it therefore proves the remaining walks are cyclic:
+      // report no progress and drop them (recursive-CTE semantics).
+      FixPoint.Step((next, n), if (n < prev) n else 0L, Seq(next))
+    }._1.filter(col("_anc").isNull)
       .select(col("_tree").as(treeCol), col("_node").as(nodeCol),
         col("_d").as("depth"))
   }

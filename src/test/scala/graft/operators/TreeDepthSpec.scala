@@ -92,4 +92,43 @@ class TreeDepthSpec extends SparkSuite {
     assert(got.length == 20)
     assert(got.map(_._3).max == 19L)
   }
+
+  private def chain(n: Int) = (0 until n).map(i =>
+    ("c", f"n$i%03d", if (i == 0) None else Some(f"n${i - 1}%03d")))
+    .toDF("tree", "node", "parent")
+
+  test("BFS past maxIter throws instead of returning a truncated answer") {
+    // 100 levels need 100 rounds: the default 64 must fail loudly (a
+    // recursive CTE has no depth limit), 128 must return every row
+    val e = intercept[IllegalArgumentException] {
+      TreeDepth.depths(chain(100), "tree", "node", "parent").collect()
+    }
+    assert(e.getMessage.contains("TreeDepth.depths") && e.getMessage.contains("maxIter=64"))
+    val got = TreeDepth.depths(chain(100), "tree", "node", "parent", maxIter = 128)
+      .as[(String, String, Long)].collect()
+    assert(got.map(r => r._2 -> r._3).toMap == (0 until 100)
+      .map(i => f"n$i%03d" -> i.toLong).toMap)
+  }
+
+  test("doubling past maxIter throws instead of returning a truncated answer") {
+    // 5 rounds resolve walks up to 2^5 = 32 deep, not 200
+    val e = intercept[IllegalArgumentException] {
+      TreeDepth.depthsByDoubling(chain(200), "tree", "node", "parent", maxIter = 5)
+        .collect()
+    }
+    assert(e.getMessage.contains("TreeDepth.depthsByDoubling") &&
+      e.getMessage.contains("maxIter=5"))
+  }
+
+  test("non-convergence releases every checkpoint and the persisted edges") {
+    val left = FixPointSpec.leftBehind(spark) {
+      intercept[IllegalArgumentException] {
+        TreeDepth.depths(chain(20), "tree", "node", "parent", maxIter = 5)
+      }
+      intercept[IllegalArgumentException] {
+        TreeDepth.depthsByDoubling(chain(200), "tree", "node", "parent", maxIter = 3)
+      }
+    }
+    assert(left.isEmpty)
+  }
 }
