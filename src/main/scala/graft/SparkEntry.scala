@@ -848,7 +848,8 @@ object SparkEntry {
     // --- row-level CDC between two derived table versions: old drops
     // event_id%11==0 and perturbs value for %7==0, new drops %13==0 —
     // the diff must report exactly the planted I/D/U set with the
-    // changed column named ---
+    // changed columns named, comma-joined ('' on I/D rows) so the
+    // result holds no array column ---
     "q_snapshot_diff" -> ((s, dir) => {
       val ev = s.read.parquet(s"$dir/events.parquet")
         .select("event_id", "user_id", "event_type", "value")
@@ -859,7 +860,8 @@ object SparkEntry {
             .otherwise(col("value")))
       val newT = ev.filter(pmod(col("event_id"), lit(13)) =!= 0)
       graft.operators.SnapshotDiff.diff(oldT, newT, Seq("event_id"))
-        .select(col("event_id"), col("op"), col("changed_cols"),
+        .select(col("event_id"), col("op"),
+          array_join(col("changed_cols"), ",").as("changed_cols"),
           floor(col("value_old") * lit(1000.0)).cast("long").as("v_old_milli"),
           floor(col("value_new") * lit(1000.0)).cast("long").as("v_new_milli"))
     }),
@@ -2056,12 +2058,12 @@ object SparkEntry {
           |  FROM oldt o FULL OUTER JOIN newt n ON o.event_id = n.event_id)
           |SELECT event_id,
           |  CASE WHEN no_old THEN 'I' WHEN no_new THEN 'D' ELSE 'U' END AS op,
-          |  CASE WHEN no_old OR no_new THEN []
+          |  coalesce(array_to_string(CASE WHEN no_old OR no_new THEN []
           |    ELSE list_filter([
           |      CASE WHEN u_old IS DISTINCT FROM u_new THEN 'user_id' END,
           |      CASE WHEN t_old IS DISTINCT FROM t_new THEN 'event_type' END,
           |      CASE WHEN v_old IS DISTINCT FROM v_new THEN 'value' END],
-          |      x -> x IS NOT NULL) END AS changed_cols,
+          |      x -> x IS NOT NULL) END, ','), '') AS changed_cols,
           |  CAST(floor(v_old * 1000) AS BIGINT) AS v_old_milli,
           |  CAST(floor(v_new * 1000) AS BIGINT) AS v_new_milli
           |FROM j

@@ -6,12 +6,15 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.GraftPartitionShims
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.table.ChronoTable.{FileEntry, SparkSchemaKey, Snapshot}
+import graft.table.ChronoTable._
 
 /** A snapshot/manifest table layer with Iceberg mechanics at miniature
   * scale (SURVEY.md §7): partitioned Parquet data files + an atomic
@@ -46,6 +49,12 @@ import graft.table.ChronoTable.{FileEntry, SparkSchemaKey, Snapshot}
   * recovers both the user partition columns and the lineage column
   * `batch_id` — per-row provenance for free.
   *
+  * A commit takes each new file's row count and bounds from the file's
+  * own footer, with no Spark job, as Iceberg does at write time. So it
+  * writes timestamps as INT64 `TIMESTAMP_MICROS`, not Spark's INT96
+  * (no footer min/max); Spark reads both alike, and INT96 files of
+  * older commits keep the bounds their manifest holds.
+  *
   * Each snapshot records the schema that read returns — the data
   * columns (nullable) followed by `batch_id` and the partition columns
   * with their inferred types (e.g. `ts_day` as `DateType`) — worked
@@ -67,15 +76,15 @@ final class ChronoTable private (
     val spark: SparkSession,
     val root: String,
     val partitionCols: Seq[String],
-    /** Timestamp column to record per-file min/max stats for (Iceberg
-      * manifest-stats analog). Written at commit time, used by
+    /** `TimestampType` column whose per-file min/max (Iceberg
+      * manifest-stats analog) each commit records, used by
       * [[scanFiles]]/[[readRange]] to prune files a time-range query
       * can never match — at 100 TB the difference between reading a
       * partition and reading a file.
       */
     val statsTsCol: Option[String],
-    /** Declared cluster column (Iceberg sort-order analog): per-file
-      * lexicographic min/max bounds are recorded at commit time, and
+    /** Declared `StringType` cluster column (Iceberg sort-order
+      * analog): per-file min/max bounds are recorded at commit, and
       * [[compactSorted]] rewrites partitions range-clustered on it so
       * the bounds become DISJOINT — after which [[readKeyRange]]
       * point/range lookups on the key read one file per partition
@@ -103,13 +112,11 @@ final class ChronoTable private (
     else {
       val n = mapper.readTree(Files.readString(p))
       val files = n.get("files").elements().asScala.map { f =>
+        def opt(k: String) = Option(f.get(k))
         FileEntry(f.get("path").asText, f.get("partition").asText,
-          f.get("addedBy").asLong,
-          Option(f.get("minTsUs")).map(_.asLong),
-          Option(f.get("maxTsUs")).map(_.asLong),
-          Option(f.get("rows")).map(_.asLong),
-          Option(f.get("minKey")).map(_.asText),
-          Option(f.get("maxKey")).map(_.asText))
+          f.get("addedBy").asLong, opt("minTsUs").map(_.asLong),
+          opt("maxTsUs").map(_.asLong), opt("rows").map(_.asLong),
+          opt("minKey").map(_.asText), opt("maxKey").map(_.asText))
       }.toSeq
       val summary = n.get("summary").properties().asScala
         .map(e => e.getKey -> e.getValue.asText).toMap
@@ -179,78 +186,63 @@ final class ChronoTable private (
     * committed — so nothing references it), it is removed first.
     */
   private def stageBatch(df: DataFrame, sid: Long): Seq[FileEntry] = {
+    statsTsCol.foreach(requireType(df, _, TimestampType, "statsTsCol"))
+    clusterCol.foreach(requireType(df, _, StringType, "clusterCol"))
     val staging = Paths.get(root, "_tmp", s"batch_id=$sid")
     Files.createDirectories(staging.getParent)
     deleteRecursively(staging)
     val writer = if (partitionCols.nonEmpty)
       df.write.partitionBy(partitionCols: _*) else df.write
-    writer.mode("overwrite").parquet(staging.toString)
+    // Spark reads the timestamp encoding from the session, never from
+    // a write option: set it for this write, then restore it
+    val tsTypeBefore = spark.conf.getAll.get(TsTypeKey) // explicit only
+    spark.conf.set(TsTypeKey, "TIMESTAMP_MICROS")
+    try writer.mode("overwrite").parquet(staging.toString)
+    finally tsTypeBefore.fold(spark.conf.unset(TsTypeKey))(spark.conf.set(TsTypeKey, _))
     val target = Paths.get(dataRoot, s"batch_id=$sid")
     Files.createDirectories(target.getParent)
     deleteRecursively(target) // orphan from a crashed commit of this sid
     Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    val parquetFiles = listParquet(target)
-    val newFiles = parquetFiles.map { p =>
+    listParquet(target).map { p =>
       val rel = target.relativize(p).toString
-      FileEntry(s"batch_id=$sid/$rel",
+      val entry = FileEntry(s"batch_id=$sid/$rel",
         Option(Paths.get(rel).getParent).map(_.toString).getOrElse(""), sid)
+      footer(p) { r =>
+        val ts = statsTsCol.flatMap(bounds(r, _, MicrosTimestamp)(
+          _.asInstanceOf[java.lang.Long].longValue))
+        val key = clusterCol.flatMap(bounds(r, _, Utf8String)(
+          _.asInstanceOf[Binary].toStringUsingUTF8))
+        entry.copy(rows = Some(r.getRecordCount),
+          minTsUs = ts.map(_._1), maxTsUs = ts.map(_._2),
+          minKey = key.map(_._1), maxKey = key.map(_._2))
+      }.getOrElse(entry)
     }
-    // per-file stats: one scan of the NEW batch only (Iceberg computes
-    // the same bounds at write time). Keyed by the BATCH-RELATIVE path
-    // (partition dirs + filename), NOT the bare filename: Spark's
-    // dynamic-partition writer reuses the same part-NNNNN-<uuid>.c000
-    // name in every partition dir a task writes, so bare names collide
-    // within a batch and one file would silently inherit another's
-    // bounds — and stats-pruned reads could then drop in-range rows.
-    // resolve symlinks ONCE so the relativize below cannot miss when
-    // the warehouse sits behind a symlinked root (e.g. /tmp →
-    // /private/tmp) — a silent key miss would record no bounds and
-    // quietly disable stats pruning for the whole batch
-    val realTarget = scala.util.Try(target.toRealPath()).getOrElse(
-      target.toAbsolutePath)
-    // ONE stats scan of the new batch covers both the ts bounds and
-    // the cluster-key bounds (adding a second scan per configured
-    // stats column would double write-amplification for nothing)
-    case class FileStats(minTs: Option[Long], maxTs: Option[Long],
-      minKey: Option[String], maxKey: Option[String])
-    val statAggs =
-      statsTsCol.toSeq.flatMap(c => Seq(
-        min(unix_micros(col(c).cast("timestamp"))).as("_mn_ts"),
-        max(unix_micros(col(c).cast("timestamp"))).as("_mx_ts"))) ++
-      clusterCol.toSeq.flatMap(c => Seq(
-        min(col(c).cast("string")).as("_mn_key"),
-        max(col(c).cast("string")).as("_mx_key")))
-    val stats: Map[String, FileStats] =
-      if (statAggs.isEmpty || parquetFiles.isEmpty) Map.empty
-      else readFiles(newFiles, readSchemaOf(newFiles))
-        .groupBy(input_file_name().as("f"))
-        .agg(statAggs.head, statAggs.tail: _*)
-        .collect()
-        .map { r =>
-          // input_file_name is a URI (file:/...; %-escaped) — decode
-          // to a filesystem path before relativizing against target
-          val raw = r.getString(0)
-          val fsPath = scala.util.Try(Paths.get(new java.net.URI(raw)))
-            .getOrElse(Paths.get(raw))
-          val realFs = scala.util.Try(fsPath.toRealPath()).getOrElse(fsPath)
-          val rel = scala.util.Try(realTarget.relativize(realFs).toString)
-            .getOrElse(realFs.toString
-              .stripPrefix(realTarget.toString).stripPrefix("/"))
-          def longAt(n: String): Option[Long] =
-            if (!r.schema.fieldNames.contains(n) || r.isNullAt(r.fieldIndex(n)))
-              None else Some(r.getLong(r.fieldIndex(n)))
-          def strAt(n: String): Option[String] =
-            if (!r.schema.fieldNames.contains(n) || r.isNullAt(r.fieldIndex(n)))
-              None else Some(r.getString(r.fieldIndex(n)))
-          rel -> FileStats(longAt("_mn_ts"), longAt("_mx_ts"),
-            strAt("_mn_key"), strAt("_mx_key"))
-        }.toMap
-    parquetFiles.zip(newFiles).map { case (p, f) =>
-      val st = stats.get(target.relativize(p).toString)
-      f.copy(minTsUs = st.flatMap(_.minTs), maxTsUs = st.flatMap(_.maxTs),
-        // footer row count: feeds rowCount and the pipeline's merge counts
-        rows = footer(p)(_.getRecordCount),
-        minKey = st.flatMap(_.minKey), maxKey = st.flatMap(_.maxKey))
+  }
+
+  private def requireType(df: DataFrame, c: String, want: DataType, role: String): Unit = {
+    val got = df.schema.find(_.name == c).map(_.dataType)
+    require(got.contains(want), s"$role `$c` must be ${want.simpleString}, got " +
+      got.fold("no such column")(_.simpleString))
+  }
+
+  /** Min/max of `c` over all row groups from the footer's chunk stats,
+    * in parquet's order (unsigned bytes for strings, as Spark's). Never
+    * too narrow: all-null chunks are skipped; None (never pruned) when
+    * all values are null, or a chunk with values lacks min/max or is not
+    * written as `annotation`.
+    */
+  private def bounds[A](r: ParquetFileReader, c: String,
+      annotation: LogicalTypeAnnotation)(decode: Any => A): Option[(A, A)] = {
+    val valued = r.getFooter.getBlocks.asScala.toSeq
+      .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == c))
+      .filterNot(ch => ch.getStatistics.isNumNullsSet &&
+        ch.getStatistics.getNumNulls == ch.getValueCount)
+    if (valued.isEmpty || valued.exists(ch => !ch.getStatistics.hasNonNullValue ||
+        ch.getPrimitiveType.getLogicalTypeAnnotation != annotation)) None
+    else {
+      val st = valued.head.getStatistics.copy()
+      valued.tail.foreach(ch => st.mergeStatistics(ch.getStatistics))
+      Some((decode(st.genericGetMin), decode(st.genericGetMax)))
     }
   }
 
@@ -261,8 +253,7 @@ final class ChronoTable private (
   private def footer[A](p: Path)(f: ParquetFileReader => A): Option[A] =
     scala.util.Try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new HPath(p.toUri),
-        spark.sparkContext.hadoopConfiguration)
+        new HPath(p.toUri), spark.sparkContext.hadoopConfiguration)
       val r = ParquetFileReader.open(in)
       try f(r) finally r.close()
     }.toOption
@@ -356,16 +347,19 @@ final class ChronoTable private (
       fs.size >= minFiles && select(parsePartition(p))
     }
     if (targets.isEmpty) return currentSnapshotId
-    val base = readFiles(targets.values.flatten.toSeq, snap.flatMap(_.schema))
-      .drop("batch_id")
-    val rewritten =
-      if (partitionCols.isEmpty) base.coalesce(1)
-      else base.repartition(partitionCols.map(col): _*)
-    overwritePartitions(
-      p => targets.keys.exists(k => parsePartition(k) == p),
-      Some(rewritten), op = "compact",
-      summary = Map("compacted_partitions" -> targets.size.toString))
+    rewrite(snap, targets, "compact", Map("compacted_partitions" -> targets.size.toString))(
+      base => if (partitionCols.isEmpty) base.coalesce(1)
+        else base.repartition(partitionCols.map(col): _*))
   }
+
+  /** One copy-on-write commit replacing the `targets` partitions of
+    * `snap` with their rows (less `batch_id`) laid out by `layout`.
+    */
+  private def rewrite(snap: Option[Snapshot], targets: Map[String, Seq[FileEntry]],
+      op: String, summary: Map[String, String])(layout: DataFrame => DataFrame): Long =
+    overwritePartitions(p => targets.keys.exists(k => parsePartition(k) == p),
+      Some(layout(readFiles(targets.values.flatten.toSeq, snap.flatMap(_.schema))
+        .drop("batch_id"))), op, summary)
 
   /** Sort-clustered compaction (Iceberg `rewrite_data_files` with a
     * sort order): rewrite the selected partitions with rows RANGE-
@@ -392,34 +386,28 @@ final class ChronoTable private (
     val targets = snap.map(_.files).getOrElse(Seq.empty).groupBy(_.partition)
       .filter { case (p, _) => select(parsePartition(p)) }
     if (targets.isEmpty) return currentSnapshotId
-    val base = readFiles(targets.values.flatten.toSeq, snap.flatMap(_.schema))
-      .drop("batch_id")
     // range-partition on (dir-partition cols, key): each output file
     // covers one key range WITHIN one partition dir; the in-file sort
     // additionally gives parquet page-level locality on the key
     val rangeCols = (partitionCols :+ c).map(col)
     val nOut = math.max(1, targets.size * filesPerPartition)
-    val rewritten = base
-      .repartitionByRange(nOut, rangeCols: _*)
-      .sortWithinPartitions(rangeCols: _*)
-    overwritePartitions(
-      p => targets.keys.exists(k => parsePartition(k) == p),
-      Some(rewritten), op = "compact-sorted",
-      summary = Map("clustered_partitions" -> targets.size.toString,
-        "cluster_col" -> c))
+    rewrite(snap, targets, "compact-sorted",
+      Map("clustered_partitions" -> targets.size.toString, "cluster_col" -> c))(
+      _.repartitionByRange(nOut, rangeCols: _*).sortWithinPartitions(rangeCols: _*))
   }
 
   /** Live files whose cluster-key bounds overlap [loKey, hiKey]
-    * (lexicographic, inclusive). Files without key stats are
-    * conservatively kept — pruning may under-prune, never drop data.
+    * (inclusive, in the bounds' UTF-8 byte order). Files without key
+    * stats are kept — pruning may under-prune, never drop data.
     */
   def scanFilesByKey(loKey: String, hiKey: String,
       snapshotId: Long = currentSnapshotId): Seq[FileEntry] =
     liveFiles(snapshotId).filter(keyOverlaps(loKey, hiKey))
 
   private def keyOverlaps(loKey: String, hiKey: String)(f: FileEntry): Boolean =
-    (f.minKey, f.maxKey) match {
-      case (Some(mn), Some(mx)) => mn <= hiKey && mx >= loKey
+    (f.minKey.map(UTF8String.fromString), f.maxKey.map(UTF8String.fromString)) match {
+      case (Some(mn), Some(mx)) => mn.compareTo(UTF8String.fromString(hiKey)) <= 0 &&
+        mx.compareTo(UTF8String.fromString(loKey)) >= 0
       case _ => true
     }
 
@@ -616,8 +604,10 @@ object ChronoTable {
   /** One live data file. `partition` is the relative key=value path
     * (excluding batch_id), e.g. "ts_day=2024-01-03/conv_bucket=2".
     * `minTsUs`/`maxTsUs` are the file's stats-column bounds in epoch
-    * micros (None when the table has no stats column or the file's
-    * column is all-null — such files are never pruned).
+    * micros, from its footer at commit (INT96 files of older commits
+    * keep the bounds recorded then); never too narrow, and None — the
+    * file is never pruned — when the table has no stats column or the
+    * footer gives no bound (e.g. an all-null column).
     * Companion-level (not class-nested) so pattern matches need no
     * unverifiable outer-instance check.
     */
@@ -625,8 +615,8 @@ object ChronoTable {
       minTsUs: Option[Long] = None, maxTsUs: Option[Long] = None,
       /** Footer-recorded row count (None in pre-r5 manifests). */
       rows: Option[Long] = None,
-      /** Lexicographic cluster-key bounds (None when the table has no
-        * cluster column or the file's key is all-null).
+      /** Cluster-key bounds (UTF-8 byte order), from the footer as
+        * the ts bounds, with the same None rule.
         */
       minKey: Option[String] = None, maxKey: Option[String] = None)
 
@@ -645,6 +635,14 @@ object ChronoTable {
     * Spark schema (JSON) — the schema parquet inference reads back.
     */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The session setting for the parquet encoding of timestamps, and
+    * the encodings whose footer min/max a commit takes as bounds.
+    */
+  private val TsTypeKey = "spark.sql.parquet.outputTimestampType"
+  private val MicrosTimestamp =
+    LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
+  private val Utf8String = LogicalTypeAnnotation.stringType()
 
   /** Open (or initialize) a table rooted at `root`. */
   def apply(spark: SparkSession, root: String, partitionCols: Seq[String],

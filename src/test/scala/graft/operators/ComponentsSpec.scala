@@ -53,11 +53,12 @@ class ComponentsSpec extends SparkSuite {
   test("non-convergence releases every checkpoint it made") {
     val ids = (0L to 64L).toDF("doc_id")
     val pairs = (0L until 64L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    intercept[IllegalArgumentException] {
-      Components.connectedComponents(ids, "doc_id", pairs, maxIter = 2)
+    val left = FixPointSpec.leftBehind(spark) {
+      intercept[IllegalArgumentException] {
+        Components.connectedComponents(ids, "doc_id", pairs, maxIter = 2)
+      }
     }
-    assert(spark.sparkContext.getPersistentRDDs.size === before)
+    assert(left.isEmpty, s"checkpoints left behind: $left")
   }
 
   test("random graph matches a driver-side union-find oracle") {

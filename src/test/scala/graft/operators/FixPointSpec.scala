@@ -1,8 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 
@@ -56,20 +53,6 @@ class FixPointSpec extends SparkSuite {
     assert(left.isEmpty)
   }
 
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    GraftShims.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; GraftShims.drainListeners(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
-
   private def chain(n: Int): DataFrame = (0 until n).map(i =>
     ("c", i.toLong, if (i == 0) None else Some(i - 1L)))
     .toDF("tree", "node", "parent")
@@ -79,11 +62,11 @@ class FixPointSpec extends SparkSuite {
     // driver replaced, measured on these fixtures in this suite's
     // local[4] session: the driver itself runs no Spark action
     val edges = chain(30)
-    val bfs = jobsOf(TreeDepth.depths(edges, "tree", "node", "parent"))
-    val dbl = jobsOf(TreeDepth.depthsByDoubling(edges, "tree", "node", "parent"))
+    val bfs = jobsOf(TreeDepth.depths(edges, "tree", "node", "parent")).size
+    val dbl = jobsOf(TreeDepth.depthsByDoubling(edges, "tree", "node", "parent")).size
     val ids = (0L to 64L).toDF("doc_id")
     val pairs = (0L until 64L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val cc = jobsOf(Components.connectedComponents(ids, "doc_id", pairs))
+    val cc = jobsOf(Components.connectedComponents(ids, "doc_id", pairs)).size
     assert(bfs <= 123, s"BFS on a 30-deep chain ran $bfs jobs")
     assert(dbl <= 29, s"doubling on a 30-deep chain ran $dbl jobs")
     assert(cc <= 56, s"components on a 64-link chain ran $cc jobs")

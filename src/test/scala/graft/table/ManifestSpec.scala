@@ -2,12 +2,9 @@ package graft.table
 
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable
-
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftShims}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, IntegerType}
 
@@ -22,7 +19,6 @@ import graft.rollup.TranscriptStore
   */
 class ManifestSpec extends SparkSuite {
   import spark.implicits._
-  import ManifestSpec.Job
 
   private def tmpWarehouse(tag: String): String =
     Files.createTempDirectory(s"graft-$tag-").toString
@@ -133,32 +129,15 @@ class ManifestSpec extends SparkSuite {
     b1.unpersist(); b2.unpersist()
   }
 
-  private def jobsOf(body: => Unit): Seq[Job] = {
-    val jobs = mutable.ArrayBuffer.empty[Job]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.synchronized {
-        val p = Option(js.properties)
-        jobs += Job(js.stageInfos.headOption.map(_.name).getOrElse(""),
-          p.flatMap(x => Option(x.getProperty("spark.job.description"))).getOrElse(""),
-          p.exists(_.getProperty("spark.sql.execution.id") != null))
-      }
-    }
-    GraftShims.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; GraftShims.drainListeners(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.synchronized(jobs.toList)
-  }
-
   /** A parquet schema-inference job: issued by a ChronoTable read while
     * it resolves the relation, so outside any SQL execution (file
     * listing jobs carry their own description).
     */
-  private def inference(j: Job) =
+  private def inference(j: SparkSuite.Job) =
     j.site.startsWith("parquet at ChronoTable") && !j.inSql &&
       !j.description.startsWith("Listing leaf files")
 
-  private def probe(j: Job) =
+  private def probe(j: SparkSuite.Job) =
     j.site.matches("(isEmpty|count|collect|distinct) at Pipeline\\.scala.*")
 
   test("job budget: rollupIncremental runs no schema-inference job and no Pipeline probe") {
@@ -179,11 +158,4 @@ class ManifestSpec extends SparkSuite {
     assert(raw.currentSnapshot.get.schema.isEmpty)
     assert(jobsOf(raw.read()).exists(inference), "a legacy read must infer")
   }
-}
-
-object ManifestSpec {
-  /** One started job: its first stage's name (the short call site), its
-    * description, and whether it ran inside a SQL execution.
-    */
-  final case class Job(site: String, description: String, inSql: Boolean)
 }

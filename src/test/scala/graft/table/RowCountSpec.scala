@@ -2,7 +2,6 @@ package graft.table
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -46,33 +45,22 @@ class RowCountSpec extends SparkSuite {
   test("auto-ANN sizing via nHint skips the full-corpus count job") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val n = emb.count()
-    var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // plan construction still pays the O(1) dim peek (head(1) on
-      // one file — size-independent by design); the assertion is that
-      // the hint removes the FULL-CORPUS sizing count: exactly one
-      // fewer job than the hint-less path, which must pay it
-      val withHint = Similarity.lshTopKAuto(emb, "vec_id", "embedding",
-        k = 3, nHint = Some(n))
-      org.apache.spark.sql.GraftShims.drainListeners(spark)
-      val hintJobs = jobs
-      val without = Similarity.lshTopKAuto(emb, "vec_id", "embedding", k = 3)
-      org.apache.spark.sql.GraftShims.drainListeners(spark)
-      val noHintJobs = jobs - hintJobs
-      assert(hintJobs <= 2,
-        s"hint path should only pay the O(1) dim peek, ran $hintJobs jobs")
-      assert(noHintJobs > hintJobs,
-        s"expected extra sizing-count job(s) without the hint: " +
-          s"with=$hintJobs without=$noHintJobs")
-      // same n → same planes → identical results
-      assert(withHint.as[(Long, Long, Long)].collect().toSet ===
-        without.as[(Long, Long, Long)].collect().toSet)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def auto(nHint: Option[Long]) =
+      Similarity.lshTopKAuto(emb, "vec_id", "embedding", k = 3, nHint = nHint)
+    // plan construction still pays the O(1) dim peek (head(1) on
+    // one file — size-independent by design); the assertion is that
+    // the hint removes the FULL-CORPUS sizing count: exactly one
+    // fewer job than the hint-less path, which must pay it
+    val hintJobs = jobsOf(auto(Some(n))).size
+    val noHintJobs = jobsOf(auto(None)).size
+    assert(hintJobs <= 2,
+      s"hint path should only pay the O(1) dim peek, ran $hintJobs jobs")
+    assert(noHintJobs > hintJobs,
+      s"expected extra sizing-count job(s) without the hint: " +
+        s"with=$hintJobs without=$noHintJobs")
+    // same n → same planes → identical results
+    assert(auto(Some(n)).as[(Long, Long, Long)].collect().toSet ===
+      auto(None).as[(Long, Long, Long)].collect().toSet)
   }
 
   test("table-backed sizing: ChronoTable.rowCount feeds nHint with no data scan") {
