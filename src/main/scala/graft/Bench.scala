@@ -1,132 +1,86 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 import graft.datagen.TranscriptGen
 import graft.model.Tier
 import graft.rollup.Rollup
 
-/** Per-round benchmark: one JSON line (printed, and written to
-  * `BENCH/LAST_BENCH.json`) with per-query wall
-  * times on SPARK_GRAFT_SF_DIR plus the headline BASELINE metric —
-  * rolled-up turns/sec through the production-shaped 1m→1h→1d
-  * cascade on a deterministic generated input (seed 42, salted
-  * (conv, hour) file layout like real ingest). Full two-parallelism
-  * scaling evidence lives in graft.ScalingBench / BENCH/BASELINE.md.
+/** The engine's one measurement main; the first argument picks the mode.
+  *
+  *  - none: one JSON line (printed, and written to
+  *    `BENCH/LAST_BENCH.json`) with per-query wall times on
+  *    `SPARK_GRAFT_SF_DIR` plus the headline BASELINE metric — rolled-up
+  *    turns/sec through the production-shaped 1m→1h→1d cascade on a
+  *    generated input (see [[writeTurns]]).
+  *  - `scale`: every query but [[notScaled]] at the SF and at
+  *    `SPARK_GRAFT_SCALE_FACTOR` (default 10) times it, as one JSON line
+  *    `{"sf_dir","factor","queries":{q:{"t1","t10","ratio"}}}`. A
+  *    superlinear surprise the small SF cannot show reads as a ratio well
+  *    above the factor.
+  *  - `scaling`: the cascade at N and 4N cores over one input, written to
+  *    `BENCH/BASELINE.md` plus one JSON line, only where this box has the
+  *    cores for an N→4N pair (see [[scalingLevels]]).
+  *
+  * `SPARK_GRAFT_ONLY` narrows the query set ([[SparkEntry.selected]]).
+  * `SPARK_GRAFT_BIG_DIR` keeps the `scale`/`scaling` corpus between runs
+  * (see [[corpus]]); unset, each run builds one in a temp dir.
   */
 object Bench {
 
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    args.headOption match {
+      case None => perQuery(sfDir)
+      case Some("scale") => scale(sfDir)
+      case Some("scaling") => scaling()
+      case Some(m) => throw new IllegalArgumentException(
+        s"unknown mode '$m': pass no argument, 'scale' or 'scaling'")
+    }
+  }
+
   /** `/proc/loadavg` snapshot — (1m, 5m, 15m, running/total procs).
-    * Stamped into the JSON so a reader can tell box load from code
+    * Stamped into the artifacts so a reader can tell box load from code
     * regression without rerunning; "?" when unreadable (non-Linux).
     */
   private def loadStamp(): String =
     try {
-      val f = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").trim.split("\\s+")
+      val f = Files.readString(Paths.get("/proc/loadavg")).trim.split("\\s+")
       s""""load1":${f(0)},"load5":${f(1)},"load15":${f(2)},"procs":"${f(3)}""""
-    } catch { case scala.util.control.NonFatal(_) =>
+    } catch { case NonFatal(_) =>
       """"load1":-1,"load5":-1,"load15":-1,"procs":"?"""" }
 
-  def main(args: Array[String]): Unit = {
+  // ---- the default mode ----
+
+  private def perQuery(sfDir: String): Unit = {
     val loadStart = loadStamp()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val queries = SparkEntry.selected()
     val spark = GraftSession()
-
-    // Untimed warm-up BEFORE the per-query loop: the first timed query
-    // otherwise absorbs ~3-5 s of one-off JIT/codegen/parquet-reader
-    // warm-up, manufacturing phantom regressions for whichever query
-    // happens to run first (r2: q_text_stats; r3: q_rollup_30s). One
-    // throwaway pass through a read→hash-agg→window shape warms the
-    // scan, codegen, and exchange machinery the real queries use.
-    try {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
-      ev.groupBy(col("event_type")).count().count()
-      ev.select(row_number().over(
-        Window.partitionBy(col("event_type")).orderBy(col("event_id"))).as("rn"))
-        .filter(col("rn") === 1).count()
-      // NonFatal only: a fatal error (OOM) leaves the JVM heap-
-      // thrashed and every timing after it would be laundered into
-      // the artifact — let it kill the run loudly instead
-    } catch { case scala.util.control.NonFatal(_) => () }
-
     // a crashed query must not look fast: its time is reported as -1
     // AND its error surfaces in the "errors" object of the JSON line.
-    //
-    // MIN-OF-2 per query (r4 verdict ask): three rounds running, a
-    // transient co-tenant/box-load spike read as a phantom code
-    // regression in this artifact. The min of two interleaved-in-time
-    // runs discards a spike that hit only one of them; the loadavg
-    // stamps below let a reader see residual whole-run load.
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable =>
-          errors(name) = (e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("")).take(160)
-            .replaceAll("""[\\"\n\r\t]""", " ")
-          false
-      }
-      val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      // untimed: release cached/localCheckpointed blocks the finished
-      // query left behind — iterative operators checkpoint per round,
-      // and leaked blocks steal execution memory from LATER queries
-      // (measured: the 10x ScaleSpot pass distorted ~5x without this)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      t
-    }
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      val t1 = runOnce(name, fn)
-      // a failed first run is final (-1); retrying would hide flaky
-      // failures behind a passing second attempt
-      val t = if (t1 < 0) t1 else {
-        val t2 = runOnce(name, fn)
-        if (t2 < 0) -1.0 else math.min(t1, t2)
-      }
-      name -> t
-    }
+    // MIN-OF-2 per query: a transient box-load spike that hits one of
+    // two runs is discarded; the loadavg stamps show residual load.
+    val errors = mutable.LinkedHashMap.empty[String, String]
+    val results = timeAll(spark, sfDir, queries, runs = 2, errors)
 
     // headline: rolled-up turns/sec across the cascade (write-path
     // shape, matching the pipeline's tier commits)
-    val throughput = try {
-      import org.apache.spark.sql.functions.col
+    val throughput = attempt(errors, "rollup_throughput") {
       val base = Files.createTempDirectory("graft-bench-").toString
-      val input = s"$base/turns"
       // ~9M turns: large enough that the cascade measures engine
-      // throughput, not fixed job overhead (the 93M-turn evidence
-      // lives in ScalingBench / BENCH/BASELINE.md)
-      TranscriptGen.generate(spark, 8000, 800, seed = 42L, hotShare = 0.1,
-          maxDeltaSecs = 15, partitions = 64)
-        .toDF()
-        .repartition(64, col("conv_id"), Rollup.bucket(col("ts"), Tier.Hour))
-        .write.mode("overwrite").parquet(input)
-      val turns = spark.read.parquet(input)
-      val n = turns.count()
-      def cascade(): Double = {
-        val t0 = System.nanoTime()
-        Rollup.rollupRaw(turns, Tier.Minute)
-          .write.mode("overwrite").parquet(s"$base/m1")
-        Rollup.foldTier(spark.read.parquet(s"$base/m1"), Tier.Hour)
-          .write.mode("overwrite").parquet(s"$base/h1")
-        Rollup.foldTier(spark.read.parquet(s"$base/h1"), Tier.Day)
-          .write.mode("overwrite").parquet(s"$base/d1")
-        (System.nanoTime() - t0) / 1e9
-      }
-      cascade() // warm-up
-      n / math.min(cascade(), cascade()) // min-of-2: same rationale as queries
-    } catch {
-      case e: Throwable =>
-        errors("rollup_throughput") = (e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(160)
-          .replaceAll("""[\\"\n\r\t]""", " ")
-        -1.0
+      // throughput, not fixed job overhead
+      writeTurns(spark, 8000, 800, 64, s"$base/turns")
+      val n = spark.read.parquet(s"$base/turns").count()
+      cascade(spark, s"$base/turns", base) // warm-up
+      n / math.min(cascade(spark, s"$base/turns", base),
+        cascade(spark, s"$base/turns", base))
     }
 
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -136,12 +90,10 @@ object Bench {
     val total = results.values.filter(_ >= 0).sum
     // the round-2 query set, frozen: round-over-round comparisons read
     // common_total so newly added queries stop confounding the trend.
-    // common_errored flags broken common queries — their omitted wall
-    // time must not read as a speedup.
+    // common_errored counts common queries that errored OR are missing
+    // — either way their omitted wall time must not read as a speedup.
     val commonTotal = results.collect {
       case (k, v) if r2Queries.contains(k) && v >= 0 => v }.sum
-    // errored OR missing (renamed/removed) — either way the omitted
-    // wall time must not read as a speedup
     val commonErrored = results.count {
       case (k, v) => r2Queries.contains(k) && v < 0 } +
       r2Queries.diff(results.keySet).size
@@ -154,12 +106,11 @@ object Bench {
       s""""load_start":{$loadStart},"load_end":{${loadStamp()}},""" +
       s""""sf":"$sfDir"}"""
     println(line)
-    // persisted after every timed region: the same line, same keys
     try {
-      val out = java.nio.file.Paths.get("BENCH", "LAST_BENCH.json")
+      val out = Paths.get("BENCH", "LAST_BENCH.json")
       Files.createDirectories(out.getParent)
       Files.writeString(out, line + "\n")
-    } catch { case scala.util.control.NonFatal(e) =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write BENCH/LAST_BENCH.json: $e") }
     spark.stop()
   }
@@ -182,4 +133,332 @@ object Bench {
     "q_rollup_round_5m", "q_rollup_salted_1m", "q_semi_join",
     "q_sessionize", "q_simhash", "q_text_stats", "q_tokenize",
     "q_tree_depth", "q_tree_depth_doubling", "q_turns", "q_window_lag")
+
+  // ---- the one timing loop ----
+
+  /** Min-of-`runs` wall seconds per query on `dir`; -1 for a query that
+    * failed in any run. A failed run is final: retrying would hide a
+    * flaky failure behind a passing attempt.
+    */
+  private def timeAll(spark: SparkSession, dir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame], runs: Int,
+      errors: mutable.Map[String, String]): Map[String, Double] = {
+    warmUp(spark, dir)
+    queries.map { case (name, fn) =>
+      name -> (1 to runs).foldLeft(Double.PositiveInfinity) { (best, _) =>
+        if (best < 0) best else {
+          val t = timeQuery(spark, errors, name)(fn(spark, dir).count())
+          if (t < 0) t else math.min(best, t)
+        }
+      }
+    }
+  }
+
+  /** Wall seconds of `body`, or -1 with its error recorded under `name`.
+    * Untimed afterwards, every persisted RDD is released and the cache
+    * cleared: iterative operators localCheckpoint per round, and leaked
+    * blocks steal execution memory from later queries (they distorted a
+    * 10x scale pass ~5x).
+    */
+  private[graft] def timeQuery(spark: SparkSession,
+      errors: mutable.Map[String, String], name: String)(body: => Any): Double = {
+    val t = attempt(errors, name) {
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    spark.catalog.clearCache()
+    t
+  }
+
+  /** `body`, or -1 with its error recorded under `name`. NonFatal only:
+    * after a fatal error (OOM) the single JVM is heap-thrashed and every
+    * later timing would be laundered into the artifact, so it ends the
+    * run loudly instead.
+    */
+  private def attempt(errors: mutable.Map[String, String], name: String)(
+      body: => Double): Double =
+    try body catch { case NonFatal(e) =>
+      errors(name) = (e.getClass.getSimpleName + ": " +
+        Option(e.getMessage).getOrElse("")).take(160)
+        .replaceAll("""[\\"\n\r\t]""", " ")
+      -1.0
+    }
+
+  /** Untimed warm-up before a timing loop: the first timed query
+    * otherwise absorbs ~3-5 s of one-off JIT/codegen/parquet-reader
+    * warm-up, a phantom regression for whichever query runs first. One
+    * read→hash-agg→window pass warms the scan, codegen and exchange
+    * machinery the queries use.
+    */
+  private def warmUp(spark: SparkSession, dir: String): Unit =
+    try {
+      val ev = spark.read.parquet(s"$dir/events.parquet")
+      ev.groupBy(col("event_type")).count().count()
+      ev.select(row_number().over(
+        Window.partitionBy(col("event_type")).orderBy(col("event_id"))).as("rn"))
+        .filter(col("rn") === 1).count()
+    } catch { case NonFatal(_) => () }
+
+  // ---- the one cascade and its input ----
+
+  /** Writes the deterministic raw-turn corpus (seed 42, 10% hot-
+    * conversation skew) in the salted ingest layout: repartitioned on
+    * (conv_id, hour bucket), so a hot conversation spreads across files
+    * by time instead of landing in one straggler map task, while
+    * (conv, minute) groups stay file-local for map-side partial
+    * aggregation. This mirrors the raw table's days(ts)+bucket(conv_id)
+    * layout.
+    */
+  private def writeTurns(spark: SparkSession, nConvs: Long, avgTurns: Int,
+      partitions: Int, path: String): Unit =
+    TranscriptGen.generate(spark, nConvs, avgTurns, seed = 42L, hotShare = 0.1,
+        maxDeltaSecs = 15, partitions = partitions)
+      .toDF()
+      .repartition(partitions, col("conv_id"), Rollup.bucket(col("ts"), Tier.Hour))
+      .write.mode("overwrite").parquet(path)
+
+  /** Wall seconds of the production-shaped cascade over `input`: every
+    * tier lands in parquet under `out` as the pipeline's commits do (no
+    * cache() — caching the tiers benchmarks the allocator, not the
+    * engine).
+    */
+  private def cascade(spark: SparkSession, input: String, out: String): Double = {
+    val turns = spark.read.parquet(input)
+    val t0 = System.nanoTime()
+    Rollup.rollupRaw(turns, Tier.Minute)
+      .write.mode("overwrite").parquet(s"$out/m1")
+    Rollup.foldTier(spark.read.parquet(s"$out/m1"), Tier.Hour)
+      .write.mode("overwrite").parquet(s"$out/h1")
+    Rollup.foldTier(spark.read.parquet(s"$out/h1"), Tier.Day)
+      .write.mode("overwrite").parquet(s"$out/d1")
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  // ---- the one reusable corpus directory ----
+
+  private def corpusDir(): String = sys.env.getOrElse("SPARK_GRAFT_BIG_DIR",
+    Files.createTempDirectory("graft-corpus-").toString)
+
+  /** Runs `build` into `dir` unless the dir's `REPLICA_MARKER` equals
+    * `marker`, which names the mode and every input of the build; returns
+    * whether it built. The marker is removed before a build and written
+    * after it, so a corpus built for other inputs, or half built, is
+    * rebuilt — never measured under this run's labels.
+    */
+  private[graft] def corpus(dir: String, marker: String)(build: => Unit): Boolean = {
+    val m = Paths.get(dir, "REPLICA_MARKER")
+    val stale = !(Files.exists(m) && Files.readString(m) == marker)
+    if (stale) {
+      Files.createDirectories(m.getParent)
+      Files.deleteIfExists(m)
+      build
+      Files.writeString(m, marker)
+    }
+    stale
+  }
+
+  // ---- `scale` ----
+
+  /** Queries `scale` leaves out: the all-pairs oracle baselines, O(n²)
+    * by design (their LSH/IVF twins are the scale paths measured), and
+    * the TPC-H queries, whose tables [[replicate]] does not grow.
+    */
+  private[graft] val notScaled: Set[String] = Set(
+    "q_embed_cosine_topk", "q_embed_neardup", "q_ngram_jaccard",
+    "q1_agg", "q_brand_revenue", "q_region_rollup")
+
+  private def scale(sfDir: String): Unit = {
+    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
+    val queries = SparkEntry.selected() -- notScaled
+    // single JVM at a large factor: a long full-GC pause can outlast the
+    // default heartbeat tolerance and kill the local executor by
+    // TIMEOUT, not memory; a real cluster spreads the heap and keeps the
+    // defaults
+    val spark = GraftSession(extra = Map(
+      "spark.executor.heartbeatInterval" -> "60s",
+      "spark.network.timeout" -> "600s"))
+    val big = corpusDir()
+    scaleCorpus(spark, sfDir, big, factor)
+    // a query failing at scale is a result to record (-1), not a reason
+    // to abort a long two-scale run with nothing written
+    def pass(dir: String): Map[String, Double] = {
+      val errors = mutable.LinkedHashMap.empty[String, String]
+      val t = timeAll(spark, dir, queries, runs = 1, errors)
+      errors.foreach { case (q, e) => System.err.println(s"[bench] $q failed at $dir: $e") }
+      t
+    }
+    val t1 = pass(sfDir)
+    val tN = pass(big)
+    val entries = queries.keys.toSeq.sorted.map { q =>
+      // a failed side makes the ratio meaningless: propagate -1
+      val ratio = if (t1(q) < 0 || tN(q) < 0) -1.0 else tN(q) / math.max(t1(q), 1e-9)
+      f""""$q":{"t1":${t1(q)}%.2f,"t10":${tN(q)}%.2f,"ratio":$ratio%.1f}"""
+    }
+    println(s"""{"sf_dir":"$sfDir","factor":$factor,"queries":{${entries.mkString(",")}}}""")
+    spark.stop()
+  }
+
+  private[graft] def scaleCorpus(spark: SparkSession, src: String, dir: String,
+      factor: Int): Boolean =
+    corpus(dir, s"mode=scale src=$src factor=$factor content=perturbed-v2-permuted")(
+      replicate(spark, src, dir, factor))
+
+  /** `factor` copies of events, documents and embeddings, the way a real
+    * corpus grows: each copy gets a new id range and new content.
+    *
+    * Events shift user_id (new conversations of unchanged length) and
+    * event_id (keeps id-derived tool assignment identical per copy).
+    * Strides derive from the data (max id + 1): the datagen's id ranges
+    * grow with SF, and a fixed stride narrower than them merges users
+    * across copies. `fromEvents` derives conv_id with lpad(user_id, 6),
+    * which TRUNCATES ids past 6 digits — ids past 10^6 merge ~100 users
+    * per conversation and fabricate quadratic "regressions" in every
+    * per-conversation join, so the shifted range is checked.
+    *
+    * Content is perturbed per copy ([[permuted]], [[rotatedVec]]; copy 0
+    * is the identity): verbatim copies would make every document and
+    * vector a member of a factor-sized exact-duplicate clique, and every
+    * near-dup family's output would grow quadratically in the factor —
+    * output blowup, not engine scaling. Doc/vec strides leave headroom
+    * for the +10^6 planted-duplicate shift of the dupedDocs/dupedVecs
+    * fixtures.
+    */
+  private def replicate(spark: SparkSession, src: String, dst: String,
+      factor: Int): Unit = {
+    def copies(table: String, parts: Int)(f: (DataFrame, Int) => DataFrame): Unit = {
+      val df = spark.read.parquet(s"$src/$table.parquet")
+      (0 until factor).map(f(df, _)).reduce(_ unionByName _)
+        .repartition(parts).write.mode("overwrite").parquet(s"$dst/$table.parquet")
+    }
+    def maxOf(table: String, c: String): Long =
+      spark.read.parquet(s"$src/$table.parquet").agg(max(col(c))).head().getLong(0)
+
+    val userStride = maxOf("events", "user_id") + 1
+    val eventStride = maxOf("events", "event_id") + 1
+    require(factor * userStride - 1 < 1000000L,
+      s"replication would push user ids past lpad(6)'s domain " +
+        s"(stride=$userStride, factor=$factor): conv ids would collide")
+    copies("events", 64)((ev, i) =>
+      ev.withColumn("user_id", col("user_id") + lit(i * userStride))
+        .withColumn("event_id", col("event_id") + lit(i * eventStride)))
+    val docStride = maxOf("documents", "doc_id") + 1000001L
+    copies("documents", 32)((d, i) =>
+      d.withColumn("doc_id", col("doc_id") + lit(i * docStride))
+        .withColumn("text", permuted(col("text"), i)))
+    val vecStride = maxOf("embeddings", "vec_id") + 1000001L
+    copies("embeddings", 32)((e, i) =>
+      e.withColumn("vec_id", col("vec_id") + lit(i * vecStride))
+        .withColumn("embedding", rotatedVec(col("embedding"), i)))
+  }
+
+  /** Per-copy character substitution, a seeded random PERMUTATION of
+    * each character class: copies share length, whitespace and token
+    * shape with the base text but have disjoint shingle sets. Not a
+    * Caesar shift: the engine's Fingerprint is a character polynomial,
+    * so a constant shift becomes a constant modular shift of every
+    * same-length shingle's fingerprint and inflates LSH band collisions
+    * copy-wide.
+    */
+  private def permuted(text: Column, i: Int): Column =
+    if (i == 0) text else {
+      def shuf(s: String, salt: Int) =
+        new scala.util.Random(i * 131 + salt).shuffle(s.toList).mkString
+      val lower = "abcdefghijklmnopqrstuvwxyz"
+      val upper = lower.toUpperCase
+      val digits = "0123456789"
+      translate(text, lower + upper + digits,
+        shuf(lower, 1) + shuf(upper, 2) + shuf(digits, 3))
+    }
+
+  /** Per-copy cyclic rotation of the embedding array: norm and component
+    * distribution are kept, cross-copy cosines ≈ 0 for generic vectors.
+    */
+  private def rotatedVec(vec: Column, i: Int): Column = {
+    val d = size(vec)
+    val k = lit(i) % d
+    when(k === 0, vec)
+      .otherwise(concat(slice(vec, k + 1, d - k), slice(vec, lit(1), k)))
+  }
+
+  // ---- `scaling` ----
+
+  /** The levels of 2, 8 and 32 cores a box of `nproc` cores can run
+    * without oversubscribing, and the N→4N pairs among them.
+    */
+  private[graft] def scalingLevels(nproc: Int): Seq[Int] = Seq(2, 8, 32).filter(_ <= nproc)
+  private[graft] def scalingPairs(levels: Seq[Int]): Seq[(Int, Int)] =
+    levels.filter(n => levels.contains(4 * n)).map(n => n -> 4 * n)
+
+  /** Every level gets the same shuffle-partition count, so only core
+    * count varies (otherwise the low-core run also gets bigger, spill-
+    * prone partitions); a 16m advisory size keeps the small 1h/1d fold
+    * stages from coalescing to 1-2 partitions.
+    */
+  private def scalingSession(cores: Int): SparkSession =
+    GraftSession(cores.toString, Map(
+      "spark.app.name" -> s"graft-scaling-$cores",
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m"))
+
+  /** The input of the recorded run (BENCH/BASELINE.md). */
+  private val (scalingConvs, scalingTurns) = (60000L, 2400)
+
+  private def scaling(): Unit = {
+    val nproc = Runtime.getRuntime.availableProcessors
+    val levels = scalingLevels(nproc)
+    val pairs = scalingPairs(levels)
+    if (pairs.isEmpty) {
+      println(s"[bench] scaling: $nproc cores run none of the N->4N pairs " +
+        "local[2]->local[8], local[8]->local[32]; nothing measured, " +
+        "BENCH/BASELINE.md left as it is")
+      return
+    }
+    val loadStart = loadStamp()
+    val dir = corpusDir()
+    val input = s"$dir/turns"
+    val gen = scalingSession(levels.last)
+    corpus(dir, s"mode=scaling convs=$scalingConvs avg_turns=$scalingTurns " +
+      "max_delta_secs=15 seed=42 partitions=128")(
+      writeTurns(gen, scalingConvs, scalingTurns, 128, input))
+    val nTurns = gen.read.parquet(input).count()
+    gen.stop()
+    val runs = levels.map { c =>
+      val s = scalingSession(c)
+      val out = Files.createTempDirectory(s"graft-casc-$c-").toString
+      cascade(s, input, out) // warm-up: JIT + codegen + page cache
+      val r = Seq.fill(5)(cascade(s, input, out))
+      s.stop()
+      c -> r
+    }.toMap
+    // median of 5: robust to the run-to-run variance best-of-N hides
+    val secs = runs.map { case (c, r) => c -> r.sorted.apply(r.size / 2) }
+    def thr(c: Int) = nTurns / secs(c)
+    def eff(p: (Int, Int)) = secs(p._1) / secs(p._2) / 4.0
+
+    val md = (Seq(
+      "# BENCH — measured scaling (graft.Bench scaling)", "",
+      "The production-shaped cascade (read raw parquet → write 1m tier →",
+      s"fold+write 1h → fold+write 1d) over one on-disk input: $nTurns turns,",
+      s"$scalingConvs conversations of ~$scalingTurns turns, max delta 15 s,",
+      "seed 42, 10% hot-conversation skew. Per level one warm-up cascade, then",
+      "the median of 5; 64 shuffle partitions at every level, so only the",
+      s"core count varies. nproc = $nproc; load at start {$loadStart},",
+      s"at end {${loadStamp()}}.", "",
+      "| parallelism | wall (s) | throughput (rolled-up turns/sec) | runs (s) |",
+      "|---|---|---|---|") ++
+      levels.map(c => f"| local[$c] | ${secs(c)}%.2f | ${thr(c)}%.0f | " +
+        runs(c).map(t => f"$t%.1f").mkString(", ") + " |") ++
+      Seq("", "Scaling efficiency N→4N = (T_N / T_4N) / 4, target ≥ 0.8 (BASELINE.json):") ++
+      pairs.map(p => f"- local[${p._1}]→local[${p._2}]: ${eff(p)}%.3f")
+    ).mkString("", "\n", "\n")
+    Files.createDirectories(Paths.get("BENCH"))
+    Files.writeString(Paths.get("BENCH/BASELINE.md"), md)
+    println((Seq(s""""turns":$nTurns""") ++
+      levels.map(c => s""""t${c}_sec":${secs(c)}""") ++
+      levels.map(c => s""""thr$c":${thr(c)}""") ++
+      pairs.map(p => s""""efficiency_${p._1}_${p._2}":${eff(p)}""")).mkString("{", ",", "}"))
+  }
 }

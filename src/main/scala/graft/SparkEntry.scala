@@ -27,6 +27,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Rollup.rollupRaw(turns(spark, "/root/testdata/sf0.001"), Tier.Minute)
 
+  /** The queries a comma-separated name list selects (`SPARK_GRAFT_ONLY`
+    * by default); unset or blank selects all. Throws
+    * `IllegalArgumentException` listing every name not in [[queries]],
+    * so a misspelt name never silently selects nothing.
+    */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val names = only.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty,
+      s"SPARK_GRAFT_ONLY names undeclared queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) all else all.filter(kv => names.contains(kv._1))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- transcript derivation itself (per-turn text equality, W5) ---

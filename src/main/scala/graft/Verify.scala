@@ -5,16 +5,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional SPARK_GRAFT_ONLY subset for iterating on one query's
+    // oracle (same selector as Bench); unset, every query is dumped
+    val queries = SparkEntry.selected()
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for iterating on one query's
-    // oracle (same contract as ScaleSpot); the driver sets nothing
-    // and gets the full surface
-    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    def selected(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -33,7 +29,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+    val json = SparkEntry.oracleSql.filter(kv => queries.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -298,15 +298,27 @@ object Similarity {
     } finally { vecs.unpersist(); () }
   }
 
+  /** The IVF candidate builders' precondition, checked on their
+    * materialized `id` column (so the probe's scan is the one the
+    * candidates reuse): throws `IllegalArgumentException` naming
+    * `idCol` and one repeated id.
+    */
+  private def requireUniqueIds(ids: DataFrame, idCol: String): Unit = {
+    val dup = ids.groupBy(col("id")).count().filter(col("count") > 1)
+      .limit(1).collect()
+    require(dup.isEmpty,
+      s"IVF needs a unique $idCol per row; ${dup.head.get(0)} repeats")
+  }
+
   /** Candidate pairs sharing an inverted list (top-1 assignment) —
     * the IVF analog of [[lshPairs]]: equi self-join on cid, never n².
     * Identical vectors share every centroid similarity, so exact
     * duplicates always land in the same list — planted-copy recovery
     * is provable, like the LSH path.
     *
-    * Precondition: `idCol` is unique per row. The self-join emits each
-    * pair once without a `distinct` only because every id has exactly
-    * one home list; a repeated id yields repeated (or self) pairs.
+    * Precondition, checked before any candidate is built: `idCol` is
+    * unique per row. The self-join emits each pair once without a
+    * `distinct` only because every id has exactly one home list.
     */
   def ivfPairs(embeddings: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, iters: Int = 3): DataFrame = {
@@ -322,6 +334,7 @@ object Similarity {
       .withColumn("cid", element_at(ivfProbeIds(col("v"), cents, 1), 1))
       .select(col("cid"), col("id"))
       .localCheckpoint(eager = false)
+    requireUniqueIds(assigned, idCol)
     assigned.select(col("cid"), col("id").as("id1"))
       .join(assigned.select(col("cid"), col("id").as("id2")), Seq("cid"))
       .filter(col("id1") < col("id2"))
@@ -336,10 +349,9 @@ object Similarity {
     * on (qid, nid). Same output shape as [[cosineTopK]]/[[lshTopK]];
     * recall < 1 by construction, tuned by nlist/nprobe.
     *
-    * Precondition: `idCol` is unique per row. Candidates carry no
-    * `distinct` because a unique id has one home list, and the score
-    * joins attach vectors by id; a repeated id yields duplicate
-    * candidates and mis-joined scores.
+    * Precondition, checked before any candidate is built: `idCol` is
+    * unique per row. Candidates carry no `distinct` because a unique id
+    * has one home list, and the score joins attach vectors by id.
     */
   def ivfTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       k: Int, nlist: Int = 16, nprobe: Int = 4, iters: Int = 3,
@@ -364,6 +376,7 @@ object Similarity {
       .withColumn("n", norm(col("v")))
       .withColumn("pids", ivfProbeIds(col("v"), cents, nprobe))
       .localCheckpoint(eager = false)
+    requireUniqueIds(vecs, idCol)
     val lists = vecs.select(element_at(col("pids"), 1).as("cid"),
       col("id").as("nid"))
     val probes = vecs.select(col("id").as("qid"),

@@ -269,6 +269,24 @@ class SimilaritySpec extends SparkSuite {
       rows.map(_._3).distinct.size == rows.size))
   }
 
+  test("IVF rejects a repeated id before building candidates") {
+    // one vector re-sent under an existing id: unchecked, it would land
+    // in its list twice and yield duplicate (or self) candidates
+    val dupId = emb.agg(min($"vec_id")).as[Long].head()
+    val dv = emb.unionByName(emb.filter($"vec_id" =!= dupId).limit(1)
+      .withColumn("vec_id", lit(dupId)))
+    val calls = Seq[() => Any](
+      () => Similarity.ivfPairs(dv, "vec_id", "embedding", nlist = 8, iters = 2)
+        .collect(),
+      () => Similarity.ivfTopK(dv, "vec_id", "embedding", k = 3, nlist = 8,
+        nprobe = 3, iters = 2).collect())
+    calls.foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("vec_id") && e.getMessage.contains(dupId.toString),
+        e.getMessage)
+    }
+  }
+
   test("ivfTopKAuto returns dense ranked results on the fixture") {
     val out = Similarity.ivfTopKAuto(emb, "vec_id", "embedding", k = 3)
       .as[(Long, Long, Long)].collect()
