@@ -22,7 +22,9 @@ import graft.rollup.Rollup
   *    generated input (see [[writeTurns]]).
   *  - `scale`: every query but [[notScaled]] at the SF and at
   *    `SPARK_GRAFT_SCALE_FACTOR` (default 10) times it, as one JSON line
-  *    `{"sf_dir","factor","queries":{q:{"t1","t10","ratio"}}}`. A
+  *    `{"sf_dir","factor","queries":{q:{"t1","t10","ratio"}}}`. `t10`
+  *    is the time at `factor` times the SF, whatever the factor (the key
+  *    is kept for output compatibility): read `factor` with it. A
   *    superlinear surprise the small SF cannot show reads as a ratio well
   *    above the factor.
   *  - `scaling`: the cascade at N and 4N cores over one input, written to

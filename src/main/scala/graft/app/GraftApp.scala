@@ -22,7 +22,7 @@ import graft.rollup.TranscriptStore
   *   compact <warehouse> [minFiles]            rewrite multi-file partitions
   *   cluster <warehouse> [filesPerPartition]   sort-cluster on conv_id
   *   vacuum  <warehouse> [retainSnapshots]     reclaim unreferenced bytes
-  *   publish <warehouse>                       publish serving dirs + watermarks
+  *   publish <warehouse>                       pin tier snapshots for routed reads
   *   status  <warehouse>                       snapshots + tier row counts
   *   export  <warehouse> <table> <outDir> [csv|parquet]
   *                                             debug export (S10: the

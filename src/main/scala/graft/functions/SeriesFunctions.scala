@@ -126,7 +126,7 @@ object SeriesFunctions {
     * [[graft.plans.TierRouting.RouteToTier]] rewrites: grouped on
     * (key, tier_bucket(ts)) with a Count(1) aggregate. With a
     * registered fresh warehouse and `keyCol = "conv_id"`, a 1h turn-
-    * rate over a month therefore scans `serve/tier_1h` partials
+    * rate over a month therefore scans the pinned 1h tier's partials
     * instead of 10¹² raw turns (TierRoutingSpec pins the routed scan
     * AND equality with the raw plan); without one it still computes
     * correctly from raw. The rate projection sits ABOVE the

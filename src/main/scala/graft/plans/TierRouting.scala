@@ -18,6 +18,7 @@ import org.apache.spark.sql.{Column, GraftShims, SparkSessionExtensions}
 
 import graft.model.Tier
 import graft.rollup.Rollup
+import graft.table.ChronoTable
 
 /** Continuous-aggregate query routing (SURVEY.md §4 item 3, the
   * optimizer-stretch goal): a logical [[Rule]] that rewrites
@@ -44,11 +45,11 @@ import graft.rollup.Rollup
   *    ... — cannot be answered by the tier table, so the rule
   *    refuses (a dropped Filter silently returning unfiltered totals
   *    is the classic materialized-view-matching bug).
-  *  - the serving directory must exist AND be fresh: `publishServing`
-  *    stamps the raw-table snapshot each tier reflects into
-  *    `serve/WATERMARKS`; the rule compares that against the raw
-  *    ChronoTable's CURRENT snapshot and refuses to serve stale
-  *    aggregates.
+  *  - the tier must be published AND fresh: `publishServing` pins
+  *    each tier's snapshot with the raw-table snapshot it reflects
+  *    ([[pinsPath]]); the rule compares that against the raw
+  *    ChronoTable's CURRENT snapshot, refuses to serve stale
+  *    aggregates, and scans the pinned snapshot's live files.
   *  - when the requested width has no (fresh) tier, the rule folds
   *    the coarsest FINER tier whose width divides the request — a 1d
   *    query with no 1d tier re-buckets the 1h tier, still orders of
@@ -100,7 +101,7 @@ object TierRouting {
     * the fixed-width 1d tier buckets are UTC days, and month starts
     * align with UTC day starts only in a UTC-offset-zero zone.
     */
-  private[plans] def isUtcZone(zoneId: String): Boolean =
+  private[graft] def isUtcZone(zoneId: String): Boolean =
     java.time.ZoneId.of(zoneId).normalized() == java.time.ZoneOffset.UTC
 
   /** Marker + arithmetic: floor `ts` to a bucket of width `spec` —
@@ -171,34 +172,29 @@ object TierRouting {
 
   def clearRegistry(): Unit = catalog.clear()
 
-  private def tierDir(warehouse: String, tierName: String): String =
-    s"$warehouse/serve/tier_${tierName}"
+  /** A published tier: its snapshot and the raw snapshot id it fully reflects. */
+  final case class ServingPin(snapshotId: Long, rawSnapshotId: Long)
 
-  /** Freshness stamp location — written by TranscriptStore
-    * .publishServing as `<tier>=<raw snapshot id fully reflected>`
-    * lines. Missing file / missing tier line → 0 (never fresh).
+  /** Written by TranscriptStore.publishServing in one atomic move: a
+    * `<tier> <tier snapshot id> <raw snapshot id>` line per tier.
     */
-  def watermarksPath(warehouse: String): java.nio.file.Path =
-    Paths.get(warehouse, "serve", "WATERMARKS")
+  def pinsPath(warehouse: String): java.nio.file.Path = Paths.get(warehouse, "serve", "PINS")
 
-  private def servedWatermark(warehouse: String, tierName: String): Long = {
-    val p = watermarksPath(warehouse)
-    if (!Files.exists(p)) 0L
-    else Files.readAllLines(p).asScala
-      .map(_.split("=", 2))
-      .collectFirst { case Array(t, sid) if t == tierName => Try(sid.trim.toLong).getOrElse(0L) }
-      .getOrElse(0L)
-  }
+  /** The pins of the last publish by tier name. A missing file pins
+    * nothing, nor does a line of another shape (an old-format one).
+    */
+  def servingPins(warehouse: String): Map[String, ServingPin] =
+    Try(Files.readAllLines(pinsPath(warehouse)).asScala.flatMap(_.split(" ") match {
+      case Array(t, sid, raw) => Try(t -> ServingPin(sid.toLong, raw.toLong)).toOption
+      case _ => None
+    }).toMap).getOrElse(Map.empty)
 
   /** The raw ChronoTable's CURRENT snapshot — the id serving data must
     * have consumed to be fresh. 0 (→ never route) when the warehouse
     * has no tracked raw table.
     */
-  private def rawCurrentSid(warehouse: String): Long = {
-    val p = Paths.get(warehouse, "raw_turns", "CURRENT")
-    if (!Files.exists(p)) 0L
-    else Try(Files.readString(p).trim.toLong).getOrElse(0L)
-  }
+  private def rawCurrentSid(warehouse: String): Long =
+    Try(Files.readString(Paths.get(warehouse, "raw_turns", "CURRENT")).trim.toLong).getOrElse(0L)
 
   object RouteToTier extends Rule[LogicalPlan] {
 
@@ -311,12 +307,14 @@ object TierRouting {
       * tier first, else fold-from-finer; calendar widths (months /
       * years) are served by ANY tier because every tier divides a UTC
       * day and months start on day boundaries (no DST in UTC).
-      * Freshness = published watermark ≥ the raw table's CURRENT
-      * snapshot, and the serve dir actually readable.
+      * Freshness = the pin reflects at least the raw table's CURRENT
+      * snapshot; the plan reads the pinned snapshot's live files with
+      * its recorded schema (a snapshot without files is skipped).
       */
     private def pickServingTier(wh: String, months: Option[Int],
         fixedUs: Long): Option[(LogicalPlan, Tier)] = {
       val needSid = rawCurrentSid(wh)
+      lazy val pins = servingPins(wh)
       if (needSid <= 0L) None
       else Tier.cascade
         .filter { t =>
@@ -325,11 +323,10 @@ object TierRouting {
         }
         .sortBy(-_.millis) // coarsest usable first
         .view
-        .flatMap { t =>
-          if (servedWatermark(wh, t.name) < needSid) None
-          else Try(SparkSession.active.read.parquet(tierDir(wh, t.name))
-            .queryExecution.analyzed).toOption.map(p => (p, t))
-        }
+        .flatMap(t => pins.get(t.name).filter(_.rawSnapshotId >= needSid).flatMap(pin =>
+          Try(ChronoTable(SparkSession.active, s"$wh/tier_${t.name}", Seq("ts_day"))
+            .read(pin.snapshotId).queryExecution.analyzed).toOption
+            .filter(_.output.nonEmpty).map(_ -> t)))
         .headOption
     }
 
@@ -446,7 +443,6 @@ object TierRouting {
           if months.isEmpty || isUtcZone(tb.timeZoneId)
           (tierPlan, served) <- pickServingTier(wh, months, fixedUs)
           out = tierPlan.output.map(a => a.name -> a).toMap
-          if out.contains("conv_id") && out.contains("bucket_ts")
           // every Filter conjunct must translate onto the tier scan
           // (conv_id predicates and bucket-aligned ts ranges) or the
           // whole rewrite bails to the raw plan

@@ -2,11 +2,12 @@ package graft.rollup
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StructType}
 
 import graft.model.{Schemas, Tier}
+import graft.plans.TierRouting
 import graft.table.ChronoTable
 
 /** The batch-incremental ingest → rollup → retention pipeline over
@@ -79,6 +80,7 @@ final class TranscriptStore(
     *   join alone only screens against already-committed rows.
     */
   def ingest(turns: DataFrame, dedupe: Boolean = false): Long = {
+    requireUtcSession()
     val base = turns.select(turnCols.map(col): _*)
     val deduped = if (!dedupe) base else {
       // tiebreak: duplicate keys with EQUAL ts but different payloads
@@ -105,13 +107,22 @@ final class TranscriptStore(
     val sid = raw.append(partitioned, Map("op_detail" -> "ingest"))
     // counting the committed rows from the footers spares a second run
     // of the whole dedupe plan; one lineage file, as an aggregate writes
-    val perDay = addedRowsPerDay(raw, sid).map(rows => spark.createDataFrame(
-        rows.map { case (day, n) => (day, n, 0L) }).toDF("ts_day", "rows", "rollup_rows")
-        .coalesce(1))
+    val perDay = addedRowsPerDay(raw, sid)
+      .map(rows => perDayFrame(rows.map { case (day, n) => (day, n, 0L) }))
       .getOrElse(partitioned.groupBy("ts_day").agg(
         count(lit(1)).as("rows"), lit(0L).as("rollup_rows")))
     logMetrics("ingest", "raw", sid, perDay)
     sid
+  }
+
+  /** `ts_day` is formatted in the session zone but the 1d bucket floors
+    * at UTC midnight: in any zone but UTC a bucket spans two day
+    * partitions and the recomputed days count it twice.
+    */
+  private def requireUtcSession(): Unit = {
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    if (!TierRouting.isUtcZone(zone)) throw new IllegalStateException(
+      s"TranscriptStore needs a UTC session time zone, got $zone")
   }
 
   /** The `ts_day` partition value of a raw or tier file. */
@@ -154,8 +165,8 @@ final class TranscriptStore(
   // incremental rollup cascade
   // ------------------------------------------------------------------
 
-  private def consumedSrc(t: ChronoTable): Long =
-    t.currentSnapshot.flatMap(_.summary.get("consumed_src")).map(_.toLong).getOrElse(0L)
+  private def consumedSrc(s: Option[ChronoTable.Snapshot]): Long =
+    s.flatMap(_.summary.get("consumed_src")).map(_.toLong).getOrElse(0L)
 
   private def withDay(df: DataFrame): DataFrame =
     df.withColumn("ts_day", date_format(col("bucket_ts"), "yyyy-MM-dd"))
@@ -173,83 +184,81 @@ final class TranscriptStore(
     * of the files it committed.
     */
   def rollupIncremental(): Map[String, Long] = {
+    requireUtcSession()
     var report = Map.empty[String, Long]
 
-    // --- raw → 1m: fold delta partials into existing buckets ---
-    val rawCur = raw.currentSnapshotId
-    val c1m = consumedSrc(tier1m)
-    if (c1m < rawCur) {
-      val incFiles = raw.incrementalFiles(c1m, rawCur)
-      if (incFiles.nonEmpty) {
-        val partials = Rollup.rollupRaw(raw.readIncremental(c1m, rawCur), Tier.Minute)
-        val days = incFiles.map(dayOf).toSet
-        val base =
-          if (!tier1m.liveFiles().exists(f => days(dayOf(f)))) partials
-          else tier1m.read()
-            .filter(col("ts_day").isin(days.toSeq: _*))
-            .select(tierCols.map(col): _*)
-            .unionByName(partials)
-        val merged = withDay(Rollup.foldTier(base, Tier.Minute)).cache()
-        val sid = tier1m.overwritePartitions(
-          p => days.contains(p.getOrElse("ts_day", "")),
-          Some(merged), op = "merge",
-          summary = Map("consumed_src" -> rawCur.toString,
-            "affected_days" -> days.toSeq.sorted.mkString(",")))
-        logTierMetrics("rollup_1m", "tier_1m", sid, merged)
-        report += ("1m" ->
-          addedRowsPerDay(tier1m, sid).fold(merged.count())(_.map(_._2).sum))
-        merged.unpersist()
-      } else {
-        // empty increment: just advance the watermark atomically
-        tier1m.overwritePartitions(_ => false, None, op = "noop",
-          summary = Map("consumed_src" -> rawCur.toString))
-      }
-    }
-
-    // --- finer tier → coarser tier: recompute affected day partitions.
-    // Besides the algebraic metric folds, each coarser bucket stores a
-    // Gorilla chunk of the finer tier's (bucket_ts, text_len_sum)
-    // series — the north-star "compressed rolled points as binary
-    // chunk columns". Recomputing whole partitions keeps the chunk
-    // deterministic (ChunkAgg sorts in finish) and idempotent. ---
-    def foldStep(src: ChronoTable, dst: ChronoTable, to: Tier, label: String): Unit = {
+    // bring `dst` up to `src`'s CURRENT: `rows(consumed, srcCur, days)`
+    // recomputes the tier rows of the increment's affected days
+    def step(src: ChronoTable, dst: ChronoTable, label: String)(
+        rows: (Long, Long, Set[String]) => DataFrame): Unit = {
       val srcCur = src.currentSnapshotId
-      val cDst = consumedSrc(dst)
-      if (cDst < srcCur) {
-        val newFiles = src.incrementalFiles(cDst, srcCur)
-        if (newFiles.nonEmpty) {
-          val days = newFiles.map(dayOf).toSet
-          // source partitions are fully merged → recompute, don't merge
-          val srcRows = src.read()
-            .filter(col("ts_day").isin(days.toSeq: _*))
-            .select(tierCols.map(col): _*)
-          val aggs = Rollup.foldAggs :+
-            graft.compress.ChunkCodec.chunkEncode(
-              unix_micros(col("bucket_ts")),
-              col("text_len_sum").cast("double")).as("chunk")
-          val folded = withDay(
-            srcRows
-              .groupBy(col("conv_id"), Rollup.bucket(col("bucket_ts"), to).as("bucket_ts"))
-              .agg(aggs.head, aggs.tail: _*)).cache()
-          val sid = dst.overwritePartitions(
-            p => days.contains(p.getOrElse("ts_day", "")),
-            Some(folded), op = "merge",
-            summary = Map("consumed_src" -> srcCur.toString,
-              "affected_days" -> days.toSeq.sorted.mkString(",")))
-          logTierMetrics(s"rollup_$label", s"tier_$label", sid, folded)
-          report += (label ->
-            addedRowsPerDay(dst, sid).fold(folded.count())(_.map(_._2).sum))
-          folded.unpersist()
-        } else {
-          dst.overwritePartitions(_ => false, None, op = "noop",
-            summary = Map("consumed_src" -> srcCur.toString))
+      val consumed = consumedSrc(dst.currentSnapshot)
+      val stamp = Map("consumed_src" -> srcCur.toString)
+      if (consumed < srcCur) {
+        val files = src.incrementalFiles(consumed, srcCur)
+        // empty increment: just advance the watermark atomically
+        if (files.isEmpty) dst.overwritePartitions(_ => false, None, op = "noop", summary = stamp)
+        else {
+          val days = files.map(dayOf).toSet
+          report += label -> commitTier(dst, label, rows(consumed, srcCur, days), days, stamp)
         }
       }
     }
 
-    foldStep(tier1m, tier1h, Tier.Hour, "1h")
-    foldStep(tier1h, tier1d, Tier.Day, "1d")
+    // raw → 1m: fold delta partials into existing buckets
+    step(raw, tier1m, "1m") { (after, until, days) =>
+      val partials = Rollup.rollupRaw(raw.readIncremental(after, until), Tier.Minute)
+      val base = if (!tier1m.liveFiles().exists(f => days(dayOf(f)))) partials
+        else tier1m.read().filter(col("ts_day").isin(days.toSeq: _*))
+          .select(tierCols.map(col): _*).unionByName(partials)
+      Rollup.foldTier(base, Tier.Minute)
+    }
+
+    // finer tier → coarser tier: recompute affected day partitions.
+    // Besides the algebraic metric folds, each coarser bucket stores a
+    // Gorilla chunk of the finer tier's (bucket_ts, text_len_sum)
+    // series — the north-star "compressed rolled points as binary
+    // chunk columns". Recomputing whole partitions keeps the chunk
+    // deterministic (ChunkAgg sorts in finish) and idempotent; the
+    // source partitions are fully merged → recompute, don't merge.
+    def fold(src: ChronoTable, to: Tier)(days: Set[String]): DataFrame = {
+      val aggs = Rollup.foldAggs :+ graft.compress.ChunkCodec.chunkEncode(
+        unix_micros(col("bucket_ts")), col("text_len_sum").cast("double")).as("chunk")
+      src.read()
+        .filter(col("ts_day").isin(days.toSeq: _*))
+        .select(tierCols.map(col): _*)
+        .groupBy(col("conv_id"), Rollup.bucket(col("bucket_ts"), to).as("bucket_ts"))
+        .agg(aggs.head, aggs.tail: _*)
+    }
+
+    step(tier1m, tier1h, "1h")((_, _, days) => fold(tier1m, Tier.Hour)(days))
+    step(tier1h, tier1d, "1d")((_, _, days) => fold(tier1h, Tier.Day)(days))
     report
+  }
+
+  /** Replace `dst`'s `days` partitions with `rows` in one commit stamped
+    * `stamp`, append its lineage rows, and return its row count. Rows
+    * per day are the footer counts the commit recorded, rolled turns per
+    * day an observation of the write itself: no second job reads `rows`.
+    */
+  private def commitTier(dst: ChronoTable, label: String, rows: DataFrame,
+      days: Set[String], stamp: Map[String, String]): Long = {
+    val sorted = days.toSeq.sorted
+    val written = Observation()
+    val perDay = sorted.flatMap { d =>
+      val on = col("ts_day") === d
+      Seq(count(when(on, 1)).as(s"rows_$d"), sum(when(on, col("turn_cnt"))).as(s"turns_$d"))
+    }
+    val sid = dst.overwritePartitions(p => days.contains(p.getOrElse("ts_day", "")),
+      Some(withDay(rows).observe(written, perDay.head, perDay.tail: _*)), op = "merge",
+      summary = stamp + ("affected_days" -> sorted.mkString(",")))
+    val observed = written.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+    // a footer that went unread leaves the count of the write itself
+    val rowsPerDay = addedRowsPerDay(dst, sid)
+      .getOrElse(sorted.map(d => d -> observed(s"rows_$d")).filter(_._2 > 0))
+    logMetrics(s"rollup_$label", s"tier_$label", sid,
+      perDayFrame(rowsPerDay.map { case (d, n) => (d, n, observed(s"turns_$d")) }))
+    rowsPerDay.map(_._2).sum
   }
 
   /** Read a tier at its current snapshot (metric columns only); a tier
@@ -284,6 +293,10 @@ final class TranscriptStore(
         timestamp_micros(col("p.ts")).as("bucket_ts"),
         col("p.v").as("value"))
 
+  /** Every table by name; a tier's name is its [[Tier]] name. */
+  private def tables: Seq[(String, ChronoTable)] =
+    Seq("raw" -> raw, "metrics" -> metrics) ++ Tier.cascade.map(t => t.name -> tier(t))
+
   // ------------------------------------------------------------------
   // retention
   // ------------------------------------------------------------------
@@ -302,9 +315,7 @@ final class TranscriptStore(
           p => p.get("ts_day").exists(_ < cutoff),
           summary = Map("cutoff" -> cutoff))
         val after = t.livePartitions.size
-        logMetrics("retention", name, sid,
-          spark.createDataFrame(Seq((cutoff, (before - after).toLong, 0L)))
-            .toDF("ts_day", "rows", "rollup_rows"))
+        logMetrics("retention", name, sid, perDayFrame(Seq((cutoff, (before - after).toLong, 0L))))
         name -> (before - after).toLong
       }
     Seq(drop(raw, "raw"), drop(tier1m, "1m"), drop(tier1h, "1h"),
@@ -316,9 +327,7 @@ final class TranscriptStore(
     * [[vacuum]] to actually reclaim the superseded bytes.
     */
   def compactAll(minFiles: Int = 2): Map[String, Long] =
-    Seq("raw" -> raw, "1m" -> tier1m, "1h" -> tier1h, "1d" -> tier1d,
-      "metrics" -> metrics)
-      .map { case (n, t) => n -> t.compact(minFiles = minFiles) }.toMap
+    tables.map { case (n, t) => n -> t.compact(minFiles = minFiles) }.toMap
 
   /** Sort-cluster every conv_id-keyed table on its cluster key
     * (Iceberg `rewrite_data_files` with a sort order): after this,
@@ -327,27 +336,27 @@ final class TranscriptStore(
     * table has no cluster key and is skipped.
     */
   def clusterAll(filesPerPartition: Int = 1): Map[String, Long] =
-    Seq("raw" -> raw, "1m" -> tier1m, "1h" -> tier1h, "1d" -> tier1d)
-      .map { case (n, t) =>
-        n -> t.compactSorted(filesPerPartition = filesPerPartition) }.toMap
+    tables.collect { case (n, t) if t.clusterCol.isDefined =>
+      n -> t.compactSorted(filesPerPartition = filesPerPartition) }.toMap
 
   /** Reclaim bytes across every table: delete data files referenced
     * by no retained snapshot (run after [[retain]], whose partition
-    * drops are metadata-only). Returns table → (files, bytes) freed.
+    * drops are metadata-only). The tier snapshots of the last
+    * [[publishServing]] are retained too, so routed reads planned
+    * against them stay readable. Returns table → (files, bytes) freed.
     */
-  def vacuum(retainSnapshots: Int = 1): Map[String, (Long, Long)] =
-    Seq("raw" -> raw, "1m" -> tier1m, "1h" -> tier1h, "1d" -> tier1d,
-      "metrics" -> metrics)
-      .map { case (n, t) => n -> t.vacuum(retainSnapshots) }.toMap
+  def vacuum(retainSnapshots: Int = 1): Map[String, (Long, Long)] = {
+    val pins = TierRouting.servingPins(warehouse)
+    tables.map { case (n, t) =>
+      n -> t.vacuum(retainSnapshots, pins.get(n).map(_.snapshotId).toSet) }.toMap
+  }
 
   // ------------------------------------------------------------------
   // lineage + metrics
   // ------------------------------------------------------------------
 
-  private def logTierMetrics(job: String, table: String, sid: Long, tierRows: DataFrame): Unit =
-    logMetrics(job, table, sid,
-      tierRows.groupBy("ts_day").agg(
-        count(lit(1)).as("rows"), sum("turn_cnt").as("rollup_rows")))
+  private def perDayFrame(rows: Seq[(String, Long, Long)]): DataFrame =
+    spark.createDataFrame(rows).toDF("ts_day", "rows", "rollup_rows").coalesce(1)
 
   /** One lineage row per affected partition: (job, table, snapshot,
     * partition day, row count, rolled-up turn count).
@@ -364,36 +373,24 @@ final class TranscriptStore(
 
   def readMetrics(): DataFrame = metrics.read()
 
-  /** Publish the current tier snapshots as plain-parquet serving
-    * directories (`<warehouse>/serve/tier_*`) for consumers that read
-    * bare parquet — notably the TierRouting optimizer rule. Kept
-    * OUTSIDE the ChronoTable roots so a publish never clobbers the
-    * snapshot log it reads from.
-    *
-    * Also stamps `serve/WATERMARKS`: per tier, the raw-table snapshot
-    * id it fully reflects (0 when a fold in the cascade chain lags).
-    * TierRouting refuses to route to a tier whose stamp is behind the
-    * raw table's CURRENT — serving data can lag, but a routed query
-    * can never silently return stale aggregates.
+  /** Publish the tiers to routed reads by pinning their CURRENT
+    * snapshots: no data moves. One atomic write (old pins or new, never
+    * a mix; [[graft.plans.TierRouting.pinsPath]]) records per tier its
+    * snapshot id and the raw snapshot id that snapshot fully reflects
+    * (0 when a fold in the cascade chain lags). TierRouting plans the
+    * pinned snapshot's files and refuses a pin behind the raw table's
+    * CURRENT — serving can lag, but a routed query never silently
+    * returns stale aggregates; [[vacuum]] keeps the pinned snapshots.
     */
   def publishServing(): Unit = {
-    graft.model.Tier.cascade.foreach { t =>
-      readTier(t).write.mode("overwrite")
-        .parquet(s"$warehouse/serve/tier_${t.name}")
-    }
-    val fresh1m = consumedSrc(tier1m)
-    val fresh1h = if (consumedSrc(tier1h) >= tier1m.currentSnapshotId) fresh1m else 0L
-    val fresh1d = if (consumedSrc(tier1d) >= tier1h.currentSnapshotId) fresh1h else 0L
-    val p = graft.plans.TierRouting.watermarksPath(warehouse)
-    java.nio.file.Files.createDirectories(p.getParent)
-    // write-temp + ATOMIC_MOVE (same discipline as ChronoTable.commit):
-    // a concurrent reader must see either the old stamps or the new
-    // ones — never a truncated file that parses as watermark 0 and
-    // silently disables routing for the whole publish window
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    java.nio.file.Files.writeString(tmp, s"1m=$fresh1m\n1h=$fresh1h\n1d=$fresh1d\n")
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val Seq(m, h, d) = Tier.cascade.map(tier(_).currentSnapshot)
+    def sid(s: Option[ChronoTable.Snapshot]) = s.fold(0L)(_.id)
+    // a coarser tier reflects what its finer one does once it consumed
+    // the finer tier's CURRENT
+    val r1m = consumedSrc(m)
+    val r1h = if (consumedSrc(h) >= sid(m)) r1m else 0L
+    val r1d = if (consumedSrc(d) >= sid(h)) r1h else 0L
+    ChronoTable.atomicWrite(TierRouting.pinsPath(warehouse), Seq("1m" -> (m, r1m), "1h" -> (h, r1h), "1d" -> (d, r1d))
+      .map { case (t, (s, r)) => s"$t ${sid(s)} $r\n" }.mkString)
   }
 }

@@ -145,7 +145,6 @@ final class ChronoTable private (
     }
 
   private def writeSnapshot(s: Snapshot): Unit = {
-    Files.createDirectories(snapDir)
     val node = mapper.createObjectNode()
     node.put("id", s.id); node.put("parentId", s.parentId); node.put("op", s.op)
     val arr = node.putArray("files")
@@ -167,13 +166,6 @@ final class ChronoTable private (
     atomicWrite(snapDir.resolve(s"v${s.id}.json"),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
     atomicWrite(currentPtr, s.id.toString)
-  }
-
-  private def atomicWrite(target: Path, content: String): Unit = {
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
   // ------------------------------------------------------------------
@@ -517,16 +509,18 @@ final class ChronoTable private (
     * expired snapshot jsons — the byte-reclaim companion of
     * [[dropPartitions]] (which is metadata-only so time travel keeps
     * working until vacuum). Retains the `retainSnapshots` most recent
-    * snapshots up to CURRENT; snapshots "after" CURRENT (undone by a
+    * snapshots up to CURRENT, and every `pinned` snapshot whatever its
+    * age (a published reference, as Iceberg's `expire_snapshots` keeps
+    * tagged snapshots); other snapshots "after" CURRENT (undone by a
     * rollback) are vacuumed too. Returns (files deleted, bytes
     * reclaimed).
     */
-  def vacuum(retainSnapshots: Int = 1): (Long, Long) = {
+  def vacuum(retainSnapshots: Int = 1, pinned: Set[Long] = Set.empty): (Long, Long) = {
     require(retainSnapshots >= 1, "must retain at least the current snapshot")
     val cur = currentSnapshotId
     if (cur == 0L) return (0L, 0L)
     val keepIds = snapshotIds
-      .filter(id => id <= cur && id > cur - retainSnapshots).toSet
+      .filter(id => pinned(id) || (id <= cur && id > cur - retainSnapshots)).toSet
     val referenced = keepIds.flatMap(id => liveFiles(id).map(_.path))
     var nFiles = 0L
     var nBytes = 0L
@@ -594,10 +588,8 @@ final class ChronoTable private (
     */
   def rowCount: Option[Long] = rowCountAt(currentSnapshotId)
 
-  def setCheckpoint(name: String, lastSnapshotId: Long): Unit = {
-    Files.createDirectories(ckptPath(name).getParent)
+  def setCheckpoint(name: String, lastSnapshotId: Long): Unit =
     atomicWrite(ckptPath(name), s"""{"lastSnapshotId": $lastSnapshotId}""")
-  }
 }
 
 object ChronoTable {
@@ -643,6 +635,17 @@ object ChronoTable {
   private val MicrosTimestamp =
     LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
   private val Utf8String = LogicalTypeAnnotation.stringType()
+
+  /** Write-temp + `ATOMIC_MOVE` (creating the parent directory): a
+    * reader sees the old content or the new, never a truncated file.
+    */
+  private[graft] def atomicWrite(target: Path, content: String): Unit = {
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
+    Files.writeString(tmp, content)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
 
   /** Open (or initialize) a table rooted at `root`. */
   def apply(spark: SparkSession, root: String, partitionCols: Seq[String],

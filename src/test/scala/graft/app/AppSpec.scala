@@ -45,14 +45,20 @@ class AppSpec extends SparkSuite {
     assert(store.readTier(Tier.Minute).count() > 0)
     GraftApp.run(spark, Array("retain", wh, "2024-06-01", "raw=365", "1m=365"))
     assert(store.readTier(Tier.Minute).count() > 0, "nothing should expire")
-    // publish → routing watermark stamped; vacuum → rows unchanged
+    // publish → every tier pinned at its CURRENT; vacuum → rows
+    // unchanged, and the pinned snapshots outlive the compaction
     GraftApp.run(spark, Array("publish", wh))
-    assert(java.nio.file.Files.exists(
-      graft.plans.TierRouting.watermarksPath(wh)))
+    val pins = graft.plans.TierRouting.servingPins(wh)
+    assert(pins.map { case (t, p) => t -> p.snapshotId } ==
+      Tier.cascade.map(t => t.name -> store.tier(t).currentSnapshotId).toMap, pins.toString)
     val rowsBefore = store.readTurns().count()
     GraftApp.run(spark, Array("compact", wh))
     GraftApp.run(spark, Array("vacuum", wh, "1"))
     assert(store.readTurns().count() == rowsBefore)
+    Tier.cascade.foreach { t =>
+      assert(store.tier(t).read(pins(t.name).snapshotId).count() ==
+        store.readTier(t).count(), s"pinned ${t.name} snapshot lost rows")
+    }
     // cluster (sort-order rewrite): rows unchanged, key bounds recorded
     GraftApp.run(spark, Array("cluster", wh, "2"))
     assert(store.readTurns().count() == rowsBefore)

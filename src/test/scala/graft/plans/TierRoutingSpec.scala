@@ -55,19 +55,14 @@ class TierRoutingSpec extends SparkSuite {
       s"plan not routed to tier table:\n$optimized")
     assert(!optimized.contains("length("),
       s"raw-side expressions still present:\n$optimized")
-    val files = df.queryExecution.optimizedPlan.collect {
-      case org.apache.spark.sql.execution.datasources.LogicalRelation(
-          fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) =>
-        fs.location.rootPaths.map(_.toString)
-    }.flatten
-    assert(files.exists(_.contains("serve/tier_1h")), files.toString)
+    assert(scansTier(df, "1h"), scannedPaths(df).toString)
   }
 
   test("bucket-aligned turn-rate query routes to the tier scan, results equal raw") {
     // the series-derivative routing case (r4 verdict ask #8): the
     // cumulative turn counter's per-bucket increase is count(*), so
     // turnRate emits the routable rollup shape — under the registered
-    // warehouse it must scan serve/tier_1h, not raw turns
+    // warehouse it must scan the tier_1h table, not raw turns
     val (rawDir, _) = setup
     def rate() = graft.functions.SeriesFunctions.turnRate(
       spark.read.parquet(rawDir), "conv_id", "ts", "1h")
@@ -75,13 +70,7 @@ class TierRoutingSpec extends SparkSuite {
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(optimized.contains("sum(turn_cnt"),
       s"turn-rate plan not routed to tier partials:\n$optimized")
-    val files = df.queryExecution.optimizedPlan.collect {
-      case org.apache.spark.sql.execution.datasources.LogicalRelation(
-          fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) =>
-        fs.location.rootPaths.map(_.toString)
-    }.flatten
-    assert(files.exists(_.contains("serve/tier_1h")),
-      s"expected a tier_1h scan, got $files")
+    assert(scansTier(df, "1h"), s"expected a tier_1h scan, got ${scannedPaths(df)}")
     val routed = df.as[(String, java.sql.Timestamp, Long, Long)].collect().toSet
     TierRouting.clearRegistry()
     val unrouted = rate().as[(String, java.sql.Timestamp, Long, Long)]
@@ -119,14 +108,14 @@ class TierRoutingSpec extends SparkSuite {
         fs.location.rootPaths.map(_.toString)
     }.flatten
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val stream = Files.walk(p)
-      try {
-        val it = stream.sorted(java.util.Comparator.reverseOrder()).iterator()
-        while (it.hasNext) Files.delete(it.next())
-      } finally stream.close()
-    }
+  /** Does the plan scan tier `name`'s table, i.e. files of a pinned
+    * tier snapshot under `tier_<name>/data/`?
+    */
+  private def scansTier(df: org.apache.spark.sql.DataFrame, name: String): Boolean =
+    scannedPaths(df).exists(_.contains(s"/tier_$name/data/"))
+
+  private def scansAnyTier(df: org.apache.spark.sql.DataFrame): Boolean =
+    Tier.cascade.exists(t => scansTier(df, t.name))
 
   /** Fresh warehouse + raw parquet dir for an isolated routing test. */
   private def mkStore(turns: org.apache.spark.sql.DataFrame, publish: Boolean)
@@ -168,7 +157,7 @@ class TierRoutingSpec extends SparkSuite {
       val q = fresh.sql(
         "SELECT conv_id, tier_bucket(ts, '1h') AS bucket_ts, " +
           "count(*) AS turn_cnt FROM turns_ext GROUP BY 1, 2")
-      assert(scannedPaths(q).exists(_.contains("serve/tier_1h")),
+      assert(scansTier(q, "1h"),
         "extensions-injected rule did not route:\n" +
           q.queryExecution.optimizedPlan.toString)
       val got = q.as[(String, java.sql.Timestamp, Long)](
@@ -194,7 +183,7 @@ class TierRoutingSpec extends SparkSuite {
       .filter($"role" === "user")
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(!scannedPaths(q).exists(_.contains("serve/tier")),
+    assert(!scansAnyTier(q),
       q.queryExecution.optimizedPlan.toString)
     // ground truth from the in-memory turns (never routable)
     val expected = turns
@@ -207,7 +196,7 @@ class TierRoutingSpec extends SparkSuite {
     def qAll = spark.read.parquet(rawDir)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(scannedPaths(qAll).exists(_.contains("serve/tier_1h")))
+    assert(scansTier(qAll, "1h"))
   }
 
   test("a conv_id-only Filter is TRANSLATED onto the tier scan, not bailed") {
@@ -218,7 +207,7 @@ class TierRoutingSpec extends SparkSuite {
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"),
         sum(length($"text").cast("long")).as("text_len_sum"))
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1h")),
+    assert(scansTier(q, "1h"),
       q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .filter($"conv_id" =!= "conv-000003")
@@ -241,7 +230,7 @@ class TierRoutingSpec extends SparkSuite {
       .filter($"ts" >= lit(bound) && $"conv_id" =!= "conv-000001")
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(scannedPaths(q(aligned)).exists(_.contains("serve/tier_1h")),
+    assert(scansTier(q(aligned), "1h"),
       q(aligned).queryExecution.optimizedPlan.toString)
     val expected = turns
       .filter($"ts" >= lit(aligned) && $"conv_id" =!= "conv-000001")
@@ -252,7 +241,7 @@ class TierRoutingSpec extends SparkSuite {
       == expected)
     // 1 µs off the boundary → must NOT route
     val unaligned = new java.sql.Timestamp(aligned.getTime + 1)
-    assert(!scannedPaths(q(unaligned)).exists(_.contains("serve/tier")),
+    assert(!scansAnyTier(q(unaligned)),
       "unaligned time bound must bail to the raw plan")
   }
 
@@ -262,7 +251,7 @@ class TierRoutingSpec extends SparkSuite {
     val q = spark.read.parquet(rawDir)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(!scannedPaths(q).exists(_.contains("serve/tier")))
+    assert(!scansAnyTier(q))
     assert(q.count() > 0)
   }
 
@@ -272,16 +261,16 @@ class TierRoutingSpec extends SparkSuite {
     def q = spark.read.parquet(rawDir)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1h")))
+    assert(scansTier(q, "1h"))
     // second ingest advances raw CURRENT past the published watermark
     val more = TranscriptGen.generate(spark, 4, 10, seed = 74L).toDF()
     more.write.mode("append").parquet(rawDir)
     store.ingest(more)
-    assert(!scannedPaths(q).exists(_.contains("serve/tier")),
+    assert(!scansAnyTier(q),
       "stale serving data must not be routed")
     store.rollupIncremental()
     store.publishServing()
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1h")))
+    assert(scansTier(q, "1h"))
   }
 
   test("a pure-SQL query using tier_bucket() routes to the tier table") {
@@ -293,7 +282,7 @@ class TierRoutingSpec extends SparkSuite {
       """SELECT conv_id, tier_bucket(ts, '1h') AS bucket_ts,
         |  count(*) AS turn_cnt, count(tool) AS tool_cnt
         |FROM raw_turns_sql GROUP BY 1, 2""".stripMargin)
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1h")),
+    assert(scansTier(q, "1h"),
       q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
@@ -311,7 +300,7 @@ class TierRoutingSpec extends SparkSuite {
       """SELECT tier_bucket(ts, '1mo') AS month,
         |  count(*) AS turn_cnt, count(DISTINCT conv_id) AS active_convs
         |FROM raw_monthly_sql GROUP BY 1""".stripMargin)
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1d")),
+    assert(scansTier(q, "1d"),
       q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .groupBy(TierRouting.tierBucket($"ts", "1mo").as("month"))
@@ -322,15 +311,18 @@ class TierRoutingSpec extends SparkSuite {
     assert(expected.nonEmpty)
   }
 
-  test("1d request with no 1d serving dir folds the 1h tier") {
+  test("1d request with no 1d pin folds the 1h tier") {
     val turns = TranscriptGen.generate(spark, 10, 25, seed = 75L).toDF()
     val (rawDir, wh, _) = mkStore(turns, publish = true)
-    deleteRecursively(java.nio.file.Paths.get(wh, "serve", "tier_1d"))
+    val pins = TierRouting.pinsPath(wh)
+    Files.writeString(pins, Files.readString(pins).linesIterator
+      .filterNot(_.startsWith("1d ")).mkString("", "\n", "\n"))
+    assert(TierRouting.servingPins(wh).keySet == Set("1m", "1h"))
     def q = spark.read.parquet(rawDir)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Day).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"),
         sum(length($"text").cast("long")).as("text_len_sum"))
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1h")),
+    assert(scansTier(q, "1h"),
       q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Day).as("bucket_ts"))
@@ -346,8 +338,7 @@ class TierRoutingSpec extends SparkSuite {
     val df = spark.read.parquet(rawDir)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("b"))
       .agg(sum($"turn_idx").as("idx_sum"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(!optimized.contains("tier_1h"), optimized)
+    assert(!scansAnyTier(df), df.queryExecution.optimizedPlan.toString)
     assert(df.count() > 0)
   }
 
@@ -359,7 +350,7 @@ class TierRoutingSpec extends SparkSuite {
       .agg(count(lit(1)).as("turn_cnt"),
         count_distinct($"conv_id").as("active_convs"),
         sum(length($"text").cast("long")).as("text_len_sum"))
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1d")),
+    assert(scansTier(q, "1d"),
       q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .groupBy(TierRouting.tierBucket($"ts", Tier.Day).as("bucket_ts"))
@@ -377,7 +368,7 @@ class TierRoutingSpec extends SparkSuite {
     def q = spark.read.parquet(rawDir)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(avg(length($"text")).as("avg_len"))
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1h")),
+    assert(scansTier(q, "1h"),
       q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
@@ -400,7 +391,7 @@ class TierRoutingSpec extends SparkSuite {
     def q = spark.read.parquet(rawDir)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(avg(length($"text")).as("avg_len"))
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1h")),
+    assert(scansTier(q, "1h"),
       q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
@@ -425,7 +416,7 @@ class TierRoutingSpec extends SparkSuite {
     def q = spark.read.parquet(rawDir)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(avg(length($"text")).as("avg_len"))
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1h")),
+    assert(scansTier(q, "1h"),
       q.queryExecution.optimizedPlan.toString)
     val routed = q.collect().map(r =>
       (r.getString(0), Option(r.get(2)).map(_.asInstanceOf[Double]))).toSet
@@ -447,14 +438,14 @@ class TierRoutingSpec extends SparkSuite {
       .select($"ts", $"turn_idx".cast("string").as("conv_id"))
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(!scannedPaths(q).exists(_.contains("serve/tier")),
+    assert(!scansAnyTier(q),
       "aliased conv_id routed: " + q.queryExecution.optimizedPlan.toString)
     // and a wrong-ts alias must bail too
     def q2 = spark.read.parquet(rawDir)
       .select($"conv_id", ($"ts" + expr("INTERVAL 1 HOUR")).as("ts"))
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(!scannedPaths(q2).exists(_.contains("serve/tier")),
+    assert(!scansAnyTier(q2),
       "shifted-ts alias routed: " + q2.queryExecution.optimizedPlan.toString)
     // values stay correct (computed from raw)
     val expected = turns
@@ -476,14 +467,14 @@ class TierRoutingSpec extends SparkSuite {
     def q = spark.read.parquet(foreign)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(!scannedPaths(q).exists(_.contains("serve/tier")),
+    assert(!scansAnyTier(q),
       "foreign table routed onto another warehouse's tiers: " +
         q.queryExecution.optimizedPlan.toString)
     // the registered table itself still routes
     def qOwn = spark.read.parquet(rawDir)
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(scannedPaths(qOwn).exists(_.contains("serve/tier_1h")))
+    assert(scansTier(qOwn, "1h"))
   }
 
   test("calendar and arbitrary widths route: 1mo/1y/2h fold tiers, 90s bails") {
@@ -499,20 +490,20 @@ class TierRoutingSpec extends SparkSuite {
         sum(length($"text").cast("long")).as("text_len_sum"))
       .as[(String, java.sql.Timestamp, Long, Long)].collect().toSet
     // monthly report: serves from the 1d tier, never raw
-    assert(scannedPaths(q("1mo")).exists(_.contains("serve/tier_1d")),
+    assert(scansTier(q("1mo"), "1d"),
       q("1mo").queryExecution.optimizedPlan.toString)
     assert(q("1mo").as[(String, java.sql.Timestamp, Long, Long)]
       .collect().toSet == expected("1mo"))
     // yearly: also from 1d
-    assert(scannedPaths(q("1y")).exists(_.contains("serve/tier_1d")))
+    assert(scansTier(q("1y"), "1d"))
     assert(q("1y").as[(String, java.sql.Timestamp, Long, Long)]
       .collect().toSet == expected("1y"))
     // 2h: folds the 1h tier
-    assert(scannedPaths(q("2h")).exists(_.contains("serve/tier_1h")))
+    assert(scansTier(q("2h"), "1h"))
     assert(q("2h").as[(String, java.sql.Timestamp, Long, Long)]
       .collect().toSet == expected("2h"))
     // 90s: no tier divides it → must bail to raw (values still right)
-    assert(!scannedPaths(q("90s")).exists(_.contains("serve/tier")),
+    assert(!scansAnyTier(q("90s")),
       "90s has no serving tier and must not route")
     assert(q("90s").as[(String, java.sql.Timestamp, Long, Long)]
       .collect().toSet == expected("90s"))
@@ -533,7 +524,7 @@ class TierRoutingSpec extends SparkSuite {
       .groupBy(TierRouting.tierBucket($"ts", Tier.Day).as("day"),
         TierRouting.tierBucket($"ts", Tier.Hour).as("hour"))
       .agg(count(lit(1)).as("turn_cnt"))
-    assert(!scannedPaths(q).exists(_.contains("serve/tier")),
+    assert(!scansAnyTier(q),
       "double-bucket grouping routed: " + q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .groupBy(TierRouting.tierBucket($"ts", Tier.Day).as("day"),
@@ -554,7 +545,7 @@ class TierRoutingSpec extends SparkSuite {
       .agg(count(lit(1)).as("turn_cnt"))
       .filter($"turn_cnt" >= 3) // HAVING: applies to the routed output
       .orderBy($"conv_id", $"bucket_ts")
-    assert(scannedPaths(q).exists(_.contains("serve/tier_1h")),
+    assert(scansTier(q, "1h"),
       q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
@@ -583,9 +574,9 @@ class TierRoutingSpec extends SparkSuite {
       def q(spec: String) = spark.read.parquet(rawDir)
         .groupBy($"conv_id", TierRouting.tierBucket($"ts", spec).as("bucket_ts"))
         .agg(count(lit(1)).as("turn_cnt"))
-      assert(!scannedPaths(q("1mo")).exists(_.contains("serve/tier")),
+      assert(!scansAnyTier(q("1mo")),
         "calendar request routed in a non-UTC session")
-      assert(scannedPaths(q("1h")).exists(_.contains("serve/tier_1h")),
+      assert(scansTier(q("1h"), "1h"),
         "fixed-width routing must be unaffected by the session zone")
     } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
   }
@@ -599,12 +590,109 @@ class TierRoutingSpec extends SparkSuite {
       """SELECT conv_id, tier_bucket(ts, '1h') AS bucket_ts,
         |  count(*) FILTER (WHERE role = 'user') AS user_cnt
         |FROM raw_filter_sql GROUP BY 1, 2""".stripMargin)
-    assert(!scannedPaths(q).exists(_.contains("serve/tier")),
+    assert(!scansAnyTier(q),
       q.queryExecution.optimizedPlan.toString)
     val expected = turns
       .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
       .agg(count(when($"role" === "user", 1)).as("user_cnt"))
       .as[(String, java.sql.Timestamp, Long)].collect().toSet
     assert(q.as[(String, java.sql.Timestamp, Long)].collect().toSet == expected)
+  }
+
+  // ---------------------------------------------------------------
+  // the publish pin: routed reads scan the tier snapshot pinned at
+  // publish, and nothing newer or older
+  // ---------------------------------------------------------------
+
+  private def hourly(df: org.apache.spark.sql.DataFrame) = df
+    .groupBy($"conv_id", TierRouting.tierBucket($"ts", Tier.Hour).as("bucket_ts"))
+    .agg(count(lit(1)).as("turn_cnt"), sum(length($"text").cast("long")).as("text_len_sum"))
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.as[(String, java.sql.Timestamp, Long, Long)].collect().toSet
+
+  /** One more batch into both the raw parquet dir and the store. */
+  private def deliver(rawDir: String, store: TranscriptStore, nConvs: Int, seed: Long): Unit = {
+    val more = TranscriptGen.generate(spark, nConvs, 12, seed = seed).toDF()
+    more.write.mode("append").parquet(rawDir)
+    store.ingest(more)
+  }
+
+  test("after several batches the routed answer equals raw and reads the pinned snapshot") {
+    val (rawDir, wh, store) =
+      mkStore(TranscriptGen.generate(spark, 6, 12, seed = 94L).toDF(), publish = true)
+    (95L to 97L).foreach { seed =>
+      deliver(rawDir, store, 8, seed)
+      store.rollupIncremental()
+      store.publishServing()
+      val q = hourly(spark.read.parquet(rawDir))
+      val pin = TierRouting.servingPins(wh)("1h")
+      assert(pin.snapshotId == store.tier1h.currentSnapshotId)
+      assert(pin.rawSnapshotId == store.raw.currentSnapshotId)
+      val scanned = scannedPaths(q).map(p => p.substring(p.indexOf("/tier_1h/data/") + 14))
+      assert(scanned.toSet == store.tier1h.liveFiles(pin.snapshotId).map(_.path).toSet,
+        s"seed $seed: not the pinned snapshot's files: $scanned")
+      // a checkpointed frame is no parquet scan: never routed
+      assert(rowsOf(q) == rowsOf(hourly(spark.read.parquet(rawDir).localCheckpoint())),
+        s"seed $seed: routed != raw")
+    }
+  }
+
+  test("a rollup after publish is not served until the next publish") {
+    val (rawDir, wh, store) =
+      mkStore(TranscriptGen.generate(spark, 6, 12, seed = 98L).toDF(), publish = true)
+    def q = hourly(spark.read.parquet(rawDir))
+    assert(scansTier(q, "1h"))
+    val pinned = TierRouting.servingPins(wh)
+    deliver(rawDir, store, 8, 99L)
+    store.rollupIncremental()
+    // the tiers are current, but the pin still names the old snapshots,
+    // which miss the new batch: the stale pin falls back to raw
+    assert(TierRouting.servingPins(wh) == pinned)
+    assert(!scansAnyTier(q), q.queryExecution.optimizedPlan.toString)
+    val raw = rowsOf(q)
+    store.publishServing()
+    assert(scansTier(q, "1h"))
+    assert(rowsOf(q) == raw)
+  }
+
+  test("vacuum(1) after an unpublished rollup keeps the published snapshot readable") {
+    val (rawDir, wh, store) =
+      mkStore(TranscriptGen.generate(spark, 6, 12, seed = 100L).toDF(), publish = true)
+    // planned now: the routed scan's file list is fixed at the pin
+    val q = hourly(spark.read.parquet(rawDir))
+    assert(scansTier(q, "1h"))
+    val published = rowsOf(hourly(spark.read.parquet(rawDir).localCheckpoint()))
+    val pin = TierRouting.servingPins(wh)("1h")
+    deliver(rawDir, store, 8, 101L)
+    store.rollupIncremental()
+    // the rollup rewrote day partitions of the pinned snapshot
+    assert((store.tier1h.liveFiles(pin.snapshotId).map(_.path).toSet --
+      store.tier1h.liveFiles().map(_.path)).nonEmpty)
+    store.vacuum(1)
+    assert(store.tier1h.snapshot(pin.snapshotId).isDefined, "pinned snapshot vacuumed")
+    assert(rowsOf(q) == published, "routed answer changed after vacuum")
+  }
+
+  test("a missing or old-format pin falls back to the raw plan") {
+    val turns = TranscriptGen.generate(spark, 6, 12, seed = 102L).toDF()
+    val (rawDir, wh, store) = mkStore(turns, publish = false)
+    def q = hourly(spark.read.parquet(rawDir))
+    val sid = store.raw.currentSnapshotId
+    // the serving files of the copy-based publish: a WATERMARKS stamp
+    // and a parquet copy, but no pin
+    Files.createDirectories(TierRouting.pinsPath(wh).getParent)
+    Files.writeString(java.nio.file.Paths.get(wh, "serve", "WATERMARKS"),
+      s"1m=$sid\n1h=$sid\n1d=$sid\n")
+    store.readTier(Tier.Hour).write.parquet(s"$wh/serve/tier_1h")
+    assert(TierRouting.servingPins(wh).isEmpty)
+    assert(!scansAnyTier(q) && !scannedPaths(q).exists(_.contains("/serve/")))
+    // a pin file in the old line format pins nothing
+    Files.writeString(TierRouting.pinsPath(wh), s"1m=$sid\n1h=$sid\n1d=$sid\n")
+    assert(TierRouting.servingPins(wh).isEmpty)
+    assert(!scansAnyTier(q))
+    assert(rowsOf(q) == rowsOf(hourly(turns)))
+    store.publishServing()
+    assert(scansTier(q, "1h"))
   }
 }

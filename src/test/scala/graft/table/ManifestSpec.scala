@@ -158,4 +158,25 @@ class ManifestSpec extends SparkSuite {
     assert(raw.currentSnapshot.get.schema.isEmpty)
     assert(jobsOf(raw.read()).exists(inference), "a legacy read must infer")
   }
+
+  test("job budget: rollupIncremental writes lineage without a job of its own; publish starts none") {
+    val store = new TranscriptStore(spark, tmpWarehouse("pinbudget"), convBuckets = 2)
+    store.ingest(twoDays(81L), dedupe = true)
+    store.rollupIncremental()
+    store.publishServing()
+    val b2 = twoDays(82L).withColumn("turn_idx", $"turn_idx" + lit(50000)).cache()
+    store.ingest(b2, dedupe = true)
+    // per tier: the merge write and the lineage append, plus what the
+    // reads plan; no job reads a merged frame a second time for lineage
+    val jobs = jobsOf(store.rollupIncremental())
+    assert(jobs.size <= 13, jobs.mkString("\n"))
+    assert(jobsOf(store.publishServing()).isEmpty)
+    // a replay adds 0 rows: the cascade only advances its watermarks,
+    // and the publish after it starts no job either
+    store.ingest(b2, dedupe = true)
+    assert(store.raw.incrementalFiles(store.raw.currentSnapshotId - 1).isEmpty)
+    store.rollupIncremental()
+    assert(jobsOf(store.publishServing()).isEmpty)
+    b2.unpersist()
+  }
 }

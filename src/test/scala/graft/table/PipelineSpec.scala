@@ -266,17 +266,14 @@ class PipelineSpec extends SparkSuite {
     assert(points.isEmpty)
   }
 
-  test("publishServing of an empty store publishes empty tiers and zero watermarks") {
+  test("publishServing of an empty store pins every tier at snapshot 0") {
     val wh = tmpWarehouse("emptypublish")
     val store = new TranscriptStore(spark, wh, convBuckets = 2)
     store.publishServing()
-    Tier.cascade.foreach { t =>
-      val served = spark.read.parquet(s"$wh/serve/tier_${t.name}")
-      assert(served.columns.toSeq == tierCols, t.name)
-      assert(served.isEmpty, t.name)
-    }
-    assert(Files.readString(graft.plans.TierRouting.watermarksPath(wh)) ==
-      "1m=0\n1h=0\n1d=0\n")
+    assert(Files.readString(graft.plans.TierRouting.pinsPath(wh)) ==
+      "1m 0 0\n1h 0 0\n1d 0 0\n")
+    // a pin copies nothing
+    assert(Files.list(graft.plans.TierRouting.pinsPath(wh).getParent).count() == 1L)
   }
 
   test("laggedCorrelation served from the 1h tier equals the raw computation") {
@@ -336,27 +333,74 @@ class PipelineSpec extends SparkSuite {
     assert(perTier.values.toSet.size == 1, s"turn counts not conserved: $perTier")
   }
 
-  test("publishServing stamps WATERMARKS atomically: old-or-new, never partial") {
-    val wh = tmpWarehouse("atomicwm")
+  test("publishServing writes the pins atomically: old-or-new, never partial") {
+    val wh = tmpWarehouse("atomicpin")
     val store = new TranscriptStore(spark, wh, convBuckets = 2)
     store.ingest(TranscriptGen.generate(spark, 4, 8, seed = 43L).toDF())
     store.rollupIncremental()
-    val p = graft.plans.TierRouting.watermarksPath(wh)
-    // a stale stamp file AND a leftover tmp from a crashed publish
+    val p = graft.plans.TierRouting.pinsPath(wh)
+    // a stale pin file AND a leftover tmp from a crashed publish
     Files.createDirectories(p.getParent)
-    Files.writeString(p, "1m=0\n1h=0\n1d=0\n")
+    Files.writeString(p, "1m 0 0\n1h 0 0\n1d 0 0\n")
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, "1m=999\n") // truncated crash debris
+    Files.writeString(tmp, "1m 999") // truncated crash debris
     store.publishServing()
-    // the publish replaced the stamps via rename: tmp is consumed,
-    // and the visible file is the complete NEW content (a reader at
-    // any point saw either the old stamps or these — the rename is
-    // atomic, there is no intermediate truncated state on disk)
+    // the publish replaced the pins via rename: tmp is consumed, and
+    // the visible file is the complete NEW content (a reader at any
+    // point saw either the old pins or these — the rename is atomic,
+    // there is no intermediate truncated state on disk)
     assert(!Files.exists(tmp), "tmp file must be consumed by the rename")
-    val content = Files.readString(p)
-    val stamps = content.trim.split("\n").map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
-    assert(stamps.keySet == Set("1m", "1h", "1d"), content)
-    assert(stamps.values.forall(_ > 0L), s"expected fresh non-zero stamps: $content")
+    // every tier pinned at its CURRENT, reflecting raw CURRENT
+    val want = Tier.cascade.map(t => t.name -> graft.plans.TierRouting.ServingPin(
+      store.tier(t).currentSnapshotId, store.raw.currentSnapshotId)).toMap
+    assert(graft.plans.TierRouting.servingPins(wh) == want, Files.readString(p))
+    assert(want.values.forall(_.snapshotId > 0L))
+  }
+
+  test("a pin reflects raw only through a caught-up cascade chain") {
+    val wh = tmpWarehouse("pinchain")
+    val store = new TranscriptStore(spark, wh, convBuckets = 2)
+    store.ingest(TranscriptGen.generate(spark, 4, 8, seed = 45L).toDF())
+    store.rollupIncremental()
+    // 1m moves on alone (a crash before the 1h fold): 1h and 1d
+    // reflect no raw snapshot until the cascade catches up
+    store.tier1m.overwritePartitions(_ => false, None, op = "noop",
+      summary = Map("consumed_src" -> store.raw.currentSnapshotId.toString))
+    store.publishServing()
+    val pins = graft.plans.TierRouting.servingPins(wh)
+    assert(pins("1m").rawSnapshotId == store.raw.currentSnapshotId)
+    assert(pins("1h").rawSnapshotId == 0L && pins("1d").rawSnapshotId == 0L, pins.toString)
+  }
+
+  test("a non-UTC session is refused by ingest and rollupIncremental, naming the zone") {
+    val store = new TranscriptStore(spark, tmpWarehouse("tz"), convBuckets = 2)
+    def batch(seed: Long) = TranscriptGen.generate(spark, 2, 12, seed = seed).toDF()
+    val prevTz = spark.conf.get("spark.sql.session.timeZone")
+    def inZone[A](zone: String)(body: => A): A = {
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      try body finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+    }
+    // off UTC the day partitions and the 1d buckets disagree, so the
+    // tiers would double count: refused before anything is written
+    inZone("America/New_York") {
+      val e = intercept[IllegalStateException](store.ingest(batch(46L)))
+      assert(e.getMessage.contains("America/New_York"), e.getMessage)
+    }
+    assert(store.raw.currentSnapshotId == 0L)
+    store.ingest(batch(46L))
+    inZone("America/New_York") {
+      val e = intercept[IllegalStateException](store.rollupIncremental())
+      assert(e.getMessage.contains("America/New_York"), e.getMessage)
+    }
+    assert(store.tier1m.currentSnapshotId == 0L)
+    // a UTC-equivalent zone by another name is accepted
+    inZone("Etc/UTC") {
+      store.ingest(batch(47L).withColumn("turn_idx", $"turn_idx" + 100))
+      store.rollupIncremental()
+    }
+    val all = batch(46L).unionByName(batch(47L).withColumn("turn_idx", $"turn_idx" + 100))
+    assert(store.readTier(Tier.Day).as[graft.model.TierRow].collect().toSet ==
+      Rollup.rollupRaw(all, Tier.Day).as[graft.model.TierRow].collect().toSet)
   }
 
   private def lit(s: String) = org.apache.spark.sql.functions.lit(s)
