@@ -25,11 +25,15 @@ import graft.table.ChronoTable
   * watermark it consumed into the snapshot summary (`consumed_src`),
   * so watermark and data change atomically — a crash between commits
   * re-runs only the uncommitted step and can never double-count
-  * (SURVEY.md §7 hard parts, "resumable exactly-once"). The 1m merge
-  * folds delta partials into existing buckets in one copy-on-write
-  * commit; 1h/1d recompute their affected day partitions from the
-  * full (already-merged) finer tier, which is idempotent by
-  * construction.
+  * (SURVEY.md §7 hard parts, "resumable exactly-once"). Maintenance
+  * commits of a tier (retention drops, compactions) carry the
+  * watermark forward ([[graft.table.ChronoTable.ConsumedSrcKey]]). The
+  * 1m merge folds the new turns, as one-turn tier rows, together with
+  * the existing 1m rows of their days in one aggregate and one
+  * copy-on-write commit; 1h/1d recompute their affected day partitions
+  * from the full (already-merged) finer tier, which is idempotent by
+  * construction. Lineage rows are appended once per call: one
+  * `metrics` commit for an ingest, one for a whole rollup cascade.
   */
 final class TranscriptStore(
     val spark: SparkSession,
@@ -72,12 +76,14 @@ final class TranscriptStore(
     *   whose (conv_id, turn_idx) already exist in the raw table are
     *   dropped with a LEFT ANTI join, so replaying a batch (at-least-
     *   once upstream delivery) cannot double-count. The anti join is
-    *   day-partition-pruned: only the batch's own ts_day partitions
-    *   are read back, not the whole table — O(batch) at any scale.
-    *   Duplicates WITHIN the incoming batch (a retried upstream
+    *   day-partition-pruned: it reads back the keys of every ts_day
+    *   partition the delivery touches (taken from the delivered rows,
+    *   duplicates included), not the whole table — O(batch) at any
+    *   scale. Duplicates WITHIN the incoming batch (a retried upstream
     *   producer duplicates inside one delivery most of all) are
-    *   removed first by a keep-first window pinned on ts — the anti
-    *   join alone only screens against already-committed rows.
+    *   removed by a keep-first window pinned on ts — the anti join
+    *   alone only screens against already-committed rows. The window
+    *   runs once, in the write; the day probe needs none of it.
     */
   def ingest(turns: DataFrame, dedupe: Boolean = false): Long = {
     requireUtcSession()
@@ -93,7 +99,9 @@ final class TranscriptStore(
         base, Seq("conv_id", "turn_idx"), "ts",
         xxhash64(col("role"), col("text"), col("tool")))
       if (raw.currentSnapshotId == 0L) inBatch else {
-        val days = inBatch.select(date_format(col("ts"), "yyyy-MM-dd"))
+        // a superset of the survivors' days: a key whose dropped copy
+        // lies on a day where raw already holds it is still screened
+        val days = base.select(date_format(col("ts"), "yyyy-MM-dd"))
           .distinct().collect().map(_.getString(0)).toSet
         val existingKeys = raw.read()
           .filter(col("ts_day").isin(days.toSeq: _*))
@@ -106,12 +114,12 @@ final class TranscriptStore(
       .withColumn("conv_bucket", pmod(hash(col("conv_id")), lit(convBuckets)))
     val sid = raw.append(partitioned, Map("op_detail" -> "ingest"))
     // counting the committed rows from the footers spares a second run
-    // of the whole dedupe plan; one lineage file, as an aggregate writes
+    // of the whole dedupe plan
     val perDay = addedRowsPerDay(raw, sid)
       .map(rows => perDayFrame(rows.map { case (day, n) => (day, n, 0L) }))
       .getOrElse(partitioned.groupBy("ts_day").agg(
         count(lit(1)).as("rows"), lit(0L).as("rollup_rows")))
-    logMetrics("ingest", "raw", sid, perDay)
+    appendLineage(Seq(lineage("ingest", "raw", sid, perDay)))
     sid
   }
 
@@ -166,7 +174,7 @@ final class TranscriptStore(
   // ------------------------------------------------------------------
 
   private def consumedSrc(s: Option[ChronoTable.Snapshot]): Long =
-    s.flatMap(_.summary.get("consumed_src")).map(_.toLong).getOrElse(0L)
+    s.flatMap(_.summary.get(ChronoTable.ConsumedSrcKey)).map(_.toLong).getOrElse(0L)
 
   private def withDay(df: DataFrame): DataFrame =
     df.withColumn("ts_day", date_format(col("bucket_ts"), "yyyy-MM-dd"))
@@ -175,7 +183,12 @@ final class TranscriptStore(
 
   /** Run the incremental cascade; returns per-tier merged-row counts.
     * No-op (returns empty) when every tier is already caught up.
-    * Safe to re-run after a crash at ANY point.
+    * Safe to re-run after a crash at ANY point for the tiers: their
+    * data and watermarks change in one commit each. The lineage rows
+    * of every tier the call committed are appended once, after the
+    * last tier commit, as one `metrics` snapshot; a crash before that
+    * append loses this call's lineage rows (the re-run finds the tiers
+    * caught up and writes none), never tier data.
     *
     * Bookkeeping comes from the manifests, not from Spark jobs: an
     * increment is empty when it added no files, its affected days are
@@ -186,6 +199,7 @@ final class TranscriptStore(
   def rollupIncremental(): Map[String, Long] = {
     requireUtcSession()
     var report = Map.empty[String, Long]
+    var lineageRows = Seq.empty[(String, DataFrame)]
 
     // bring `dst` up to `src`'s CURRENT: `rows(consumed, srcCur, days)`
     // recomputes the tier rows of the increment's affected days
@@ -193,24 +207,28 @@ final class TranscriptStore(
         rows: (Long, Long, Set[String]) => DataFrame): Unit = {
       val srcCur = src.currentSnapshotId
       val consumed = consumedSrc(dst.currentSnapshot)
-      val stamp = Map("consumed_src" -> srcCur.toString)
+      val stamp = Map(ChronoTable.ConsumedSrcKey -> srcCur.toString)
       if (consumed < srcCur) {
         val files = src.incrementalFiles(consumed, srcCur)
         // empty increment: just advance the watermark atomically
         if (files.isEmpty) dst.overwritePartitions(_ => false, None, op = "noop", summary = stamp)
         else {
           val days = files.map(dayOf).toSet
-          report += label -> commitTier(dst, label, rows(consumed, srcCur, days), days, stamp)
+          val (n, lin) = commitTier(dst, label, rows(consumed, srcCur, days), days, stamp)
+          report += label -> n
+          lineageRows :+= lin
         }
       }
     }
 
-    // raw → 1m: fold delta partials into existing buckets
+    // raw → 1m: new turns as one-turn tier rows, folded together with
+    // the existing 1m rows of their days in one aggregate
     step(raw, tier1m, "1m") { (after, until, days) =>
-      val partials = Rollup.rollupRaw(raw.readIncremental(after, until), Tier.Minute)
-      val base = if (!tier1m.liveFiles().exists(f => days(dayOf(f)))) partials
+      val turns = Rollup.turnRows(raw.readIncremental(after, until),
+        Rollup.bucket(col("ts"), Tier.Minute))
+      val base = if (!tier1m.liveFiles().exists(f => days(dayOf(f)))) turns
         else tier1m.read().filter(col("ts_day").isin(days.toSeq: _*))
-          .select(tierCols.map(col): _*).unionByName(partials)
+          .select(tierCols.map(col): _*).unionByName(turns)
       Rollup.foldTier(base, Tier.Minute)
     }
 
@@ -233,16 +251,18 @@ final class TranscriptStore(
 
     step(tier1m, tier1h, "1h")((_, _, days) => fold(tier1m, Tier.Hour)(days))
     step(tier1h, tier1d, "1d")((_, _, days) => fold(tier1h, Tier.Day)(days))
+    if (lineageRows.nonEmpty) appendLineage(lineageRows)
     report
   }
 
   /** Replace `dst`'s `days` partitions with `rows` in one commit stamped
-    * `stamp`, append its lineage rows, and return its row count. Rows
-    * per day are the footer counts the commit recorded, rolled turns per
-    * day an observation of the write itself: no second job reads `rows`.
+    * `stamp`; returns its row count and its lineage rows, which the
+    * caller appends. Rows per day are the footer counts the commit
+    * recorded, rolled turns per day an observation of the write itself:
+    * no second job reads `rows`.
     */
   private def commitTier(dst: ChronoTable, label: String, rows: DataFrame,
-      days: Set[String], stamp: Map[String, String]): Long = {
+      days: Set[String], stamp: Map[String, String]): (Long, (String, DataFrame)) = {
     val sorted = days.toSeq.sorted
     val written = Observation()
     val perDay = sorted.flatMap { d =>
@@ -256,9 +276,8 @@ final class TranscriptStore(
     // a footer that went unread leaves the count of the write itself
     val rowsPerDay = addedRowsPerDay(dst, sid)
       .getOrElse(sorted.map(d => d -> observed(s"rows_$d")).filter(_._2 > 0))
-    logMetrics(s"rollup_$label", s"tier_$label", sid,
-      perDayFrame(rowsPerDay.map { case (d, n) => (d, n, observed(s"turns_$d")) }))
-    rowsPerDay.map(_._2).sum
+    (rowsPerDay.map(_._2).sum, lineage(s"rollup_$label", s"tier_$label", sid,
+      perDayFrame(rowsPerDay.map { case (d, n) => (d, n, observed(s"turns_$d")) })))
   }
 
   /** Read a tier at its current snapshot (metric columns only); a tier
@@ -315,7 +334,8 @@ final class TranscriptStore(
           p => p.get("ts_day").exists(_ < cutoff),
           summary = Map("cutoff" -> cutoff))
         val after = t.livePartitions.size
-        logMetrics("retention", name, sid, perDayFrame(Seq((cutoff, (before - after).toLong, 0L))))
+        appendLineage(Seq(lineage("retention", name, sid,
+          perDayFrame(Seq((cutoff, (before - after).toLong, 0L))))))
         name -> (before - after).toLong
       }
     Seq(drop(raw, "raw"), drop(tier1m, "1m"), drop(tier1h, "1h"),
@@ -356,18 +376,26 @@ final class TranscriptStore(
   // ------------------------------------------------------------------
 
   private def perDayFrame(rows: Seq[(String, Long, Long)]): DataFrame =
-    spark.createDataFrame(rows).toDF("ts_day", "rows", "rollup_rows").coalesce(1)
+    spark.createDataFrame(rows).toDF("ts_day", "rows", "rollup_rows")
 
-  /** One lineage row per affected partition: (job, table, snapshot,
-    * partition day, row count, rolled-up turn count).
+  /** The lineage rows of one commit, one per affected partition: (job,
+    * table, snapshot, partition day, row count, rolled-up turn count),
+    * keyed by the job.
     */
-  private def logMetrics(job: String, table: String, sid: Long, perDay: DataFrame): Unit = {
-    val rows = perDay.select(
+  private def lineage(job: String, table: String, sid: Long,
+      perDay: DataFrame): (String, DataFrame) =
+    job -> perDay.select(
       lit(job).as("job"), lit(table).as("table_name"), lit(sid).as("snapshot_id"),
       col("ts_day").cast("string").as("partition_day"),
       col("rows").cast("long").as("row_cnt"),
       col("rollup_rows").cast("long").as("rolled_turn_cnt"))
-    metrics.append(rows, Map("job" -> job))
+
+  /** Append the lineage rows of one or more commits as one `metrics`
+    * snapshot (one file), its summary naming their jobs.
+    */
+  private def appendLineage(rows: Seq[(String, DataFrame)]): Unit = {
+    metrics.append(rows.map(_._2).reduce(_ unionByName _).coalesce(1),
+      Map("job" -> rows.map(_._1).mkString(",")))
     ()
   }
 

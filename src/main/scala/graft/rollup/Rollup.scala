@@ -15,6 +15,11 @@ import graft.model.Tier
   * that fold(1m)→1h and fold(1h)→1d equal raw→1h / raw→1d exactly:
   * only sums / counts / min / max are stored, means are derived.
   *
+  * The metric set has one definition, [[foldAggs]]: a raw turn enters
+  * as a one-turn tier row ([[turnRows]]), so raw→tier and tier→tier
+  * are the same fold, and the incremental 1m merge folds new turns and
+  * existing 1m rows in one aggregate.
+  *
   * Scale notes (100 TB / 10^12-turn design point):
   *   - raw→1m is a single hash aggregate keyed (conv_id, bucket):
   *     map-side partial aggregation bounds shuffle volume by the
@@ -31,24 +36,33 @@ object Rollup {
     "text_len_sum", "text_len_min", "text_len_max", "role_user_cnt",
     "role_assistant_cnt", "role_tool_cnt")
 
-  /** Aggregations from raw turn rows. `text_cnt` (count of NON-NULL
-    * texts) exists so a routed avg(length(text)) divides by the same
-    * count the raw Average would — turn_cnt would silently diverge on
-    * any table with null text (ADVICE r3).
+  /** Each turn as a one-turn tier row keyed (conv_id, `bucketCol` as
+    * `bucket_ts`): `turn_cnt` 1, `tool_cnt`/`text_cnt` and the role
+    * counts 0 or 1, the three length columns `length(text)` (null for a
+    * null text, which sum/min/max skip). [[foldAggs]] over these rows is
+    * the raw rollup. `text_cnt` (count of NON-NULL texts) exists so a
+    * routed avg(length(text)) divides by the same count the raw Average
+    * would — turn_cnt would silently diverge on any table with null text
+    * (ADVICE r3).
     */
-  private def rawAggs: Seq[Column] = Seq(
-    count(lit(1)).as("turn_cnt"),
-    count(col("tool")).as("tool_cnt"),
-    count(col("text")).as("text_cnt"),
-    sum(length(col("text")).cast("long")).as("text_len_sum"),
-    min(length(col("text")).cast("long")).as("text_len_min"),
-    max(length(col("text")).cast("long")).as("text_len_max"),
-    count(when(col("role") === "user", 1)).as("role_user_cnt"),
-    count(when(col("role") === "assistant", 1)).as("role_assistant_cnt"),
-    count(when(col("role") === "tool", 1)).as("role_tool_cnt"))
+  def turnRows(turns: DataFrame, bucketCol: Column): DataFrame =
+    turns.select(Seq(col("conv_id"), bucketCol.as("bucket_ts")) ++ unitMetrics: _*)
 
-  /** Re-aggregations that fold a finer tier into a coarser one.
-    * Exact because all metrics are algebraic (sum/min/max compose).
+  private def unitMetrics: Seq[Column] = {
+    def flag(c: Column) = when(c, 1L).otherwise(0L)
+    val len = length(col("text")).cast("long")
+    Seq(lit(1L).as("turn_cnt"),
+      flag(col("tool").isNotNull).as("tool_cnt"),
+      flag(col("text").isNotNull).as("text_cnt"),
+      len.as("text_len_sum"), len.as("text_len_min"), len.as("text_len_max"),
+      flag(col("role") === "user").as("role_user_cnt"),
+      flag(col("role") === "assistant").as("role_assistant_cnt"),
+      flag(col("role") === "tool").as("role_tool_cnt"))
+  }
+
+  /** The metric set: re-aggregations that fold finer tier rows (or
+    * [[turnRows]]) into coarser ones. Exact because all metrics are
+    * algebraic (sum/min/max compose).
     */
   def foldAggs: Seq[Column] = Seq(
     sum(col("turn_cnt")).as("turn_cnt"),
@@ -80,9 +94,12 @@ object Rollup {
 
   /** raw turns → tier rows. One shuffle, map-side combined. */
   def rollupRaw(turns: DataFrame, tier: Tier): DataFrame =
-    turns
-      .groupBy(col("conv_id"), bucket(col("ts"), tier).as("bucket_ts"))
-      .agg(rawAggs.head, rawAggs.tail: _*)
+    foldRows(turnRows(turns, bucket(col("ts"), tier)))
+
+  /** [[foldAggs]] per (conv_id, bucket_ts) and `keys`. */
+  private def foldRows(rows: DataFrame, keys: Column*): DataFrame =
+    rows.groupBy(col("conv_id") +: col("bucket_ts") +: keys: _*)
+      .agg(foldAggs.head, foldAggs.tail: _*)
 
   // ------------------------------------------------------------------
   // arbitrary-width bucketing (reference ParseSettings.py:17-19: a
@@ -188,9 +205,7 @@ object Rollup {
 
   /** [[rollupRaw]] at an arbitrary width/mode. */
   def rollupRawWidth(turns: DataFrame, spec: String, nearest: Boolean = false): DataFrame =
-    turns
-      .groupBy(col("conv_id"), bucketWidth(col("ts"), spec, nearest).as("bucket_ts"))
-      .agg(rawAggs.head, rawAggs.tail: _*)
+    foldRows(turnRows(turns, bucketWidth(col("ts"), spec, nearest)))
 
   /** Salted two-phase variant for skewed inputs: phase 1 aggregates
     * (conv, bucket, salt) partials — spreading a hot key over
@@ -198,20 +213,14 @@ object Rollup {
     * exactly [[rollupRaw]] because the metric set is algebraic.
     */
   def rollupRawSalted(turns: DataFrame, tier: Tier, saltBuckets: Int = 16): DataFrame = {
-    val partial = turns
-      .withColumn("_salt", pmod(hash(col("turn_idx"), col("ts")), lit(saltBuckets)))
-      .groupBy(col("conv_id"), bucket(col("ts"), tier).as("bucket_ts"), col("_salt"))
-      .agg(rawAggs.head, rawAggs.tail: _*)
-    partial
-      .groupBy(col("conv_id"), col("bucket_ts"))
-      .agg(foldAggs.head, foldAggs.tail: _*)
+    val salted = turns.select(Seq(col("conv_id"), bucket(col("ts"), tier).as("bucket_ts"),
+      pmod(hash(col("turn_idx"), col("ts")), lit(saltBuckets)).as("_salt")) ++ unitMetrics: _*)
+    foldRows(foldRows(salted, col("_salt")))
   }
 
   /** finer tier rows → coarser tier rows (e.g. 1m → 1h). */
   def foldTier(finer: DataFrame, to: Tier): DataFrame =
-    finer
-      .groupBy(col("conv_id"), bucket(col("bucket_ts"), to).as("bucket_ts"))
-      .agg(foldAggs.head, foldAggs.tail: _*)
+    foldRows(finer.withColumn("bucket_ts", bucket(col("bucket_ts"), to)))
 
   /** The full cascade from raw turns: returns tier name → rows.
     * 1m is computed from raw; 1h folds 1m; 1d folds 1h.

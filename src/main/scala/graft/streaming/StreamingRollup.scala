@@ -60,7 +60,7 @@ object StreamingRollup {
 
   /** The native Structured-Streaming rollup: event-time watermark +
     * tumbling window over the SAME algebraic metric set as the batch
-    * tiers (`Rollup.rawAggs` shape), state bounded by the watermark.
+    * tiers (`Rollup.rollupRaw` shape), state bounded by the watermark.
     * Use when a continuously-running query (not the batch-incremental
     * store) should serve the finest tier; its output rows fold with
     * `Rollup.foldAggs` exactly like any tier.

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -241,12 +242,16 @@ final class ChronoTable private (
   /** Direct read of one parquet FOOTER (like Iceberg's manifest
     * metadata), NO Spark job. None if the footer is unreadable — the
     * entry then simply lacks the fact rather than failing the commit.
+    * The reader takes its options from the session's Hadoop
+    * configuration: `open(InputFile)` alone builds a fresh
+    * `Configuration` per footer, re-parsing the Hadoop default XML
+    * resources each time.
     */
   private def footer[A](p: Path)(f: ParquetFileReader => A): Option[A] =
     scala.util.Try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new HPath(p.toUri), spark.sparkContext.hadoopConfiguration)
-      val r = ParquetFileReader.open(in)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new HPath(p.toUri), conf)
+      val r = ParquetFileReader.open(in, HadoopReadOptions.builder(conf).build())
       try f(r) finally r.close()
     }.toOption
 
@@ -316,11 +321,20 @@ final class ChronoTable private (
 
   /** Retention: metadata-drop every partition whose values satisfy
     * `expired`. Data files stay on disk until [[vacuum]] reclaims
-    * whatever the retained snapshots no longer reference.
+    * whatever the retained snapshots no longer reference. Carries the
+    * parent's [[ChronoTable.ConsumedSrcKey]] forward.
     */
   def dropPartitions(expired: Map[String, String] => Boolean,
       summary: Map[String, String] = Map.empty): Long =
-    overwritePartitions(expired, None, op = "retention-drop", summary = summary)
+    overwritePartitions(expired, None, op = "retention-drop", summary = maintained(summary))
+
+  /** `summary` of a maintenance commit (retention, compaction): it
+    * consumes no source, so it keeps the parent's source watermark
+    * unless `summary` sets one.
+    */
+  private def maintained(summary: Map[String, String]): Map[String, String] =
+    currentSnapshot.flatMap(_.summary.get(ConsumedSrcKey))
+      .fold(summary)(w => Map(ConsumedSrcKey -> w) ++ summary)
 
   /** Small-file compaction (the third Iceberg maintenance op next to
     * retention and [[vacuum]]): rewrite every partition matching
@@ -328,8 +342,9 @@ final class ChronoTable private (
     * per partition, in a single copy-on-write commit. Rows are
     * byte-identical; only the file layout (and per-row `batch_id`
     * lineage, which coarsens to the compaction's own snapshot id, as
-    * in Iceberg's rewrite_data_files) changes. Returns the snapshot
-    * id, or the current one when nothing qualifies.
+    * in Iceberg's rewrite_data_files) changes; the commit carries the
+    * parent's [[ChronoTable.ConsumedSrcKey]] forward. Returns the
+    * snapshot id, or the current one when nothing qualifies.
     */
   def compact(select: Map[String, String] => Boolean = _ => true,
       minFiles: Int = 2): Long = {
@@ -351,7 +366,7 @@ final class ChronoTable private (
       op: String, summary: Map[String, String])(layout: DataFrame => DataFrame): Long =
     overwritePartitions(p => targets.keys.exists(k => parsePartition(k) == p),
       Some(layout(readFiles(targets.values.flatten.toSeq, snap.flatMap(_.schema))
-        .drop("batch_id"))), op, summary)
+        .drop("batch_id"))), op, maintained(summary))
 
   /** Sort-clustered compaction (Iceberg `rewrite_data_files` with a
     * sort order): rewrite the selected partitions with rows RANGE-
@@ -622,6 +637,13 @@ object ChronoTable {
       files: Seq[FileEntry],
       summary: Map[String, String],
       schema: Option[StructType] = None)
+
+  /** Snapshot-summary key of a derived table's source watermark: the
+    * source snapshot id whose rows the commit reflects (a rollup tier's
+    * `consumed_src`). Maintenance commits carry it forward, so a
+    * retention drop or a compaction never rewinds the consumer.
+    */
+  val ConsumedSrcKey = "consumed_src"
 
   /** Footer key under which Spark's parquet writer stores the written
     * Spark schema (JSON) — the schema parquet inference reads back.

@@ -51,6 +51,9 @@ class AppSpec extends SparkSuite {
     val pins = graft.plans.TierRouting.servingPins(wh)
     assert(pins.map { case (t, p) => t -> p.snapshotId } ==
       Tier.cascade.map(t => t.name -> store.tier(t).currentSnapshotId).toMap, pins.toString)
+    // retention kept the 1m watermark: the pin still names the raw
+    // snapshot the tier reflects
+    assert(pins("1m").rawSnapshotId != 0L, pins.toString)
     val rowsBefore = store.readTurns().count()
     GraftApp.run(spark, Array("compact", wh))
     GraftApp.run(spark, Array("vacuum", wh, "1"))

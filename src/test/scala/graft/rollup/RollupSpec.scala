@@ -179,6 +179,63 @@ class RollupSpec extends SparkSuite {
     }
   }
 
+  /** Five turns over two days, with null texts (one bucket's only
+    * text is null) and null tools.
+    */
+  private lazy val nullsFixture: DataFrame = {
+    def at(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    Seq(
+      Turn("a", 0, "user", "hi", None, at("2024-01-01T00:00:10Z")),
+      Turn("a", 1, "assistant", null, Some("x"), at("2024-01-01T00:00:50Z")),
+      Turn("a", 2, "tool", "abcd", Some("y"), at("2024-01-01T00:01:20Z")),
+      Turn("a", 3, "user", null, None, at("2024-01-01T01:00:00Z")),
+      Turn("b", 0, "assistant", "hello", None, at("2024-01-02T00:00:00Z"))).toDF()
+  }
+
+  /** (conv_id, bucket start, the nine metrics) per row, sorted. */
+  private def metricRows(df: DataFrame): Seq[Seq[Any]] = {
+    import org.apache.spark.sql.functions._
+    df.select(col("conv_id") +: date_format(col("bucket_ts"), "yyyy-MM-dd HH:mm:ss") +:
+        Rollup.metricCols.map(col): _*)
+      .collect().map(_.toSeq).toSeq.sortBy(r => (r(0).toString, r(1).toString))
+  }
+
+  test("rollupRaw, rollupRawWidth and rollupRawSalted equal hand-computed rows, nulls included") {
+    // turn, tool, text counts, text length sum/min/max, user/assistant/tool
+    val a0 = Seq("a", "2024-01-01 00:00:00")
+    val a1h = a0 ++ Seq(3L, 2L, 2L, 6L, 2L, 4L, 1L, 1L, 1L)
+    val aNull = Seq("a", "2024-01-01 01:00:00", 1L, 0L, 0L, null, null, null, 1L, 0L, 0L)
+    val b = Seq(1L, 0L, 1L, 5L, 5L, 5L, 0L, 1L, 0L)
+    val b0 = Seq("b", "2024-01-02 00:00:00") ++ b
+    val want1m = Seq(a0 ++ Seq(2L, 1L, 1L, 2L, 2L, 2L, 1L, 1L, 0L),
+      Seq("a", "2024-01-01 00:01:00", 1L, 1L, 1L, 4L, 4L, 4L, 0L, 0L, 1L), aNull, b0)
+    val want1d = Seq(a0 ++ Seq(4L, 2L, 2L, 6L, 2L, 4L, 2L, 1L, 1L), b0)
+    val wants = Map[Tier, Seq[Seq[Any]]](Tier.Minute -> want1m, Tier.Hour -> Seq(a1h, aNull, b0), Tier.Day -> want1d)
+    Tier.cascade.foreach { t =>
+      assert(metricRows(Rollup.rollupRaw(nullsFixture, t)) == wants(t), t.name)
+      assert(metricRows(Rollup.rollupRawSalted(nullsFixture, t, 3)) == wants(t), s"salted ${t.name}")
+    }
+    val want30s = Seq(a0 ++ Seq(1L, 0L, 1L, 2L, 2L, 2L, 1L, 0L, 0L),
+      Seq("a", "2024-01-01 00:00:30", 1L, 1L, 0L, null, null, null, 0L, 1L, 0L),
+      want1m(1), aNull, b0)
+    assert(metricRows(Rollup.rollupRawWidth(nullsFixture, "30s")) == want30s)
+    // nearest 5m: every turn of conv a's first minutes is < 2m30s past 00:00
+    assert(metricRows(Rollup.rollupRawWidth(nullsFixture, "5m", nearest = true)) ==
+      Seq(a1h, aNull, b0))
+    assert(metricRows(Rollup.rollupRawWidth(nullsFixture, "1mo")) ==
+      Seq(want1d.head, Seq("b", "2024-01-01 00:00:00") ++ b))
+  }
+
+  test("turnRows folded with existing tier rows equals one rollup of all turns") {
+    import org.apache.spark.sql.functions._
+    val all = turnsDs.toDF()
+    val (older, newer) = (all.filter(pmod(col("turn_idx"), lit(3)) =!= 0),
+      all.filter(pmod(col("turn_idx"), lit(3)) === 0))
+    val merged = Rollup.foldTier(Rollup.rollupRaw(older, Tier.Minute)
+      .unionByName(Rollup.turnRows(newer, Rollup.bucket(col("ts"), Tier.Minute))), Tier.Minute)
+    assert(collectTier(merged) == collectTier(Rollup.rollupRaw(all, Tier.Minute)))
+  }
+
   test("rollup plan has one shuffle and partial aggregation") {
     val plan = Rollup.rollupRaw(turnsDs.toDF(), Tier.Minute)
       .queryExecution.executedPlan.toString

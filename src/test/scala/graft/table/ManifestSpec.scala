@@ -165,11 +165,16 @@ class ManifestSpec extends SparkSuite {
     store.rollupIncremental()
     store.publishServing()
     val b2 = twoDays(82L).withColumn("turn_idx", $"turn_idx" + lit(50000)).cache()
-    store.ingest(b2, dedupe = true)
-    // per tier: the merge write and the lineage append, plus what the
-    // reads plan; no job reads a merged frame a second time for lineage
+    // the deduped ingest: the day probe, the write and one lineage append
+    val ingestJobs = jobsOf(store.ingest(b2, dedupe = true))
+    assert(ingestJobs.size <= 7, ingestJobs.mkString("\n"))
+    // per tier the merge write, plus what the reads plan, and one
+    // lineage append for the whole cascade; no job reads a merged frame
+    // a second time for lineage
+    val metricsBefore = store.metrics.currentSnapshotId
     val jobs = jobsOf(store.rollupIncremental())
-    assert(jobs.size <= 13, jobs.mkString("\n"))
+    assert(jobs.size <= 7, jobs.mkString("\n"))
+    assert(store.metrics.currentSnapshotId == metricsBefore + 1)
     assert(jobsOf(store.publishServing()).isEmpty)
     // a replay adds 0 rows: the cascade only advances its watermarks,
     // and the publish after it starts no job either

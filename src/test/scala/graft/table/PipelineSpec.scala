@@ -57,6 +57,65 @@ class PipelineSpec extends SparkSuite {
     all.unpersist()
   }
 
+  test("three batches over overlapping days, each rolled up, equal one-shot cascade") {
+    val store = new TranscriptStore(spark, tmpWarehouse("three"), convBuckets = 4)
+    val all = TranscriptGen.generate(spark, 18, 30, seed = 13L).toDF().cache()
+    // every batch spans the fixture's days, so each 1m merge folds into
+    // buckets the earlier batches already filled
+    (0 until 3).foreach { i =>
+      store.ingest(all.filter(s"pmod(turn_idx, 3) = $i"))
+      store.rollupIncremental()
+    }
+    Tier.cascade.foreach { t =>
+      assert(tierRows(store.readTier(t)) == tierRows(Rollup.rollupRaw(all, t)),
+        s"three-batch merge broke tier ${t.name}")
+    }
+    all.unpersist()
+  }
+
+  /** Ingest and roll up two batches with `maintain` run on the store in
+    * between; every tier must still equal one rollup of both batches.
+    */
+  private def maintainedBetweenBatches(tag: String)(maintain: TranscriptStore => Unit): Unit = {
+    val store = new TranscriptStore(spark, tmpWarehouse(tag), convBuckets = 2)
+    val b1 = TranscriptGen.generate(spark, 6, 12, seed = 17L).toDF()
+    val b2 = TranscriptGen.generate(spark, 6, 12, seed = 18L).toDF()
+      .withColumn("turn_idx", $"turn_idx" + org.apache.spark.sql.functions.lit(1000))
+    store.ingest(b1)
+    store.rollupIncremental()
+    val watermarks = Tier.cascade.map(t => store.tier(t).currentSnapshot.get.summary("consumed_src"))
+    maintain(store)
+    // the maintenance commit keeps each tier's watermark
+    assert(Tier.cascade.map(t => store.tier(t).currentSnapshot.get.summary("consumed_src")) ==
+      watermarks)
+    store.ingest(b2)
+    store.rollupIncremental()
+    val all = b1.unionByName(b2)
+    Tier.cascade.foreach { t =>
+      assert(tierRows(store.readTier(t)) == tierRows(Rollup.rollupRaw(all, t)),
+        s"$tag: tier ${t.name} re-folded raw")
+    }
+  }
+
+  test("retention keeps each tier's watermark: the next rollup folds only new turns") {
+    maintainedBetweenBatches("retainwm") { store =>
+      val before = Tier.cascade.map(store.tier(_).currentSnapshotId)
+      // generous TTLs: nothing expires, but every table commits
+      store.retain(Map("raw" -> 3650, "1m" -> 3650, "1h" -> 3650, "1d" -> 3650),
+        LocalDate.parse("2024-06-01"))
+      assert(Tier.cascade.map(store.tier(_).currentSnapshotId) == before.map(_ + 1))
+    }
+  }
+
+  test("tier compaction keeps each tier's watermark: the next rollup folds only new turns") {
+    maintainedBetweenBatches("compactwm") { store =>
+      Tier.cascade.foreach { t =>
+        val before = store.tier(t).currentSnapshotId
+        assert(store.tier(t).compact(minFiles = 1) == before + 1, t.name)
+      }
+    }
+  }
+
   test("rollup is a no-op when caught up (idempotent re-run)") {
     val store = new TranscriptStore(spark, tmpWarehouse("noop"), convBuckets = 2)
     store.ingest(TranscriptGen.generate(spark, 8, 10, seed = 3L).toDF())
@@ -143,6 +202,23 @@ class PipelineSpec extends SparkSuite {
     assert(tierRows(store.readTier(Tier.Minute)) == want)
     assert(before.nonEmpty)
     batch.unpersist()
+  }
+
+  test("dedupe screens a key against every day the delivery touches") {
+    val store = new TranscriptStore(spark, tmpWarehouse("dedupedays"), convBuckets = 2)
+    def at(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    val d1 = at("2024-03-01T10:00:00Z")
+    val d2 = at("2024-03-02T10:00:00Z")
+    def turn(conv: String, ts: java.sql.Timestamp) =
+      graft.model.Turn(conv, 0, "user", "t", None, ts)
+    // raw holds k only on day 2, and another key on day 1
+    store.ingest(Seq(turn("k", d2), turn("other", d1)).toDF(), dedupe = true)
+    // the delivery repeats k on day 1 (earlier: the window keeps it) and
+    // on day 2 (dropped by the window); its other row is on day 1
+    val sid = store.ingest(Seq(turn("k", d1), turn("k", d2), turn("other", d1)).toDF(),
+      dedupe = true)
+    assert(store.raw.incrementalFiles(sid - 1, sid).flatMap(_.rows).sum == 0L)
+    assert(store.readTurns().count() == 2L)
   }
 
   test("intra-batch duplicates (retried producer) count once with dedupe") {
