@@ -126,14 +126,9 @@ object TranscriptGen {
     * Must stay semantically identical to [[eventsToTurnsSql]].
     */
   def fromEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    // NOTE (measured, kept for the record): forcing an explicit-width
-    // repartition on user_id here made EVERY turns-derived query
-    // 2-3× slower at sf0.1 (q_turns 0.09 → 0.39 s, q_rollup_30s
-    // 0.25 → 0.72 s) — the window's ~0.2 s of serialized work is
-    // cheaper than 32-task scheduling across the whole downstream
-    // chain. The explicit-width pattern (Dedup.shuffleWidth) only
-    // pays where a stage's serialized CPU is ≥ ~0.5 s; AQE's
-    // byte-coalescing is the right default for this thin derivation.
+    // AQE's byte-coalesced width, not an explicit one
+    // (Dedup.shuffleWidth): this derivation is too thin to pay for
+    // wider scheduling across the whole downstream chain
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     ev.select(

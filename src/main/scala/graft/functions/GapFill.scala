@@ -59,6 +59,16 @@ object GapFill {
         explode(sequence(loChecked, col("hi"), step)).as("bucket_ts"))
   }
 
+  /** The [[grid]] left-joined with the observed `valueCol`, read as
+    * double `_v` (null on a gap).
+    */
+  private def gridded(tierRows: DataFrame, valueCol: String, tier: Tier,
+      maxBucketsPerConv: Long): DataFrame =
+    grid(tierRows, tier, maxBucketsPerConv).join(
+      tierRows.select(col("conv_id"), col("bucket_ts"),
+        col(valueCol).cast("double").as("_v")),
+      Seq("conv_id", "bucket_ts"), "left")
+
   /** Densify + interpolate one metric column of a tier table.
     *
     * @param tierRows (conv_id, bucket_ts, <valueCol>, ...) rows
@@ -67,11 +77,7 @@ object GapFill {
     */
   def linear(tierRows: DataFrame, valueCol: String, tier: Tier,
       maxBucketsPerConv: Long = defaultMaxBucketsPerConv): DataFrame = {
-    val joined = grid(tierRows, tier, maxBucketsPerConv).join(
-      tierRows.select(col("conv_id"), col("bucket_ts"),
-        col(valueCol).cast("double").as("_v")),
-      Seq("conv_id", "bucket_ts"), "left")
-
+    val joined = gridded(tierRows, valueCol, tier, maxBucketsPerConv)
     val byConv = Window.partitionBy(col("conv_id")).orderBy(col("bucket_ts"))
     val back = byConv.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val fwd = byConv.rowsBetween(Window.currentRow, Window.unboundedFollowing)
@@ -97,13 +103,9 @@ object GapFill {
     */
   def locf(tierRows: DataFrame, valueCol: String, tier: Tier,
       maxBucketsPerConv: Long = defaultMaxBucketsPerConv): DataFrame = {
-    val joined = grid(tierRows, tier, maxBucketsPerConv).join(
-      tierRows.select(col("conv_id"), col("bucket_ts"),
-        col(valueCol).cast("double").as("_v")),
-      Seq("conv_id", "bucket_ts"), "left")
     val back = Window.partitionBy(col("conv_id")).orderBy(col("bucket_ts"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    joined.select(
+    gridded(tierRows, valueCol, tier, maxBucketsPerConv).select(
       col("conv_id"), col("bucket_ts"),
       last(col("_v"), ignoreNulls = true).over(back).as("value"),
       col("_v").isNull.as("filled"))
@@ -114,10 +116,7 @@ object GapFill {
     */
   def zero(tierRows: DataFrame, valueCol: String, tier: Tier,
       maxBucketsPerConv: Long = defaultMaxBucketsPerConv): DataFrame =
-    grid(tierRows, tier, maxBucketsPerConv).join(
-        tierRows.select(col("conv_id"), col("bucket_ts"),
-          col(valueCol).cast("double").as("_v")),
-        Seq("conv_id", "bucket_ts"), "left")
+    gridded(tierRows, valueCol, tier, maxBucketsPerConv)
       .select(
         col("conv_id"), col("bucket_ts"),
         coalesce(col("_v"), lit(0.0d)).as("value"),

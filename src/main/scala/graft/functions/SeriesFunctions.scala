@@ -172,20 +172,10 @@ object SeriesFunctions {
       .filter(col("_rn") === 1)
       .select(col(keyCol), col("bucket_ts"),
         col(tsCol).as("_ts_last"), col(valCol).as("_v_last"))
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket_ts"))
-    val us = unix_micros(col("_ts_last").cast("timestamp"))
-    val prevV = lag(col("_v_last"), 1).over(w)
-    val prevUs = lag(us, 1).over(w)
-    val secs = (us - prevUs).cast("double") / lit(1e6)
-    val increase = when(prevV.isNull, lit(null).cast("double"))
-      .when(col("_v_last") < prevV, col("_v_last")) // reset: restart from 0
-      .otherwise(col("_v_last") - prevV)
-    lastPerBucket
-      .withColumn("increase_millis",
-        floor(increase * lit(1000.0)).cast("long"))
-      .withColumn("rate_millis",
-        when(secs > 0, floor(increase * lit(1000.0) / secs).cast("long"))
-          .otherwise(lit(null).cast("long")))
+    // within a key the lasts of distinct buckets strictly increase and
+    // the null-ts rows form one bucket, so `_ts_last` orders the lasts
+    // as `bucket_ts` does, without ties
+    counterRate(lastPerBucket, keyCol, "_ts_last", "_v_last", Seq.empty)
       .select(col(keyCol), col("bucket_ts"),
         col("increase_millis"), col("rate_millis"))
   }

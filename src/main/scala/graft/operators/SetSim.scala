@@ -54,15 +54,7 @@ object SetSim {
     *
     * The rank is one window sort of the VOCABULARY (distinct
     * (stratum, shingle) rows — orders of magnitude below the exploded
-    * shingle stream), single-partition by design. The rail for ~10⁸+
-    * vocabularies is a range-bucketed two-level rank (bucket =
-    * (stratum, _df, 2-char shingle prefix) — a prefix of the global
-    * sort key — rank within buckets + cumulative bucket-count
-    * offsets, the [[TrainingSet.packByTokenBudget]] prefix-sum
-    * shape), which reproduces this rank exactly; it was implemented
-    * and A/B'd at sf0.1 and REVERTED — the extra persist + bucket
-    * aggregate + offsets join cost ~2× more than the flat vocabulary
-    * sort saves at this scale (min-of-7: 4.91 s vs 2.66 s).
+    * shingle stream), single-partition by design.
     */
   private def encode(sh: DataFrame, idCol: String,
       groupCols: Seq[String]): DataFrame = {
@@ -119,12 +111,6 @@ object SetSim {
     //    pair set while hashing every dropped row through the
     //    aggregate first (replacing it was measured ~15% faster, and
     //    the dedup shrinks to a plain distinct on the id pair).
-    // A shorter ASYMMETRIC probe prefix (2t/(1+t) bound on the
-    // smaller side of each size-ordered pair — PPJoin's self-join
-    // refinement) was implemented and A/B'd: min-of-8 6.0 s vs 2.1 s
-    // for this form at sf0.1 — the compound size-order join predicate
-    // defeated the planner (a straggling single-task stage appeared
-    // downstream); rejected, kept symmetric.
     left.join(right, Seq("_sid"))
       .filter(col("id1") < col("id2"))
       .filter(greatest(col("_sz1"), col("_sz2")) * lit(tNum.toLong) <=

@@ -58,14 +58,41 @@ object Similarity {
     val other = embeddings
       .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("nv"))
       .withColumn("nn", norm(col("nv")))
-    val pairs = base.join(other, col("qid") =!= col("nid"))
+    rankTopK(base.join(other, col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"))
+        (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos")), k)
+  }
+
+  /** The top `k` of scored (qid, nid, cos) rows per qid as (qid, rank,
+    * nid): rank ties are broken by neighbor id.
+    */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    pairs.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"))
   }
+
+  /** (id, v, n): every vector double-cast and its norm computed once,
+    * materialized so the pair sides that attach it share one scan.
+    */
+  private def vectors(embeddings: DataFrame, idCol: String, vecCol: String): DataFrame =
+    embeddings
+      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+      .withColumn("n", norm(col("v")))
+      .localCheckpoint(eager = false)
+
+  /** (a, b, cos) for the id pairs of `pairs`: both sides' vectors and
+    * norms attach by id from `vecs` (id, v, n), and the cosine keeps
+    * the exact expression shape dot/(n·n) of [[cosineTopK]], so the
+    * doubles are bit-identical to it.
+    */
+  private def cosines(pairs: DataFrame, a: String, b: String, vecs: DataFrame): DataFrame =
+    pairs
+      .join(vecs.select(col("id").as(a), col("v").as("_va"), col("n").as("_na")), Seq(a))
+      .join(vecs.select(col("id").as(b), col("v").as("_vb"), col("n").as("_nb")), Seq(b))
+      .select(col(a), col(b),
+        (dot(col("_va"), col("_vb")) / (col("_na") * col("_nb"))).as("cos"))
 
   /** splitmix64 finalizer — deterministic driver-side pseudo-random
     * stream for hyperplane components (no RNG object to ship; every
@@ -96,10 +123,6 @@ object Similarity {
       acc.bitwiseOR(when(planeDot > 0, shiftleft(lit(1L), p)).otherwise(lit(0L)))
     }
 
-  /** Candidate pairs (id1 < id2, deduped) sharing an LSH bucket in
-    * any rotation — the embedding analog of [[Dedup.lshCandidates]]:
-    * equi-join on (rot, bucket), shuffle ∝ Σ bucket², never n².
-    */
   /** Vector dimension as table metadata: one tiny driver-side peek.
     * None on an empty table — callers short-circuit to an empty
     * result instead of throwing NoSuchElementException.
@@ -109,19 +132,25 @@ object Similarity {
       .select(size(col(vecCol)).as("d"))
       .head(1).headOption.map(_.getInt(0))
 
-  def lshPairs(embeddings: DataFrame, idCol: String, vecCol: String,
-      planes: Int = 8, rotations: Int = 4): DataFrame = {
-    val dim = dimOf(embeddings, vecCol).getOrElse {
-      return embeddings.limit(0)
-        .select(col(idCol).as("id1"), col(idCol).as("id2"))
-    }
-    val vecs = embeddings.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    // ONE pass computes every rotation's bucket (posexplode of an
-    // array of bucket keys — pos IS the rotation index), instead of a
-    // rotations-way unionByName that cloned and recomputed the vector
-    // scan per rotation; materialized once before the self-join so
-    // the two join sides share it (guide §2.4). The checkpointed rows
-    // are (id, rot, bucket) — no vector payload.
+  /** The empty result of a pair builder: (id1, id2) typed as `idCol`. */
+  private def noPairs(embeddings: DataFrame, idCol: String): DataFrame =
+    embeddings.limit(0).select(col(idCol).as("id1"), col(idCol).as("id2"))
+
+  /** The empty result of a top-k: (qid, rank, nid). */
+  private def noTopK(embeddings: DataFrame, idCol: String): DataFrame =
+    embeddings.limit(0).select(col(idCol).as("qid"), lit(0L).as("rank"),
+      col(idCol).as("nid"))
+
+  /** Unordered pairs (id1 < id2, deduped) of `vecs` (id, v) rows that
+    * share an LSH bucket in any rotation: equi-join on (rot, bucket),
+    * shuffle ∝ Σ bucket², never n². ONE pass computes every rotation's
+    * bucket (posexplode of an array of bucket keys — pos IS the
+    * rotation index), materialized once before the self-join so the
+    * two join sides share it (guide §2.4). The join carries only
+    * (rot, bucket, id), no vector payload.
+    */
+  private def bucketPairs(vecs: DataFrame, planes: Int, rotations: Int,
+      dim: Int): DataFrame = {
     val bucketed = vecs
       .select(col("id"), posexplode(array((0 until rotations).map(r =>
         lshBucket(col("v"), planes, r, dim)): _*)).as(Seq("rot", "bucket")))
@@ -133,6 +162,16 @@ object Similarity {
       .select("id1", "id2").distinct()
   }
 
+  /** Candidate pairs (id1 < id2, deduped) sharing an LSH bucket in
+    * any rotation — the embedding analog of [[Dedup.lshCandidates]].
+    */
+  def lshPairs(embeddings: DataFrame, idCol: String, vecCol: String,
+      planes: Int = 8, rotations: Int = 4): DataFrame = {
+    val dim = dimOf(embeddings, vecCol).getOrElse(return noPairs(embeddings, idCol))
+    bucketPairs(embeddings.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")),
+      planes, rotations, dim)
+  }
+
   /** Exact near-duplicate verification for a candidate pair table:
     * keep pairs with cosine ≥ threshold, emitting integral
     * `cos_millis` = floor(1000·cos) so the output hash-compares.
@@ -140,21 +179,11 @@ object Similarity {
     * oracle baseline.
     */
   def cosineNearDup(embeddings: DataFrame, idCol: String, vecCol: String,
-      pairs: DataFrame, threshold: Double): DataFrame = {
-    // one materialization: (id, vec, norm) feeds both pair sides
-    val vecs = embeddings
-      .select(col(idCol).as("_id"), asDouble(col(vecCol)).as("_v"))
-      .withColumn("_n", norm(col("_v")))
-      .localCheckpoint(eager = false)
-    pairs
-      .join(vecs.select(col("_id").as("id1"), col("_v").as("v1"), col("_n").as("n1")), Seq("id1"))
-      .join(vecs.select(col("_id").as("id2"), col("_v").as("v2"), col("_n").as("n2")), Seq("id2"))
-      .select(col("id1"), col("id2"),
-        (dot(col("v1"), col("v2")) / (col("n1") * col("n2"))).as("cos"))
+      pairs: DataFrame, threshold: Double): DataFrame =
+    cosines(pairs, "id1", "id2", vectors(embeddings, idCol, vecCol))
       .filter(col("cos") >= threshold)
       .select(col("id1"), col("id2"),
         floor(col("cos") * 1000).cast("long").as("cos_millis"))
-  }
 
   // ------------------------------------------------------------------
   // IVF-Flat: the k-means inverted-file ANN (the second scale path the
@@ -322,9 +351,7 @@ object Similarity {
     */
   def ivfPairs(embeddings: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, iters: Int = 3): DataFrame = {
-    if (dimOf(embeddings, vecCol).isEmpty)
-      return embeddings.limit(0)
-        .select(col(idCol).as("id1"), col(idCol).as("id2"))
+    if (dimOf(embeddings, vecCol).isEmpty) return noPairs(embeddings, idCol)
     val cents = trainIvfCentroids(embeddings, idCol, vecCol, nlist, iters)
     // materialize the skinny (cid, id) assignment once: the self-join
     // below would otherwise clone the plan and run the O(n·nlist)
@@ -356,9 +383,7 @@ object Similarity {
   def ivfTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       k: Int, nlist: Int = 16, nprobe: Int = 4, iters: Int = 3,
       trainFraction: Double = 1.0): DataFrame = {
-    if (dimOf(embeddings, vecCol).isEmpty)
-      return embeddings.limit(0).select(col(idCol).as("qid"),
-        lit(0L).as("rank"), col(idCol).as("nid"))
+    if (dimOf(embeddings, vecCol).isEmpty) return noTopK(embeddings, idCol)
     val cents = trainIvfCentroids(embeddings, idCol, vecCol, nlist, iters,
       trainFraction)
     // ONE evaluation of the O(nlist·dim) probe expression per row
@@ -391,70 +416,31 @@ object Similarity {
     val cands = probes.join(lists, Seq("cid"))
       .filter(col("qid") =!= col("nid"))
       .select("qid", "nid")
-    val scored = cands
-      .join(vecs.select(col("id").as("qid"), col("v").as("qv"),
-        col("n").as("qn")), Seq("qid"))
-      .join(vecs.select(col("id").as("nid"), col("v").as("nv"),
-        col("n").as("nn")), Seq("nid"))
-      .select(col("qid"), col("nid"),
-        (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"))
+    rankTopK(cosines(cands, "qid", "nid", vecs), k)
   }
 
   /** ANN top-k via bucketed self-join over `rotations` plane families.
     * Same output shape as [[cosineTopK]]; recall < 1 by construction.
     *
-    * Plan shape (the 100-TB path): norms are computed once per vector
-    * BEFORE the bucket join (mirroring [[cosineTopK]]); the join
-    * carries (id, vec, norm) keyed on (rot, bucket) — shuffle ∝
-    * Σ bucket², never n²; multi-rotation duplicate pairs are deduped
-    * AFTER scoring by a groupBy on (qid, nid) alone, so no full
-    * vectors flow through the dedup exchange.
+    * Plan shape (the 100-TB path): candidates are [[lshPairs]]'s
+    * deduped bucket pairs in both orientations; norms are computed
+    * once per vector before any join (mirroring [[cosineTopK]]), and
+    * no vector flows through the bucket join or its dedup exchange.
     */
   def lshTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       k: Int, planes: Int = 8, rotations: Int = 4): DataFrame = {
-    val dim = dimOf(embeddings, vecCol).getOrElse {
-      return embeddings.limit(0).select(col(idCol).as("qid"),
-        lit(0L).as("rank"), col(idCol).as("nid"))
-    }
-    // (id, vec, norm) materialized ONCE — norms before any join, as
-    // before, but now also shared by both score-attach sides; every
-    // rotation's bucket comes from ONE pass (posexplode — pos IS the
-    // rotation), not a rotations-way union recomputing the scan.
-    // The bucket self-join carries ONLY (rot, bucket, id): vector
-    // payloads attach to the DEDUPED candidate pairs afterwards, so
-    // the collision-prone exchange ships a few bytes per row instead
-    // of the vectors `rotations` times (guide §8). Cross-rotation
-    // duplicate pairs collapse on distinct (qid, nid) — the pair's
-    // cosine is rotation-independent, so distinct-then-score equals
-    // the old score-then-max(cos) row for row.
-    val vecs = embeddings
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("n", norm(col("v")))
-      .localCheckpoint(eager = false)
-    val bucketed = vecs
-      .select(col("id"), posexplode(array((0 until rotations).map(r =>
-        lshBucket(col("v"), planes, r, dim)): _*)).as(Seq("rot", "bucket")))
-      .localCheckpoint(eager = false)
-    val cands = bucketed.select(col("rot"), col("bucket"), col("id").as("qid"))
-      .join(bucketed.select(col("rot"), col("bucket"), col("id").as("nid")),
-        Seq("rot", "bucket"))
-      .filter(col("qid") =!= col("nid"))
-      .select("qid", "nid").distinct()
-    val scored = cands
-      .join(vecs.select(col("id").as("qid"), col("v").as("qv"),
-        col("n").as("qn")), Seq("qid"))
-      .join(vecs.select(col("id").as("nid"), col("v").as("nv"),
-        col("n").as("nn")), Seq("nid"))
-      .select(col("qid"), col("nid"),
-        (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"))
+    val dim = dimOf(embeddings, vecCol).getOrElse(return noTopK(embeddings, idCol))
+    // (id, v, n) materialized ONCE, shared by the bucket pass and both
+    // score-attach sides; vector payloads attach to the deduped pairs
+    // only (guide §8). A pair's cosine is rotation-independent, so both
+    // orientations of the distinct unordered pairs equal the distinct
+    // ordered collisions; the orientations are disjoint (id1 < id2), so
+    // their union needs no second distinct.
+    val vecs = vectors(embeddings, idCol, vecCol)
+    val pairs = bucketPairs(vecs, planes, rotations, dim)
+    val cands = pairs.select(col("id1").as("qid"), col("id2").as("nid"))
+      .unionByName(pairs.select(col("id2").as("qid"), col("id1").as("nid")))
+    rankTopK(cosines(cands, "qid", "nid", vecs), k)
   }
 
   // --- parameter auto-scaling -------------------------------------

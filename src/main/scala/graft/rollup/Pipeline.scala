@@ -33,7 +33,8 @@ import graft.table.ChronoTable
   * copy-on-write commit; 1h/1d recompute their affected day partitions
   * from the full (already-merged) finer tier, which is idempotent by
   * construction. Lineage rows are appended once per call: one
-  * `metrics` commit for an ingest, one for a whole rollup cascade.
+  * `metrics` commit for an ingest, one for a whole rollup cascade, one
+  * for a retention pass that dropped anything.
   */
 final class TranscriptStore(
     val spark: SparkSession,
@@ -251,7 +252,7 @@ final class TranscriptStore(
 
     step(tier1m, tier1h, "1h")((_, _, days) => fold(tier1m, Tier.Hour)(days))
     step(tier1h, tier1d, "1d")((_, _, days) => fold(tier1h, Tier.Day)(days))
-    if (lineageRows.nonEmpty) appendLineage(lineageRows)
+    appendLineage(lineageRows)
     report
   }
 
@@ -323,23 +324,27 @@ final class TranscriptStore(
   /** TTL retention relative to an explicit `today` (no wall-clock —
     * determinism per FIXTURES.md). Raw keeps `ttlDays("raw")` days,
     * tiers their own budgets; expired `ts_day` partitions are
-    * metadata-dropped.
+    * metadata-dropped. Returns per named table the partitions dropped.
+    * A table with nothing expired commits nothing. The lineage rows of
+    * every table that dropped are appended once, after the last drop,
+    * as one `metrics` snapshot; a crash before that append loses this
+    * call's lineage rows (a re-run finds nothing expired and writes
+    * none), never a drop.
     */
   def retain(ttlDays: Map[String, Int], today: LocalDate): Map[String, Long] = {
-    def drop(t: ChronoTable, name: String): Option[(String, Long)] =
-      ttlDays.get(name).map { ttl =>
+    val drops = Seq("raw" -> raw, "1m" -> tier1m, "1h" -> tier1h, "1d" -> tier1d)
+      .flatMap { case (name, t) => ttlDays.get(name).map { ttl =>
         val cutoff = today.minusDays(ttl.toLong).toString
-        val before = t.livePartitions.size
-        val sid = t.dropPartitions(
-          p => p.get("ts_day").exists(_ < cutoff),
-          summary = Map("cutoff" -> cutoff))
-        val after = t.livePartitions.size
-        appendLineage(Seq(lineage("retention", name, sid,
-          perDayFrame(Seq((cutoff, (before - after).toLong, 0L))))))
-        name -> (before - after).toLong
-      }
-    Seq(drop(raw, "raw"), drop(tier1m, "1m"), drop(tier1h, "1h"),
-      drop(tier1d, "1d")).flatten.toMap
+        def expired(p: Map[String, String]) = p.get("ts_day").exists(_ < cutoff)
+        val n = t.livePartitions.count(expired).toLong
+        val lin = if (n == 0L) None else {
+          val sid = t.dropPartitions(expired, summary = Map("cutoff" -> cutoff))
+          Some(lineage("retention", name, sid, perDayFrame(Seq((cutoff, n, 0L)))))
+        }
+        (name -> n, lin)
+      } }
+    appendLineage(drops.flatMap(_._2))
+    drops.map(_._1).toMap
   }
 
   /** Compact multi-file partitions across every table (S11's
@@ -390,14 +395,14 @@ final class TranscriptStore(
       col("rows").cast("long").as("row_cnt"),
       col("rollup_rows").cast("long").as("rolled_turn_cnt"))
 
-  /** Append the lineage rows of one or more commits as one `metrics`
-    * snapshot (one file), its summary naming their jobs.
+  /** Append the lineage rows of the given commits as one `metrics`
+    * snapshot (one file), its summary naming their distinct jobs; no
+    * commits, no snapshot.
     */
-  private def appendLineage(rows: Seq[(String, DataFrame)]): Unit = {
-    metrics.append(rows.map(_._2).reduce(_ unionByName _).coalesce(1),
-      Map("job" -> rows.map(_._1).mkString(",")))
-    ()
-  }
+  private def appendLineage(rows: Seq[(String, DataFrame)]): Unit =
+    rows.map(_._2).reduceOption(_ unionByName _).foreach { all =>
+      metrics.append(all.coalesce(1), Map("job" -> rows.map(_._1).distinct.mkString(",")))
+    }
 
   def readMetrics(): DataFrame = metrics.read()
 

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
-import graft.rollup.TranscriptStore
+import graft.rollup.{Rollup, TranscriptStore}
 
 /** Structured Streaming wrapper around the batch pipeline (SURVEY.md
   * §2.8): `foreachBatch` funnels each micro-batch through the SAME
@@ -37,13 +37,17 @@ object StreamingRollup {
   /** Drain everything currently available, then stop — the batch-like
     * invocation used by tests and catch-up jobs.
     */
-  def runOnce(stream: DataFrame, store: TranscriptStore, checkpointDir: String): Unit = {
-    val q: StreamingQuery = writer(stream, store)
-      .option("checkpointLocation", checkpointDir)
+  def runOnce(stream: DataFrame, store: TranscriptStore, checkpointDir: String): Unit =
+    drain(writer(stream, store), checkpointDir)
+
+  /** Run `w` over everything currently available, checkpointed in
+    * `checkpointDir`, and wait for it to stop.
+    */
+  private[streaming] def drain(w: DataStreamWriter[Row], checkpointDir: String): Unit =
+    w.option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 
   /** Streaming exact dedup on the transcript key: state-backed
     * `dropDuplicatesWithinWatermark` on (conv_id, turn_idx) — the
@@ -58,19 +62,6 @@ object StreamingRollup {
       .withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark("conv_id", "turn_idx")
 
-  /** The native Structured-Streaming rollup: event-time watermark +
-    * tumbling window over the SAME algebraic metric set as the batch
-    * tiers (`Rollup.rollupRaw` shape), state bounded by the watermark.
-    * Use when a continuously-running query (not the batch-incremental
-    * store) should serve the finest tier; its output rows fold with
-    * `Rollup.foldAggs` exactly like any tier.
-    *
-    * Late data beyond `lateness` is dropped by the watermark — the
-    * streaming-world analog of the batch pipeline's snapshot
-    * watermark, trading the batch path's perfect replay for bounded
-    * state. Output mode append: a window emits once, when the
-    * watermark passes its end.
-    */
   /** Add an event-time watermark on `ts` unless the plan already has
     * one (Spark disallows redefinition — composing [[dedupedTurns]]
     * in front of [[windowedRollup]] must not set it twice).
@@ -81,23 +72,30 @@ object StreamingRollup {
     }.isDefined) df
     else df.withWatermark("ts", lateness)
 
+  /** The native Structured-Streaming rollup: event-time watermark +
+    * tumbling window over the batch tiers' one metric set
+    * (`Rollup.turnRows` folded by `Rollup.foldAggs`, as
+    * `Rollup.rollupRaw` does), state bounded by the watermark.
+    * Use when a continuously-running query (not the batch-incremental
+    * store) should serve the finest tier; its output rows fold with
+    * `Rollup.foldAggs` exactly like any tier.
+    *
+    * Late data beyond `lateness` is dropped by the watermark — the
+    * streaming-world analog of the batch pipeline's snapshot
+    * watermark, trading the batch path's perfect replay for bounded
+    * state. Output mode append: a window emits once, when the
+    * watermark passes its end.
+    */
   def windowedRollup(stream: DataFrame, tier: graft.model.Tier,
       lateness: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val winSpec = s"${tier.millis / 1000L} seconds"
-    ensureWatermark(stream, lateness)
-      .groupBy(col("conv_id"), window(col("ts"), winSpec).as("w"))
-      .agg(
-        count(lit(1)).as("turn_cnt"),
-        count(col("tool")).as("tool_cnt"),
-        count(col("text")).as("text_cnt"),
-        sum(length(col("text")).cast("long")).as("text_len_sum"),
-        min(length(col("text")).cast("long")).as("text_len_min"),
-        max(length(col("text")).cast("long")).as("text_len_max"),
-        count(when(col("role") === "user", 1)).as("role_user_cnt"),
-        count(when(col("role") === "assistant", 1)).as("role_assistant_cnt"),
-        count(when(col("role") === "tool", 1)).as("role_tool_cnt"))
+    import org.apache.spark.sql.functions.{col, window}
+    // turnRows aliases `ts` as `bucket_ts`, and the alias keeps the
+    // watermark, so it sits on the grouped column
+    val aggs = Rollup.foldAggs
+    Rollup.turnRows(ensureWatermark(stream, lateness), col("ts"))
+      .groupBy(col("conv_id"), window(col("bucket_ts"), s"${tier.millis / 1000L} seconds").as("w"))
+      .agg(aggs.head, aggs.tail: _*)
       .select((col("conv_id") +: col("w.start").as("bucket_ts") +:
-        graft.rollup.Rollup.metricCols.map(col)): _*)
+        Rollup.metricCols.map(col)): _*)
   }
 }

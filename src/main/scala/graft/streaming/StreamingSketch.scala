@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Sketches
 import graft.table.ChronoTable
@@ -51,13 +51,8 @@ object StreamingSketch {
 
   /** Drain all currently-available input, then stop. */
   def runOnce(stream: DataFrame, fpCol: Column, depth: Int, width: Int,
-      sketchTable: ChronoTable, checkpointDir: String): Unit = {
-    val q: StreamingQuery = writer(stream, fpCol, depth, width, sketchTable)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      sketchTable: ChronoTable, checkpointDir: String): Unit =
+    StreamingRollup.drain(writer(stream, fpCol, depth, width, sketchTable), checkpointDir)
 
   /** The current full-stream sketch: sum of all committed partials.
     * Read cost is (batches × depth × width) rows until [[compact]]

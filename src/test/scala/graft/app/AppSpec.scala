@@ -128,4 +128,29 @@ class AppSpec extends SparkSuite {
     assert(got == want, s"streaming windows diverge: ${got.size} vs ${want.size}")
     assert(got.nonEmpty)
   }
+
+  test("windowed streaming rollup folds null-text turns as the batch tier does") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val base = TranscriptGen.generate(spark, 3, 10, seed = 53L).collect().toSeq
+    val t0 = base.head
+    // one null text beside texts in a bucket, one bucket of only a null text
+    val turns = base ++ Seq(t0.copy(turn_idx = 900, text = null),
+      t0.copy(conv_id = "null-only", text = null))
+    val ms = MemoryStream[graft.model.Turn]
+    val q = StreamingRollup.windowedRollup(ms.toDF(), Tier.Minute)
+      .writeStream.format("memory").queryName("null_text_rollup")
+      .outputMode("append").start()
+    ms.addData(turns)
+    ms.addData(Seq(graft.model.Turn("zz-flush", 0, "user", "x", None,
+      new java.sql.Timestamp(turns.map(_.ts.getTime).max + 86400000L))))
+    q.processAllAvailable()
+    q.stop()
+    val cols = graft.model.Schemas.tier.fieldNames.toSeq.map(org.apache.spark.sql.functions.col)
+    val got = spark.table("null_text_rollup").filter($"conv_id" =!= "zz-flush")
+      .select(cols: _*).collect().toSet
+    val want = Rollup.rollupRaw(turns.toDF(), Tier.Minute).select(cols: _*).collect().toSet
+    assert(got == want)
+    assert(got.exists(r => r.getString(0) == "null-only" && r.isNullAt(5)))
+  }
 }

@@ -116,6 +116,29 @@ class SeriesFunctionsSpec extends SparkSuite {
       ("2024-01-01 13:00:00.0", 2000L, 0L)))      // reset; Δt = 2h real
   }
 
+  test("counterRateBucketed: tie on a bucket's last ts, a null-ts row, a reset on a last") {
+    val df = Seq(
+      // a null ts forms its own bucket, ordered before every other
+      ("u1", null, 1.0, 9L),
+      // hour 10: two samples tie on the last ts; orderCols picks id 3
+      ("u1", ts("2024-01-01 10:10:00"), 5.0, 1L),
+      ("u1", ts("2024-01-01 10:40:00"), 700.0, 3L),
+      ("u1", ts("2024-01-01 10:40:00"), 900.0, 2L),
+      // hour 11: the bucket's last sample is the reset (36 < 700)
+      ("u1", ts("2024-01-01 11:20:00"), 800.0, 4L),
+      ("u1", ts("2024-01-01 11:40:00"), 36.0, 5L)
+    ).toDF("series", "ts", "value", "sample_id")
+    val out = SeriesFunctions
+      .counterRateBucketed(df, "series", "ts", "value", "1h", Seq("sample_id"))
+      .collect().map(r => (Option(r.getTimestamp(1)).map(_.toString),
+        if (r.isNullAt(2)) -1L else r.getLong(2),
+        if (r.isNullAt(3)) -1L else r.getLong(3))).sortBy(_._1)
+    assert(out.toSeq === Seq(
+      (None, -1L, -1L),                            // first: no prior
+      (Some("2024-01-01 10:00:00.0"), 699000L, -1L), // 700 − 1; prior ts null
+      (Some("2024-01-01 11:00:00.0"), 36000L, 10L))) // reset; Δt = 1h real
+  }
+
   test("sketch rolling actives within 5% of exact at a 30-day window") {
     // the >~2-week scale path: per-day HLL partials merge across the
     // window, so the shuffle never multiplies by windowDays. Realistic

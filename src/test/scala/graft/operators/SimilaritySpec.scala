@@ -60,6 +60,27 @@ class SimilaritySpec extends SparkSuite {
     assert(mean >= 0.6, s"mean ANN recall too low vs candidate volume: $mean")
   }
 
+  test("LSH top-k with k >= n ranks both orientations of lshPairs by cosine") {
+    val vecs = emb.select($"vec_id", $"embedding")
+      .as[(Long, Seq[Float])].collect().toMap
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      val ad = a.map(_.toDouble); val bd = b.map(_.toDouble)
+      val d = ad.zip(bd).map { case (x, y) => x * y }.sum
+      d / (math.sqrt(ad.map(x => x * x).sum) * math.sqrt(bd.map(x => x * x).sum))
+    }
+    val pairs = Similarity.lshPairs(emb, "vec_id", "embedding", planes = 6, rotations = 3)
+      .as[(Long, Long)].collect()
+    val want = (pairs ++ pairs.map(_.swap)).groupBy(_._1).map { case (q, ps) =>
+      q -> ps.map(_._2).toSeq.sortBy(n => (-cos(vecs(q), vecs(n)), n))
+    }
+    val got = Similarity.lshTopK(emb, "vec_id", "embedding",
+        k = vecs.size, planes = 6, rotations = 3)
+      .as[(Long, Long, Long)].collect()
+      .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._2).map(_._3).toSeq }
+    assert(want.nonEmpty)
+    assert(got == want)
+  }
+
   test("cosine near-dup: LSH candidate path recovers exactly the brute pairs") {
     val dv = emb.select($"vec_id", $"embedding").unionByName(
       emb.filter($"vec_id" % 10 === 0)

@@ -75,13 +75,19 @@ class PipelineSpec extends SparkSuite {
 
   /** Ingest and roll up two batches with `maintain` run on the store in
     * between; every tier must still equal one rollup of both batches.
+    * With `expired`, a copy of the first batch 60 days older is ingested
+    * with it, and `maintain` must drop it from raw and from every tier.
     */
-  private def maintainedBetweenBatches(tag: String)(maintain: TranscriptStore => Unit): Unit = {
+  private def maintainedBetweenBatches(tag: String, expired: Boolean = false)(
+      maintain: TranscriptStore => Unit): Unit = {
+    import org.apache.spark.sql.functions.expr
     val store = new TranscriptStore(spark, tmpWarehouse(tag), convBuckets = 2)
     val b1 = TranscriptGen.generate(spark, 6, 12, seed = 17L).toDF()
     val b2 = TranscriptGen.generate(spark, 6, 12, seed = 18L).toDF()
-      .withColumn("turn_idx", $"turn_idx" + org.apache.spark.sql.functions.lit(1000))
-    store.ingest(b1)
+      .withColumn("turn_idx", $"turn_idx" + 1000)
+    val old = b1.withColumn("ts", expr("ts - INTERVAL 60 DAYS"))
+      .withColumn("turn_idx", $"turn_idx" + 2000)
+    store.ingest(if (expired) b1.unionByName(old) else b1)
     store.rollupIncremental()
     val watermarks = Tier.cascade.map(t => store.tier(t).currentSnapshot.get.summary("consumed_src"))
     maintain(store)
@@ -98,13 +104,30 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("retention keeps each tier's watermark: the next rollup folds only new turns") {
-    maintainedBetweenBatches("retainwm") { store =>
+    maintainedBetweenBatches("retainwm", expired = true) { store =>
       val before = Tier.cascade.map(store.tier(_).currentSnapshotId)
-      // generous TTLs: nothing expires, but every table commits
-      store.retain(Map("raw" -> 3650, "1m" -> 3650, "1h" -> 3650, "1d" -> 3650),
-        LocalDate.parse("2024-06-01"))
+      val metricsBefore = store.metrics.currentSnapshotId
+      // the old copy's days lie past a 30-day TTL, the first batch's not
+      val dropped = store.retain(Map("raw" -> 30, "1m" -> 30, "1h" -> 30, "1d" -> 30),
+        LocalDate.parse("2024-01-01"))
+      assert(dropped.keySet == Set("raw", "1m", "1h", "1d") && dropped.values.forall(_ > 0),
+        dropped.toString)
       assert(Tier.cascade.map(store.tier(_).currentSnapshotId) == before.map(_ + 1))
+      // one lineage append for every table that dropped
+      assert(store.metrics.currentSnapshotId == metricsBefore + 1)
     }
+  }
+
+  test("a retain that expires nothing leaves every table's CURRENT and metrics unchanged") {
+    val store = new TranscriptStore(spark, tmpWarehouse("retainnone"), convBuckets = 2)
+    store.ingest(TranscriptGen.generate(spark, 6, 12, seed = 17L).toDF())
+    store.rollupIncremental()
+    val tables = Seq(store.raw, store.metrics) ++ Tier.cascade.map(store.tier)
+    val before = tables.map(_.currentSnapshotId)
+    val dropped = store.retain(Map("raw" -> 3650, "1m" -> 3650, "1h" -> 3650, "1d" -> 3650),
+      LocalDate.parse("2024-06-01"))
+    assert(dropped == Map("raw" -> 0L, "1m" -> 0L, "1h" -> 0L, "1d" -> 0L))
+    assert(tables.map(_.currentSnapshotId) == before)
   }
 
   test("tier compaction keeps each tier's watermark: the next rollup folds only new turns") {
