@@ -19,7 +19,9 @@ import graft.rollup.Rollup
   *    `BENCH/LAST_BENCH.json`) with per-query wall times on
   *    `SPARK_GRAFT_SF_DIR` plus the headline BASELINE metric — rolled-up
   *    turns/sec through the production-shaped 1m→1h→1d cascade on a
-  *    generated input (see [[writeTurns]]).
+  *    generated input (see [[writeTurns]]). A run that
+  *    `SPARK_GRAFT_ONLY` narrows skips the headline and writes it as
+  *    `null`.
   *  - `scale`: every query but [[notScaled]] at the SF and at
   *    `SPARK_GRAFT_SCALE_FACTOR` (default 10) times it, as one JSON line
   *    `{"sf_dir","factor","queries":{q:{"t1","t10","ratio"}}}`. `t10`
@@ -73,8 +75,9 @@ object Bench {
     val results = timeAll(spark, sfDir, queries, runs = 2, errors)
 
     // headline: rolled-up turns/sec across the cascade (write-path
-    // shape, matching the pipeline's tier commits)
-    val throughput = attempt(errors, "rollup_throughput") {
+    // shape, matching the pipeline's tier commits); a full run only
+    val throughput = if (queries.size < SparkEntry.queries.size) "null"
+      else attempt(errors, "rollup_throughput") {
       val base = Files.createTempDirectory("graft-bench-").toString
       // ~9M turns: large enough that the cascade measures engine
       // throughput, not fixed job overhead
@@ -83,7 +86,7 @@ object Bench {
       cascade(spark, s"$base/turns", base) // warm-up
       n / math.min(cascade(spark, s"$base/turns", base),
         cascade(spark, s"$base/turns", base))
-    }
+    }.toString
 
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -98,11 +98,7 @@ object Dedup {
     */
   def charShingles(df: DataFrame, idCol: String, textCol: String, n: Int,
       keepCols: Seq[String] = Nil): DataFrame =
-    df.repartition(shuffleWidth(df), col(idCol))
-      .select(keepCols.map(col) :+ col(idCol) :+
-        explode(array_distinct(transform(
-          sequence(lit(1), greatest(length(col(textCol)) - (n - 1), lit(1))),
-          i => col(textCol).substr(i, lit(n))))).as("shingle"): _*)
+    shingled(df, idCol, textCol, n, keepCols)(array_distinct)
 
   /** [[charShingles]] WITHOUT the distinct — for duplicate-insensitive
     * consumers only (the min aggregates of [[minHashSignatures]]:
@@ -113,19 +109,25 @@ object Dedup {
     */
   def charShinglesRaw(df: DataFrame, idCol: String, textCol: String, n: Int,
       keepCols: Seq[String] = Nil): DataFrame =
-    // hash-repartition BEFORE the explode: document corpora arrive as
-    // few-hundred-KB..MB parquet files, i.e. ONE scan split under
-    // spark.sql.files.maxPartitionBytes — so the explode (|text|·n
-    // substrings per doc, the operator's heaviest map work) would run
-    // in a single task while every other core idles. The exchange
-    // moves only the raw (id, text) rows once, sized by
-    // spark.sql.shuffle.partitions (scale-adaptive: session conf, not
-    // a constant; EXPLICIT width — see [[shuffleWidth]]).
+    shingled(df, idCol, textCol, n, keepCols)(identity)
+
+  /** The one shingle body: explode `arr` of the text's n-gram array.
+    * It hash-repartitions BEFORE the explode: document corpora arrive
+    * as few-hundred-KB..MB parquet files, i.e. ONE scan split under
+    * spark.sql.files.maxPartitionBytes — so the explode (|text|·n
+    * substrings per doc, the operator's heaviest map work) would run
+    * in a single task while every other core idles. The exchange
+    * moves only the raw (id, text) rows once, sized by
+    * spark.sql.shuffle.partitions (scale-adaptive: session conf, not a
+    * constant; EXPLICIT width — see [[shuffleWidth]]).
+    */
+  private def shingled(df: DataFrame, idCol: String, textCol: String, n: Int,
+      keepCols: Seq[String])(arr: Column => Column): DataFrame =
     df.repartition(shuffleWidth(df), col(idCol))
       .select(keepCols.map(col) :+ col(idCol) :+
-        explode(transform(
+        explode(arr(transform(
           sequence(lit(1), greatest(length(col(textCol)) - (n - 1), lit(1))),
-          i => col(textCol).substr(i, lit(n)))).as("shingle"): _*)
+          i => col(textCol).substr(i, lit(n))))).as("shingle"): _*)
 
   /** MinHash signature: for each id, k minima of a universal affine
     * family over the shingle's [[graft.functions.TextFunctions]]
@@ -171,22 +173,11 @@ object Dedup {
         col("_band.band_hash").as("band_hash"))
   }
 
-  /** Candidate pairs: ids sharing ≥1 LSH band. Self equi-join on the
-    * band key; id1 < id2 halves the pairs; distinct dedups multi-band
-    * hits.
+  /** Candidate pairs: ids sharing ≥1 LSH band — [[lshCandidatesGrouped]]
+    * with no strata.
     */
-  def lshCandidates(bandsDf: DataFrame, idCol: String): DataFrame = {
-    // materialize the band table ONCE before the self-join: the join
-    // clones its input plan, so the minhash chain behind it was
-    // otherwise computed twice (guide §2.4). The checkpointed frame
-    // is (id, band_idx, band_hash) — O(n·bands) skinny rows.
-    val bands = materializeOnce(bandsDf)
-    val a = bands.select(col("band_idx"), col("band_hash"), col(idCol).as("id1"))
-    val b = bands.select(col("band_idx"), col("band_hash"), col(idCol).as("id2"))
-    a.join(b, Seq("band_idx", "band_hash"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-  }
+  def lshCandidates(bandsDf: DataFrame, idCol: String): DataFrame =
+    bandPairs(bandsDf, idCol, Nil)
 
   /** [[lshCandidates]] scoped WITHIN strata: `groups` maps each id to
     * its `groupCols` values (e.g. (lang, source)), which join into
@@ -201,15 +192,21 @@ object Dedup {
     * reason the exact set-similarity join does.
     */
   def lshCandidatesGrouped(bandsDf: DataFrame, idCol: String,
-      groups: DataFrame, groupCols: Seq[String]): DataFrame = {
-    // same single-materialization discipline as [[lshCandidates]]
-    val keyed = materializeOnce(bandsDf.join(groups, Seq(idCol)))
+      groups: DataFrame, groupCols: Seq[String]): DataFrame =
+    bandPairs(bandsDf.join(groups, Seq(idCol)), idCol, groupCols)
+
+  /** The one band self-join: equi-join on (`groupCols`, band_idx,
+    * band_hash); id1 < id2 halves the pairs; distinct dedups
+    * multi-band hits. The keyed band table is materialized ONCE
+    * before the join: the join clones its input plan, so the minhash
+    * chain behind it was otherwise computed twice (guide §2.4). That
+    * frame is (keys, id) — O(n·bands) skinny rows.
+    */
+  private def bandPairs(keyed: DataFrame, idCol: String, groupCols: Seq[String]): DataFrame = {
+    val bands = materializeOnce(keyed)
     val key = groupCols ++ Seq("band_idx", "band_hash")
-    val a = keyed.select((key :+ idCol).map(col): _*)
-      .withColumnRenamed(idCol, "id1")
-    val b = keyed.select((key :+ idCol).map(col): _*)
-      .withColumnRenamed(idCol, "id2")
-    a.join(b, key)
+    def side(id: String) = bands.select(key.map(col) :+ col(idCol).as(id): _*)
+    side("id1").join(side("id2"), key)
       .filter(col("id1") < col("id2"))
       .select("id1", "id2").distinct()
   }

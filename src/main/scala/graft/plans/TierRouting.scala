@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, TimestampType
 import org.apache.spark.sql.{Column, GraftShims, SparkSessionExtensions}
 
 import graft.model.Tier
-import graft.rollup.Rollup
-import graft.table.ChronoTable
+import graft.rollup.{Rollup, TranscriptStore}
 
 /** Continuous-aggregate query routing (SURVEY.md §4 item 3, the
   * optimizer-stretch goal): a logical [[Rule]] that rewrites
@@ -47,9 +46,13 @@ import graft.table.ChronoTable
   *    is the classic materialized-view-matching bug).
   *  - the tier must be published AND fresh: `publishServing` pins
   *    each tier's snapshot with the raw-table snapshot it reflects
-  *    ([[pinsPath]]); the rule compares that against the raw
-  *    ChronoTable's CURRENT snapshot, refuses to serve stale
-  *    aggregates, and scans the pinned snapshot's live files.
+  *    ([[pinsPath]]; 0 unless the cascade up to it was caught up);
+  *    the rule opens the warehouse as a [[TranscriptStore]], compares
+  *    the pin against its raw table's CURRENT snapshot, refuses to
+  *    serve stale aggregates, and scans the pinned snapshot's live
+  *    files. A maintenance commit on raw moves CURRENT, so routing is
+  *    off until the next publish (a retention drop adds no file) or
+  *    rollup (a compaction adds files).
   *  - when the requested width has no (fresh) tier, the rule folds
   *    the coarsest FINER tier whose width divides the request — a 1d
   *    query with no 1d tier re-buckets the 1h tier, still orders of
@@ -189,13 +192,6 @@ object TierRouting {
       case _ => None
     }).toMap).getOrElse(Map.empty)
 
-  /** The raw ChronoTable's CURRENT snapshot — the id serving data must
-    * have consumed to be fresh. 0 (→ never route) when the warehouse
-    * has no tracked raw table.
-    */
-  private def rawCurrentSid(warehouse: String): Long =
-    Try(Files.readString(Paths.get(warehouse, "raw_turns", "CURRENT")).trim.toLong).getOrElse(0L)
-
   object RouteToTier extends Rule[LogicalPlan] {
 
     /** The scan beneath the aggregate plus all Filter conjuncts met
@@ -313,7 +309,8 @@ object TierRouting {
       */
     private def pickServingTier(wh: String, months: Option[Int],
         fixedUs: Long): Option[(LogicalPlan, Tier)] = {
-      val needSid = rawCurrentSid(wh)
+      val store = new TranscriptStore(SparkSession.active, wh)
+      val needSid = store.raw.currentSnapshotId
       lazy val pins = servingPins(wh)
       if (needSid <= 0L) None
       else Tier.cascade
@@ -324,8 +321,7 @@ object TierRouting {
         .sortBy(-_.millis) // coarsest usable first
         .view
         .flatMap(t => pins.get(t.name).filter(_.rawSnapshotId >= needSid).flatMap(pin =>
-          Try(ChronoTable(SparkSession.active, s"$wh/tier_${t.name}", Seq("ts_day"))
-            .read(pin.snapshotId).queryExecution.analyzed).toOption
+          Try(store.tier(t).read(pin.snapshotId).queryExecution.analyzed).toOption
             .filter(_.output.nonEmpty).map(_ -> t)))
         .headOption
     }

@@ -177,22 +177,33 @@ final class TranscriptStore(
   private def consumedSrc(s: Option[ChronoTable.Snapshot]): Long =
     s.flatMap(_.summary.get(ChronoTable.ConsumedSrcKey)).map(_.toLong).getOrElse(0L)
 
+  /** The cascade's one caught-up rule: the data files `src` added in
+    * (the source snapshot `dst` consumed, `srcSid`], from the manifest
+    * alone. A table is caught up with its source when there are none,
+    * so a commit that adds no file (a retention drop, a 0-row batch)
+    * never makes a consumer lag, and one that adds files (new data, a
+    * compaction) always does.
+    */
+  private def pending(src: ChronoTable, srcSid: Long, dst: Option[ChronoTable.Snapshot]) =
+    src.incrementalFiles(consumedSrc(dst), srcSid)
+
   private def withDay(df: DataFrame): DataFrame =
     df.withColumn("ts_day", date_format(col("bucket_ts"), "yyyy-MM-dd"))
 
   private val tierCols = Seq("conv_id", "bucket_ts") ++ Rollup.metricCols
 
   /** Run the incremental cascade; returns per-tier merged-row counts.
-    * No-op (returns empty) when every tier is already caught up.
-    * Safe to re-run after a crash at ANY point for the tiers: their
-    * data and watermarks change in one commit each. The lineage rows
-    * of every tier the call committed are appended once, after the
+    * A tier that is caught up with its source ([[pending]]) commits
+    * nothing, so a call with nothing new returns empty and writes no
+    * snapshot. Safe to re-run after a crash at ANY point for the tiers:
+    * their data and watermarks change in one commit each. The lineage
+    * rows of every tier the call committed are appended once, after the
     * last tier commit, as one `metrics` snapshot; a crash before that
     * append loses this call's lineage rows (the re-run finds the tiers
     * caught up and writes none), never tier data.
     *
     * Bookkeeping comes from the manifests, not from Spark jobs: an
-    * increment is empty when it added no files, its affected days are
+    * increment is its source's pending files, its affected days are
     * those files' `ts_day` partitions (a 1m/1h/1d floor never leaves
     * its source row's day), and a merge's row count is the footer rows
     * of the files it committed.
@@ -206,19 +217,13 @@ final class TranscriptStore(
     // recomputes the tier rows of the increment's affected days
     def step(src: ChronoTable, dst: ChronoTable, label: String)(
         rows: (Long, Long, Set[String]) => DataFrame): Unit = {
-      val srcCur = src.currentSnapshotId
-      val consumed = consumedSrc(dst.currentSnapshot)
-      val stamp = Map(ChronoTable.ConsumedSrcKey -> srcCur.toString)
-      if (consumed < srcCur) {
-        val files = src.incrementalFiles(consumed, srcCur)
-        // empty increment: just advance the watermark atomically
-        if (files.isEmpty) dst.overwritePartitions(_ => false, None, op = "noop", summary = stamp)
-        else {
-          val days = files.map(dayOf).toSet
-          val (n, lin) = commitTier(dst, label, rows(consumed, srcCur, days), days, stamp)
-          report += label -> n
-          lineageRows :+= lin
-        }
+      val (srcCur, dstSnap) = (src.currentSnapshotId, dst.currentSnapshot)
+      val days = pending(src, srcCur, dstSnap).map(dayOf).toSet
+      if (days.nonEmpty) {
+        val (n, lin) = commitTier(dst, label, rows(consumedSrc(dstSnap), srcCur, days),
+          days, Map(ChronoTable.ConsumedSrcKey -> srcCur.toString))
+        report += label -> n
+        lineageRows :+= lin
       }
     }
 
@@ -409,21 +414,24 @@ final class TranscriptStore(
   /** Publish the tiers to routed reads by pinning their CURRENT
     * snapshots: no data moves. One atomic write (old pins or new, never
     * a mix; [[graft.plans.TierRouting.pinsPath]]) records per tier its
-    * snapshot id and the raw snapshot id that snapshot fully reflects
-    * (0 when a fold in the cascade chain lags). TierRouting plans the
-    * pinned snapshot's files and refuses a pin behind the raw table's
-    * CURRENT — serving can lag, but a routed query never silently
-    * returns stale aggregates; [[vacuum]] keeps the pinned snapshots.
+    * snapshot id and the raw snapshot id that snapshot fully reflects:
+    * its source's (raw's CURRENT for 1m) when the tier is caught up with
+    * its source's pinned snapshot ([[pending]]), else 0. TierRouting
+    * plans the pinned snapshot's files and refuses a pin behind the raw
+    * table's CURRENT — serving can lag, but a routed query never
+    * silently returns stale aggregates; [[vacuum]] keeps the pinned
+    * snapshots. Tiers keep their own TTLs: after a raw-only retention
+    * they still hold the days raw dropped.
     */
   def publishServing(): Unit = {
-    val Seq(m, h, d) = Tier.cascade.map(tier(_).currentSnapshot)
     def sid(s: Option[ChronoTable.Snapshot]) = s.fold(0L)(_.id)
-    // a coarser tier reflects what its finer one does once it consumed
-    // the finer tier's CURRENT
-    val r1m = consumedSrc(m)
-    val r1h = if (consumedSrc(h) >= sid(m)) r1m else 0L
-    val r1d = if (consumedSrc(d) >= sid(h)) r1h else 0L
-    ChronoTable.atomicWrite(TierRouting.pinsPath(warehouse), Seq("1m" -> (m, r1m), "1h" -> (h, r1h), "1d" -> (d, r1d))
-      .map { case (t, (s, r)) => s"$t ${sid(s)} $r\n" }.mkString)
+    val chain = (raw +: Tier.cascade.map(tier)).map(t => t -> t.currentSnapshot)
+    // a tier reflects what its source does while caught up with it
+    var reflects = sid(chain.head._2)
+    val lines = Tier.cascade.zip(chain.zip(chain.tail)).map { case (t, ((src, s), (_, snap))) =>
+      if (pending(src, sid(s), snap).nonEmpty) reflects = 0L
+      s"${t.name} ${sid(snap)} $reflects\n"
+    }
+    ChronoTable.atomicWrite(TierRouting.pinsPath(warehouse), lines.mkString)
   }
 }

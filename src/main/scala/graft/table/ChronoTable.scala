@@ -32,8 +32,7 @@ import graft.table.ChronoTable._
   *     `rm -rf`, unlike the reference's `clear_output`,
   *     /root/reference/jaeger_prometheus_joining/controlflow/
   *     JoinManager.py:189-195),
-  *   - rollback (repoint CURRENT at an earlier snapshot),
-  *   - named consumer checkpoints.
+  *   - rollback (repoint CURRENT at an earlier snapshot).
   *
   * Physical layout under `root`:
   * {{{
@@ -42,7 +41,6 @@ import graft.table.ChronoTable._
   *                                // footer rows, ts/key bounds) and
   *                                // the read schema of those files
   *   CURRENT                      // latest committed snapshot id
-  *   checkpoints/<name>.json      // consumer watermarks
   * }}}
   *
   * `batch_id` is written as a partition-style directory so one
@@ -284,22 +282,16 @@ final class ChronoTable private (
       } finally stream.close()
     }
 
-  /** Append `df` as a new snapshot; returns the snapshot id. A crash
-    * at any point leaves the table readable at its previous snapshot.
-    */
-  def append(df: DataFrame, summary: Map[String, String] = Map.empty): Long = {
-    val sid = currentSnapshotId + 1
-    val added = stageBatch(df, sid)
-    val live = liveFiles() ++ added
-    writeSnapshot(Snapshot(sid, sid - 1, "append", live,
-      summary + ("added_files" -> added.size.toString), readSchemaOf(live)))
-    sid
-  }
+  /** Append `df` as a new snapshot: an overwrite that drops nothing. */
+  def append(df: DataFrame, summary: Map[String, String] = Map.empty): Long =
+    overwritePartitions(_ => false, Some(df), op = "append", summary = summary)
 
   /** Copy-on-write overwrite of the partitions matching `drop`:
     * removes their files from the live set and appends `replacement`
     * (may be empty) in ONE commit — the MERGE primitive of the tier
-    * tables.
+    * tables, and every other commit's body. Returns the snapshot id. A
+    * crash at any point leaves the table readable at its previous
+    * snapshot.
     */
   def overwritePartitions(
       drop: Map[String, String] => Boolean,
@@ -574,37 +566,17 @@ final class ChronoTable private (
   def livePartitions: Seq[Map[String, String]] =
     liveFiles().map(f => parsePartition(f.partition)).distinct
 
-  // ------------------------------------------------------------------
-  // consumer checkpoints
-  // ------------------------------------------------------------------
-
-  private def ckptPath(name: String) = Paths.get(root, "checkpoints", s"$name.json")
-
-  def checkpoint(name: String): Long = {
-    val p = ckptPath(name)
-    if (!Files.exists(p)) 0L
-    else mapper.readTree(Files.readString(p)).get("lastSnapshotId").asLong
+  /** Total live rows at the current snapshot from manifest-recorded
+    * footer counts — O(files) driver-side metadata, NO data scan: what
+    * parameter-sizing consumers (e.g. the auto-ANN paths' `nHint`)
+    * should pass instead of paying a full `count()` scan of the corpus.
+    * None before the first commit, or when any live file predates
+    * row-count recording (conservative: a partial sum must not
+    * masquerade as the corpus size).
+    */
+  def rowCount: Option[Long] = currentSnapshot.flatMap { s =>
+    if (s.files.exists(_.rows.isEmpty)) None else Some(s.files.flatMap(_.rows).sum)
   }
-
-  /** Total live rows at `snapshotId` from manifest-recorded footer
-    * counts — O(files) driver-side metadata, NO data scan. None when
-    * any live file predates row-count recording (conservative: a
-    * partial sum must not masquerade as the corpus size).
-    */
-  def rowCountAt(snapshotId: Long): Option[Long] =
-    snapshot(snapshotId).flatMap { s =>
-      if (s.files.exists(_.rows.isEmpty)) None
-      else Some(s.files.flatMap(_.rows).sum)
-    }
-
-  /** [[rowCountAt]] the current snapshot — what parameter-sizing
-    * consumers (e.g. the auto-ANN paths' `nHint`) should pass instead
-    * of paying a full `count()` scan of the corpus.
-    */
-  def rowCount: Option[Long] = rowCountAt(currentSnapshotId)
-
-  def setCheckpoint(name: String, lastSnapshotId: Long): Unit =
-    atomicWrite(ckptPath(name), s"""{"lastSnapshotId": $lastSnapshotId}""")
 }
 
 object ChronoTable {

@@ -656,6 +656,28 @@ class TierRoutingSpec extends SparkSuite {
     assert(rowsOf(q) == raw)
   }
 
+  test("after a raw-plus-tiers retention, a publish alone restores routing") {
+    import org.apache.spark.sql.functions.expr
+    // the raw parquet dir holds what the retention keeps; the store
+    // also holds a copy 60 days older, which the retention expires
+    val turns = TranscriptGen.generate(spark, 6, 12, seed = 103L).toDF()
+    val (rawDir, _, store) = mkStore(turns, publish = false)
+    store.ingest(turns.withColumn("ts", expr("ts - INTERVAL 60 DAYS"))
+      .withColumn("turn_idx", $"turn_idx" + 2000))
+    store.rollupIncremental()
+    store.publishServing()
+    def q = hourly(spark.read.parquet(rawDir))
+    assert(scansTier(q, "1h"))
+    val dropped = store.retain(Map("raw" -> 30, "1m" -> 30, "1h" -> 30, "1d" -> 30),
+      java.time.LocalDate.parse("2024-01-01"))
+    assert(dropped.values.forall(_ > 0), dropped.toString)
+    // the drop moved raw CURRENT past the pins
+    assert(!scansAnyTier(q))
+    store.publishServing()
+    assert(scansTier(q, "1h"), q.queryExecution.optimizedPlan.toString)
+    assert(rowsOf(q) == rowsOf(hourly(spark.read.parquet(rawDir).localCheckpoint())))
+  }
+
   test("vacuum(1) after an unpublished rollup keeps the published snapshot readable") {
     val (rawDir, wh, store) =
       mkStore(TranscriptGen.generate(spark, 6, 12, seed = 100L).toDF(), publish = true)

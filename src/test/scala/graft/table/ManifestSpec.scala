@@ -176,7 +176,7 @@ class ManifestSpec extends SparkSuite {
     assert(jobs.size <= 7, jobs.mkString("\n"))
     assert(store.metrics.currentSnapshotId == metricsBefore + 1)
     assert(jobsOf(store.publishServing()).isEmpty)
-    // a replay adds 0 rows: the cascade only advances its watermarks,
+    // a replay adds 0 rows: the cascade commits nothing,
     // and the publish after it starts no job either
     store.ingest(b2, dedupe = true)
     assert(store.raw.incrementalFiles(store.raw.currentSnapshotId - 1).isEmpty)

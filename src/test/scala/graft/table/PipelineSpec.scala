@@ -461,14 +461,57 @@ class PipelineSpec extends SparkSuite {
     val store = new TranscriptStore(spark, wh, convBuckets = 2)
     store.ingest(TranscriptGen.generate(spark, 4, 8, seed = 45L).toDF())
     store.rollupIncremental()
+    store.ingest(TranscriptGen.generate(spark, 4, 8, seed = 44L).toDF()
+      .withColumn("turn_idx", $"turn_idx" + 100))
+    store.rollupIncremental()
     // 1m moves on alone (a crash before the 1h fold): 1h and 1d
     // reflect no raw snapshot until the cascade catches up
-    store.tier1m.overwritePartitions(_ => false, None, op = "noop",
-      summary = Map("consumed_src" -> store.raw.currentSnapshotId.toString))
+    Seq(store.tier1h, store.tier1d).foreach(t => t.rollback(t.currentSnapshotId - 1))
     store.publishServing()
     val pins = graft.plans.TierRouting.servingPins(wh)
     assert(pins("1m").rawSnapshotId == store.raw.currentSnapshotId)
     assert(pins("1h").rawSnapshotId == 0L && pins("1d").rawSnapshotId == 0L, pins.toString)
+    // caught up again, a 1m commit that adds no file keeps it so
+    store.rollupIncremental()
+    store.tier1m.dropPartitions(_ => false)
+    store.publishServing()
+    assert(graft.plans.TierRouting.servingPins(wh).values.map(_.rawSnapshotId).toSet ==
+      Set(store.raw.currentSnapshotId))
+  }
+
+  test("a 1m-only retention that drops a day keeps 1h and 1d pinned at raw CURRENT") {
+    import org.apache.spark.sql.functions.expr
+    val wh = tmpWarehouse("pinretain")
+    val store = new TranscriptStore(spark, wh, convBuckets = 2)
+    val b = TranscriptGen.generate(spark, 4, 8, seed = 47L).toDF()
+    store.ingest(b.unionByName(b.withColumn("ts", expr("ts - INTERVAL 60 DAYS"))
+      .withColumn("turn_idx", $"turn_idx" + 2000)))
+    store.rollupIncremental()
+    assert(store.retain(Map("1m" -> 30), LocalDate.parse("2024-01-01"))("1m") > 0)
+    store.publishServing()
+    val pins = graft.plans.TierRouting.servingPins(wh)
+    assert(pins.keySet == Set("1m", "1h", "1d"))
+    assert(pins.values.forall(_.rawSnapshotId == store.raw.currentSnapshotId), pins.toString)
+    assert(pins("1m").snapshotId == store.tier1m.currentSnapshotId)
+  }
+
+  test("a 0-row deduped replay commits no tier snapshot, and the pins reach raw CURRENT") {
+    val wh = tmpWarehouse("replay")
+    val store = new TranscriptStore(spark, wh, convBuckets = 2)
+    val b = TranscriptGen.generate(spark, 4, 8, seed = 48L).toDF().cache()
+    store.ingest(b)
+    store.rollupIncremental()
+    val tiers = Tier.cascade.map(store.tier)
+    val before = tiers.map(_.currentSnapshotId)
+    val rawBefore = store.raw.currentSnapshotId
+    store.ingest(b, dedupe = true)
+    assert(store.raw.currentSnapshotId == rawBefore + 1)
+    assert(store.rollupIncremental().isEmpty)
+    assert(tiers.map(_.currentSnapshotId) == before)
+    store.publishServing()
+    assert(graft.plans.TierRouting.servingPins(wh).values.map(_.rawSnapshotId).toSet ==
+      Set(store.raw.currentSnapshotId))
+    b.unpersist()
   }
 
   test("a non-UTC session is refused by ingest and rollupIncremental, naming the zone") {
