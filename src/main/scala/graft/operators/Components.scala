@@ -17,13 +17,18 @@ import org.apache.spark.sql.functions._
   * jumping, pure DataFrame algebra, run by the shared [[FixPoint]]
   * driver (checkpointing, release, `maxIter`):
   *
-  *  - each round relaxes every edge (label ← min(label, neighbor
-  *    labels)) — one equi-join + one map-side-combined min aggregate,
-  *    shuffle keyed on node id;
-  *  - then pointer-jumps (label ← label(label)) — a second equi-join
-  *    that halves label-chain length, so rounds are O(log diameter),
-  *    not O(diameter): a 64-link duplicate chain resolves in ~6
-  *    rounds (spec-pinned);
+  *  - each round relaxes every edge and pointer-jumps in one pass:
+  *    label(x) ← min label(c) over the candidates c = label(x) and
+  *    the neighbors' labels. The edges are checkpointed partitioned on
+  *    their target and the labels on node id, so the neighbor join is
+  *    co-partitioned; a round shuffles only the candidates (to look up
+  *    their labels) and the map-side-combined min aggregate, and the
+  *    checkpoint job that stores the new labels counts the changed
+  *    ones: three jobs per round;
+  *  - the lookup halves label-chain length, so rounds are
+  *    O(log diameter), not O(diameter): a 64-link duplicate chain
+  *    resolves in 7 rounds plus the one that finds no change
+  *    (spec-pinned at maxIter 10);
   *  - labels only decrease and are bounded below by the component
   *    min, so the changed-row count reaching 0 IS convergence — the
   *    loop needs no structural cycle handling (cycles are fine:
@@ -32,7 +37,7 @@ import org.apache.spark.sql.functions._
   * At 100 TB the dominant cost is the per-round edge join; edges come
   * from LSH banding, so |edges| ≈ near-dup pairs (orders of magnitude
   * below n²), and hot components (a viral boilerplate text with 10⁶
-  * copies) collapse toward their min label after the first jump round
+  * copies) collapse toward their min label after the first round
   * rather than ping-ponging labels across the cluster.
   */
 object Components {
@@ -61,14 +66,16 @@ object Components {
       // otherwise be cloned into each round's plan (the universe is
       // joined into the edge plan twice, the edges by both directions)
       // and re-walked by every round's size estimation.
-      val universe = cp(ids.select(col(idCol).as("_u")).distinct())
+      val universe = cp(ids.select(col(idCol).as("_u")).distinct(), Seq("_u"))
       // direction-doubling via explode, NOT a self-union: a union
       // clones the caller's whole candidate-chain plan.
       // repartition on _b BEFORE the distinct: HashPartitioning(_b) is
       // a subset of the distinct's (_a, _b) clustering keys, so the
       // dedup aggregate reuses the repartition exchange — one exchange
-      // of the edge table, not two — and the checkpoint keeps the _b
-      // partitioning every round's label join reuses (guide §2.4).
+      // of the edge table, not two. The checkpoint declares that _b
+      // partitioning, and the labels are kept partitioned on _id, so
+      // every round's label join is co-partitioned: the edges are
+      // shuffled once, here, never per round.
       val edges = cp(pairs
         .select(explode(array(
           struct(col("id1").as("_a"), col("id2").as("_b")),
@@ -77,46 +84,46 @@ object Components {
         .join(universe.withColumnRenamed("_u", "_a"), Seq("_a"), "left_semi")
         .join(universe.withColumnRenamed("_u", "_b"), Seq("_b"), "left_semi")
         .repartition(col("_b"))
-        .distinct())
+        .distinct(), Seq("_b"))
       // a bare projection of the checkpointed universe (O(1) lineage
-      // already); progress 1 = not yet relaxed. The universe is kept
-      // while labels read it, the edges are a loop input.
+      // and the _id partitioning already); progress 1 = not yet
+      // relaxed. The universe is kept while labels read it, the edges
+      // are a loop input.
       val labels = universe.select(col("_u").as("_id"), col("_u").as("_comp"))
       FixPoint.Step((edges, labels), 1L, Seq(universe))
     } { case (cp, (edges, labels)) =>
-      // edge relax as ONE grouped min over (self label ∪ neighbor
-      // labels) — the union needs no second join back onto labels,
-      // and the old label rides along (max ignores the neighbor
-      // rows' nulls; each _id has exactly one self row)
+      // relax and pointer jump in one pass: label(x) ← the least
+      // label(c) over the candidates c = label(x) and every neighbor
+      // label — the neighbor join is co-partitioned (edges on _b,
+      // labels on _id), the candidates are shuffled once to look up
+      // their own label, and the grouped min lands on the _id
+      // partitioning the next round joins on. The old label rides
+      // along in max (the neighbor rows carry null; each _id has
+      // exactly one self row). Every label value is itself a node id
+      // with exactly one label row, so the lookup join is 1:1. The
+      // merge hints keep both joins on the partitioning their inputs
+      // have, instead of a broadcast job per join.
       val nbr = edges
-        .join(labels.select(col("_id").as("_b"), col("_comp").as("_nc")), Seq("_b"))
-        .select(col("_a").as("_id"), col("_nc").as("_cand"),
-          lit(null).cast(labelType).as("_old"))
-      val relaxed = cp(labels // feeds BOTH jump sides — never recomputed
+        .join(labels.select(col("_id").as("_b"), col("_comp").as("_cand")).hint("merge"),
+          Seq("_b"))
+        .select(col("_a").as("_id"), col("_cand"), lit(null).cast(labelType).as("_old"))
+      val lookup = labels.select(col("_id").as("_cand"), col("_comp").as("_jump"))
+      // progress = the labels the round changed, flagged against the
+      // round's input and counted by the checkpoint job. Labels only
+      // decrease (label(c) ≤ c, and label(x) is a candidate) and stay
+      // at or above the component min, so the loop ends; and a round
+      // that changes nothing IS the fixed point: no neighbor holds a
+      // smaller label (label(label(d)) ≤ label(d)), so labels are
+      // constant per component and the component min pins the constant.
+      val (next, changed) = cp.counted(labels
         .select(col("_id"), col("_comp").as("_cand"), col("_comp").as("_old"))
         .unionByName(nbr)
+        .join(lookup.hint("merge"), Seq("_cand"))
         .groupBy(col("_id"))
-        .agg(min(col("_cand")).as("_tmp"), max(col("_old")).as("_old")))
-      // pointer jump: label ← label(label). Every label value is
-      // itself a node id with exactly one relaxed row, so the inner
-      // equi-join is 1:1 and row-preserving. Not checkpointed: both
-      // sides read the materialized `relaxed`, and it is evaluated
-      // lazily inside the next round's relax plan (twice: self rows
-      // and the neighbor join), which costs less than the eager
-      // barrier job a checkpoint would add (2 jobs/round, not 3)
-      val lookup = relaxed.select(col("_id").as("_tmp"), col("_tmp").as("_cc"))
-      val jumped = relaxed
-        .join(lookup, Seq("_tmp"))
-        .select(col("_id"), col("_cc").as("_comp"))
-      // progress = the RELAX delta, a bare scan of the materialized
-      // `relaxed`. Stopping on it is EQUIVALENT to stopping on the
-      // jump result: at a relax fixpoint every (direction-doubled)
-      // edge has equal labels on both ends, so labels are constant per
-      // component and the component min pins the constant — the jump
-      // is then the identity; conversely any relax change
-      // tmp(x) < old(x) forces jumped(x) ≤ tmp(x) < old(x).
-      val changed = relaxed.filter(col("_tmp") =!= col("_old")).count()
-      FixPoint.Step((edges, jumped), changed, Seq(relaxed))
+        .agg(min(col("_jump")).as("_comp"), max(col("_old")).as("_old"))
+        .select(col("_id"), col("_comp"), (col("_comp") =!= col("_old")).as("_changed")),
+        col("_changed"), Seq("_id"))
+      FixPoint.Step((edges, next), changed, Seq(next))
     }._2.select(col("_id").as(idCol), col("_comp").as("component"))
   }
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Tree / hierarchy depth features over an edge table — the engine
   * counterpart of the reference's per-trace span-tree stage
@@ -16,9 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * fixpoint) run by the shared [[FixPoint]] driver, NOT a recursive
   * UDF or a driver-side walk:
   *
-  *  - iteration k joins the (persisted) edge table against the depth-k
-  *    frontier on (tree, parent) — a plain equi-join, shuffle keyed by
-  *    the partition column, map-side prunable;
+  *  - iteration k joins the edge table, checkpointed once and
+  *    hash-partitioned on (tree, parent), against the depth-k frontier
+  *    on (tree, parent) — a plain equi-join that moves only the
+  *    frontier (a broadcast while it is small);
   *  - the number of rounds equals the tree HEIGHT (log-ish for
   *    balanced trees), not the node count — at 10^12 edges the loop
   *    runs ~dozens of joins, each touching only frontier rows.
@@ -40,32 +40,30 @@ object TreeDepth {
     */
   def depths(edges: DataFrame, treeCol: String, nodeCol: String,
       parentCol: String, maxIter: Int = 64): DataFrame = {
-    val e = edges
-      .select(col(treeCol).as("_tree"), col(nodeCol).as("_node"),
-        col(parentCol).as("_parent"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // state: the roots and every non-empty frontier since, latest
-    // last — the answer is their union, so all of them stay kept. One
-    // action per round (count on the materialized checkpoint): at
-    // height-many rounds the per-round job count is the fixed cost
-    // that dominates shallow forests
-    def step(frontiers: Seq[DataFrame], next: DataFrame) = {
-      val n = next.count()
-      val kept = if (n > 0 || frontiers.isEmpty) frontiers :+ next else frontiers
-      FixPoint.Step(kept, n, kept)
-    }
-    try FixPoint.run("TreeDepth.depths", maxIter) { cp =>
-      step(Nil, cp(e.filter(col("_parent").isNull)
-        .select(col("_tree"), col("_node"), lit(0L).as("depth"))))
-    } { (cp, frontiers) =>
-      step(frontiers, cp(e
+    // state: the edges and the frontiers — the roots and every
+    // non-empty frontier since, latest last; the answer is their
+    // union, so all of them stay kept. The edges are checkpointed
+    // hash-partitioned on the join keys, so a round moves only its
+    // frontier: a broadcast of it, or a shuffle onto the edges'
+    // partitioning once it outgrows the broadcast size. The roots are
+    // a bare projection of the checkpointed edges, which therefore stay
+    // kept too; progress 1 = not yet expanded.
+    FixPoint.run("TreeDepth.depths", maxIter) { cp =>
+      val e = cp(edges.select(col(treeCol).as("_tree"), col(nodeCol).as("_node"),
+        col(parentCol).as("_parent")), Seq("_tree", "_parent"))
+      val roots = e.filter(col("_parent").isNull)
+        .select(col("_tree"), col("_node"), lit(0L).as("depth"))
+      FixPoint.Step((e, Seq(roots)), 1L, Seq(e))
+    } { case (cp, (e, frontiers)) =>
+      val (next, n) = cp.counted(e
         .join(frontiers.last.select(col("_tree"), col("_node").as("_p"), col("depth")),
           Seq("_tree"))
         .filter(col("_parent") === col("_p"))
-        .select(col("_tree"), col("_node"), (col("depth") + 1L).as("depth"))))
-    }.reduce(_ unionByName _)
+        .select(col("_tree"), col("_node"), (col("depth") + 1L).as("depth")), lit(true))
+      val kept = if (n > 0) frontiers :+ next else frontiers
+      FixPoint.Step((e, kept), n, e +: kept)
+    }._2.reduce(_ unionByName _)
       .select(col("_tree").as(treeCol), col("_node").as(nodeCol), col("depth"))
-    finally e.unpersist()
   }
 
   /** Per-node depth via POINTER DOUBLING (path halving): round k
@@ -91,17 +89,19 @@ object TreeDepth {
     // state: (frame, live count); frame rows are (tree, node, anc, d)
     // — anc = the current 2^k-ancestor (null once the walk reached a
     // root), d = edges walked so far. Only the latest frame is kept.
-    def live(s: DataFrame) = s.filter(col("_anc").isNotNull).count()
+    val live = col("_anc").isNotNull
     FixPoint.run("TreeDepth.depthsByDoubling", maxIter) { cp =>
-      val s = cp(edges.select(
+      val (s, n) = cp.counted(edges.select(
         col(treeCol).as("_tree"), col(nodeCol).as("_node"),
         col(parentCol).as("_anc"),
-        when(col(parentCol).isNull, 0L).otherwise(1L).as("_d")))
-      val n = live(s)
+        when(col(parentCol).isNull, 0L).otherwise(1L).as("_d")), live)
       FixPoint.Step((s, n), n, Seq(s))
     } { case (cp, (state, prev)) =>
-      val next = cp(doublingRound(state))
-      val n = live(next)
+      // coalesced: the union of done and advanced rows has the
+      // partitions of both, so without it a round whose join needs no
+      // shuffle (a broadcast) would double the partition count
+      val (next, n) = cp.counted(doublingRound(state).coalesce(
+        state.sparkSession.sessionState.conf.numShufflePartitions), live)
       // Convergence + cycle cut in one counter: in an ACYCLIC forest
       // every doubling round strictly shrinks the live (anc != null)
       // set — a node at depth ≥ 2^(k+1) has an ancestor at some depth

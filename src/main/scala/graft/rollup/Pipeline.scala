@@ -70,7 +70,8 @@ final class TranscriptStore(
   // ingest
   // ------------------------------------------------------------------
 
-  /** Append one batch of turns; returns the raw snapshot id.
+  /** Append one batch of turns; returns the raw snapshot id (the
+    * current one, unchanged, when the batch adds no row).
     *
     * @param dedupe idempotent re-ingest (the engine analog of the
     *   reference's FileConcat dedup, SURVEY.md domain table): rows
@@ -113,14 +114,18 @@ final class TranscriptStore(
     val partitioned = deduped
       .withColumn("ts_day", date_format(col("ts"), "yyyy-MM-dd"))
       .withColumn("conv_bucket", pmod(hash(col("conv_id")), lit(convBuckets)))
+    val before = raw.currentSnapshotId
     val sid = raw.append(partitioned, Map("op_detail" -> "ingest"))
-    // counting the committed rows from the footers spares a second run
-    // of the whole dedupe plan
-    val perDay = addedRowsPerDay(raw, sid)
-      .map(rows => perDayFrame(rows.map { case (day, n) => (day, n, 0L) }))
-      .getOrElse(partitioned.groupBy("ts_day").agg(
-        count(lit(1)).as("rows"), lit(0L).as("rollup_rows")))
-    appendLineage(Seq(lineage("ingest", "raw", sid, perDay)))
+    // a batch that adds no row (a deduped replay) commits nothing, so
+    // it has no lineage either. Counting the committed rows from the
+    // footers spares a second run of the whole dedupe plan
+    if (sid != before) {
+      val perDay = addedRowsPerDay(raw, sid)
+        .map(rows => perDayFrame(rows.map { case (day, n) => (day, n, 0L) }))
+        .getOrElse(partitioned.groupBy("ts_day").agg(
+          count(lit(1)).as("rows"), lit(0L).as("rollup_rows")))
+      appendLineage(Seq(lineage("ingest", "raw", sid, perDay)))
+    }
     sid
   }
 

@@ -289,9 +289,10 @@ final class ChronoTable private (
   /** Copy-on-write overwrite of the partitions matching `drop`:
     * removes their files from the live set and appends `replacement`
     * (may be empty) in ONE commit — the MERGE primitive of the tier
-    * tables, and every other commit's body. Returns the snapshot id. A
-    * crash at any point leaves the table readable at its previous
-    * snapshot.
+    * tables, and every other commit's body. Returns the snapshot id;
+    * one that would drop no file and add none commits nothing and
+    * returns the current id. A crash at any point leaves the table
+    * readable at its previous snapshot.
     */
   def overwritePartitions(
       drop: Map[String, String] => Boolean,
@@ -304,11 +305,17 @@ final class ChronoTable private (
       case Some(df) => stageBatch(df, sid)
       case None => Seq.empty
     }
-    val live = kept ++ added
-    writeSnapshot(Snapshot(sid, sid - 1, op, live,
-      summary ++ Map("dropped_files" -> dropped.size.toString,
-        "added_files" -> added.size.toString), readSchemaOf(live)))
-    sid
+    if (dropped.isEmpty && added.isEmpty) {
+      // an empty replacement leaves at most an empty staged directory
+      deleteRecursively(Paths.get(dataRoot, s"batch_id=$sid"))
+      sid - 1
+    } else {
+      val live = kept ++ added
+      writeSnapshot(Snapshot(sid, sid - 1, op, live,
+        summary ++ Map("dropped_files" -> dropped.size.toString,
+          "added_files" -> added.size.toString), readSchemaOf(live)))
+      sid
+    }
   }
 
   /** Retention: metadata-drop every partition whose values satisfy

@@ -57,19 +57,47 @@ class FixPointSpec extends SparkSuite {
     ("c", i.toLong, if (i == 0) None else Some(i - 1L)))
     .toDF("tree", "node", "parent")
 
+  test("a round that checkpoints a frame and counts its progress rows runs one job") {
+    val df = spark.range(0, 100, 1, 4).toDF("k")
+    var progress = -1L
+    val jobs = jobsOf {
+      FixPoint.run("one-job", maxIter = 1) { _ => FixPoint.Step((), 1L, Nil) } { (cp, _) =>
+        progress = cp.counted(df, col("k") % 2 === 0)._2
+        FixPoint.Step((), 0L, Nil)
+      }
+    }
+    assert(progress === 50L)
+    assert(jobs.size === 1, jobs)
+  }
+
+  test("a checkpoint carries its row count, and with keys its hash partitioning") {
+    FixPoint.run("keys", maxIter = 1) { cp =>
+      val c = cp(spark.range(0, 100).toDF("k").withColumn("v", col("k") % 3), Seq("v"))
+      assert(c.queryExecution.optimizedPlan.stats.rowCount === Some(BigInt(100)))
+      // an aggregate on the keys reuses the declared partitioning
+      val byV = c.groupBy("v").count()
+      assert(!byV.queryExecution.executedPlan.toString.contains("Exchange"),
+        byV.queryExecution.executedPlan)
+      assert(byV.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        Map(0L -> 34L, 1L -> 33L, 2L -> 33L))
+      FixPoint.Step((), 0L, Nil)
+    } { (_, s) => FixPoint.Step(s, 0L, Nil) }
+  }
+
   test("job budget per call: the driver adds no job to any of the three loops") {
-    // ceilings are the per-call job counts of the hand-rolled loops the
-    // driver replaced, measured on these fixtures in this suite's
-    // local[4] session: the driver itself runs no Spark action
+    // ceilings are the per-call job counts measured on these fixtures
+    // in this suite's local[4] session (before the counted checkpoint:
+    // BFS 123, doubling 29, components 56)
     val edges = chain(30)
     val bfs = jobsOf(TreeDepth.depths(edges, "tree", "node", "parent")).size
     val dbl = jobsOf(TreeDepth.depthsByDoubling(edges, "tree", "node", "parent")).size
     val ids = (0L to 64L).toDF("doc_id")
     val pairs = (0L until 64L).map(i => (i, i + 1)).toDF("id1", "id2")
     val cc = jobsOf(Components.connectedComponents(ids, "doc_id", pairs)).size
-    assert(bfs <= 123, s"BFS on a 30-deep chain ran $bfs jobs")
-    assert(dbl <= 29, s"doubling on a 30-deep chain ran $dbl jobs")
-    assert(cc <= 56, s"components on a 64-link chain ran $cc jobs")
+    info(s"jobs per call: BFS $bfs, doubling $dbl, components $cc")
+    assert(bfs <= 62, s"BFS on a 30-deep chain ran $bfs jobs")
+    assert(dbl <= 11, s"doubling on a 30-deep chain ran $dbl jobs")
+    assert(cc <= 30, s"components on a 64-link chain ran $cc jobs")
   }
 }
 
